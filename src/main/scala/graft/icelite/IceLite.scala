@@ -1091,10 +1091,20 @@ object IceLite {
         import scala.jdk.CollectionConverters._
         r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).flatMap { c =>
           val st = c.getStatistics
+          // INT32/INT64-backed decimals store UNSCALED integers; stats
+          // carry the scaled value the pruners compare literals against
+          val scale = c.getPrimitiveType.getLogicalTypeAnnotation match {
+            case d: org.apache.parquet.schema.LogicalTypeAnnotation
+                .DecimalLogicalTypeAnnotation => d.getScale
+            case _ => 0
+          }
+          def scaled(n: java.lang.Number): Double =
+            if (scale == 0) n.doubleValue()
+            else java.math.BigDecimal.valueOf(n.longValue(), scale).doubleValue()
           if (st == null || st.isEmpty || !st.hasNonNullValue) None
           else (st.genericGetMin, st.genericGetMax) match {
             case (lo: java.lang.Number, hi: java.lang.Number) =>
-              Some(c.getPath.toDotString -> (lo.doubleValue(), hi.doubleValue()))
+              Some(c.getPath.toDotString -> (scaled(lo), scaled(hi)))
             case _ => None
           }
         }.toSeq.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }

@@ -171,10 +171,11 @@ object IceLiteSource {
     } catch { case _: Exception => s }
 
   /** Driver-side budget for the position-delete planning fold: total
-    * sidecar bytes at or under this collect `(file_path, pos)` rows to
-    * the driver once per scan (cheap, exact, the common CDC-sized
-    * case); above it the positions NEVER visit the driver — planning
-    * runs one distinct `(sidecar, file_path)` census job (O(touched
+    * sidecar bytes at or under this fold `(file_path, pos)` rows on
+    * the driver once per scan with the parquet-mr decoder (cheap,
+    * exact, no Spark job — the common CDC-sized case); above it the
+    * positions NEVER visit the driver — planning runs one distinct
+    * `(sidecar, file_path)` census job, once per scan (O(touched
     * files) rows, the same class Iceberg's delete-file index holds)
     * and each split's reader loads its own files' positions with a
     * parquet `file_path` pushdown. A pre-compaction GDPR erasure
@@ -401,47 +402,77 @@ object IceLiteSource {
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSeq }
   }
 
+  /** The one position-sidecar decoder both regimes share: parquet-mr's
+    * Group reader over each sidecar's `(file_path, pos)` rows, all
+    * opened with ONE Hadoop `Configuration` — no Spark job, no schema
+    * inference. Each sidecar comes with the recorded `file_path`
+    * strings to push down (the executor side's per-split want list:
+    * row groups whose path stats or dictionaries exclude every wanted
+    * file are never decoded); an empty list reads the whole sidecar.
+    * `key` maps each decoded row's recorded path to the split key its
+    * position lands under (None = drop). Returns each key's sorted
+    * positions. */
+  private[sources] def decodePosDeletes(sidecars: Seq[(String, Seq[String])])(
+      key: String => Option[String]): Map[String, Array[Long]] = {
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+    import org.apache.parquet.io.api.Binary
+    val conf = new Configuration()
+    val acc = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+    sidecars.foreach { case (sc, wanted) =>
+      val filter =
+        if (wanted.isEmpty) FilterCompat.NOOP
+        else FilterCompat.get(wanted.map(r => FilterApi.eq(
+            FilterApi.binaryColumn("file_path"), Binary.fromString(r)))
+          .reduce[FilterPredicate](FilterApi.or(_, _)))
+      val reader = ParquetReader.builder(new GroupReadSupport(), new HPath(sc))
+        .withConf(conf).withFilter(filter).build()
+      try {
+        var g = reader.read()
+        while (g != null) {
+          key(g.getString("file_path", 0)).foreach { k =>
+            acc.getOrElseUpdate(k,
+              new scala.collection.mutable.ArrayBuilder.ofLong) +=
+              g.getLong("pos", 0)
+          }
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    acc.map { case (k, b) => k -> b.result().sorted }.toMap
+  }
+
+  /** Driver half AT-OR-UNDER the fold budget: every position of
+    * `sidecars` folded into per-file sorted tombstone indexes, keyed
+    * like the executor half (suffix-matched against `files`, the
+    * table-relative planned paths, and re-anchored at this reader's
+    * table dir). Each distinct recorded string is matched once. */
+  private[sources] def foldPosDeletes(ref: TableRef, sidecars: Seq[String],
+      files: Seq[String]): Map[String, Array[Long]] = {
+    val keyOf = scala.collection.mutable.HashMap.empty[String, Option[String]]
+    decodePosDeletes(sidecars.map(f => ref.dir.resolve(f).toString -> Nil)) { rec =>
+      posDriverFoldRows.incrementAndGet()
+      keyOf.getOrElseUpdate(rec, IceLite.matchStagedPath(files, rec)
+        .map(rel => normPath(ref.dir.resolve(rel).toString)))
+    }
+  }
+
   /** Executor half: load the positions for THIS split's files from
     * their matched sidecars — each distinct sidecar read ONCE per
-    * split with a `file_path` pushdown predicate (row groups whose
-    * path stats or dictionaries exclude every wanted file are never
-    * decoded). Runs inside the partition reader; the driver never
-    * sees a position. */
+    * split with a `file_path` pushdown of exactly the recorded
+    * strings this split wants. Runs inside the partition reader; the
+    * driver never sees a position. */
   private[sources] def loadPosDeletes(
       refs: Map[String, Seq[(String, String)]]): Map[String, Array[Long]] =
     if (refs.isEmpty) Map.empty
     else {
-      import org.apache.parquet.filter2.compat.FilterCompat
-      import org.apache.parquet.filter2.predicate.FilterApi
-      import org.apache.parquet.io.api.Binary
       val byRecorded: Map[String, String] = refs.toSeq.flatMap {
         case (k, rs) => rs.map { case (_, rec) => rec -> k } }.toMap
-      val bySidecar: Map[String, Seq[String]] = refs.values.flatten.toSeq
+      val bySidecar: Seq[(String, Seq[String])] = refs.values.flatten.toSeq
         .groupBy(_._1).map { case (sc, rs) => sc -> rs.map(_._2).distinct }
-      val acc = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
-      bySidecar.foreach { case (sc, recs) =>
-        val pred = recs.map(r => FilterApi.eq(
-            FilterApi.binaryColumn("file_path"), Binary.fromString(r)))
-          .reduce[org.apache.parquet.filter2.predicate.FilterPredicate](
-            FilterApi.or(_, _))
-        val reader = ParquetReader.builder(new GroupReadSupport(), new HPath(sc))
-          .withConf(new Configuration())
-          .withFilter(FilterCompat.get(pred))
-          .build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            byRecorded.get(g.getString("file_path", 0)).foreach { k =>
-              acc.getOrElseUpdate(k,
-                new scala.collection.mutable.ArrayBuilder.ofLong) +=
-                g.getLong("pos", 0)
-            }
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
-      acc.map { case (k, b) => k -> b.result().sorted }.toMap
+        .toSeq
+      decodePosDeletes(bySidecar)(byRecorded.get)
     }
 
   /** The `col=value` pairs a file's own path carries, URI-decoded
@@ -3149,6 +3180,44 @@ class IceLiteScan(ref: TableRef, required: StructType,
     }
   }
 
+  /** d50: MoR position sidecars, resolved ONCE per scan over
+    * [[staticPruned]] (the same pinning rule) — Spark calls
+    * planInputPartitions two or three times per query on one scan
+    * instance, and runtime filters only narrow the planned files, so
+    * a fold keyed over the static set serves every call.
+    * AT-OR-UNDER the driver-fold budget the sidecars fold to per-file
+    * tombstone indexes on the driver with the shared parquet-mr
+    * decoder: no Spark job, one Hadoop `Configuration` for the whole
+    * fold (cheap and exact for CDC-sized sidecars). ABOVE it
+    * positions never visit the driver: planning runs one distinct
+    * (sidecar, file_path) census (O(touched files) rows) and each
+    * split ships its files' matched sidecar paths + exact recorded
+    * strings for the reader to load with the same decoder and a
+    * parquet pushdown — the pre-compaction GDPR-erasure shape at
+    * 100 TB stays executor-sized. Keys in both regimes are matched by
+    * TABLE-RELATIVE suffix (matchStagedPath) and re-anchored at THIS
+    * reader's table dir: the sidecar records the WRITER's absolute
+    * path, and a REST attachment reads the same files under its spool
+    * root — an absolute-path compare would silently drop every
+    * tombstone there and deleted rows would resurface (found by
+    * RestModelFuzzSpec seed 7 on its first run). */
+  private lazy val posExecutorSide: Boolean =
+    deleteFiles.nonEmpty && deleteFiles.map { f =>
+      scala.util.Try(java.nio.file.Files.size(ref.dir.resolve(f)))
+        .getOrElse(0L)
+    }.sum > IceLiteSource.posFoldBytes
+
+  private lazy val tombstonesByFile: Map[String, Array[Long]] =
+    if (deleteFiles.isEmpty || posExecutorSide) Map.empty
+    else IceLiteSource.foldPosDeletes(ref, deleteFiles, staticPruned)
+
+  private lazy val posRefsByFile: Map[String, Seq[(String, String)]] =
+    if (!posExecutorSide) Map.empty
+    else {
+      IceLiteSource.posExecutorPlans.incrementAndGet()
+      IceLiteSource.posDeleteRefsByFile(ref, deleteFiles, staticPruned)
+    }
+
   /** d53: report POST-PRUNING statistics to the planner (Iceberg's
     * SparkScan.estimateStatistics role). Without this a DSv2 relation
     * falls back to `spark.sql.defaultSizeInBytes` (effectively ∞), so
@@ -3351,45 +3420,6 @@ class IceLiteScan(ref: TableRef, required: StructType,
     rowOp.foreach(_.scannedFiles = Some(files))
     IceLiteSource.lastPlannedFiles = files
     IceLiteSource.lastScanMetadataOnly = false
-    // d50: MoR position sidecars. AT-OR-UNDER the driver-fold budget
-    // they fold to per-file tombstone indexes once, driver-side
-    // (cheap and exact for CDC-sized sidecars). ABOVE it positions
-    // never visit the driver: planning runs one distinct
-    // (sidecar, file_path) census (O(touched files) rows) and each
-    // split ships its files' matched sidecar paths + exact recorded
-    // strings for the reader to load with a parquet pushdown — the
-    // pre-compaction GDPR-erasure shape at 100 TB stays executor-
-    // sized. Keys in both regimes are matched by TABLE-RELATIVE
-    // suffix (matchStagedPath) and re-anchored at THIS reader's
-    // table dir: the sidecar records the WRITER's absolute path, and
-    // a REST attachment reads the same files under its spool root —
-    // an absolute-path compare would silently drop every tombstone
-    // there and deleted rows would resurface (found by
-    // RestModelFuzzSpec seed 7 on its first run).
-    val sidecarBytes: Long = deleteFiles.map { f =>
-      scala.util.Try(java.nio.file.Files.size(ref.dir.resolve(f)))
-        .getOrElse(0L)
-    }.sum
-    val posExecutorSide =
-      deleteFiles.nonEmpty && sidecarBytes > IceLiteSource.posFoldBytes
-    val tombstonesByFile: Map[String, Array[Long]] =
-      if (deleteFiles.isEmpty || posExecutorSide) Map.empty
-      else {
-        val folded = org.apache.spark.sql.SparkSession.active.read
-          .parquet(deleteFiles.map(f => ref.dir.resolve(f).toString): _*)
-          .select("file_path", "pos").collect()
-        IceLiteSource.posDriverFoldRows.addAndGet(folded.length.toLong)
-        folded
-          .groupBy(r => IceLite.matchStagedPath(files, r.getString(0))
-            .map(rel => IceLiteSource.normPath(ref.dir.resolve(rel).toString)))
-          .collect { case (Some(f), rs) => f -> rs.map(_.getLong(1)).sorted }
-      }
-    val posRefsByFile: Map[String, Seq[(String, String)]] =
-      if (!posExecutorSide) Map.empty
-      else {
-        IceLiteSource.posExecutorPlans.incrementAndGet()
-        IceLiteSource.posDeleteRefsByFile(ref, deleteFiles, files)
-      }
     // d73: EQUALITY-delete sidecars fold at planning into ONE
     // broadcast key index (O(delete keys) — CDC-batch-sized by the
     // write path's construction) shared by every split, plus a
@@ -4013,14 +4043,7 @@ class IceLiteCdcMicroBatchStream(ref: TableRef,
           // suffix-matched and re-anchored like the batch scan's
           // tombstone index: the sidecar stores the WRITER's absolute
           // path, this reader may sit under a spool root
-          val folded = org.apache.spark.sql.SparkSession.active.read
-            .parquet(newSidecars.map(f => ref.dir.resolve(f).toString): _*)
-            .select("file_path", "pos").collect()
-          IceLiteSource.posDriverFoldRows.addAndGet(folded.length.toLong)
-          val byFile = folded
-            .groupBy(r => IceLite.matchStagedPath(prev.files, r.getString(0))
-              .map(rel => IceLiteSource.normPath(ref.dir.resolve(rel).toString)))
-            .collect { case (Some(f), rs) => f -> rs.map(_.getLong(1)).sorted }
+          val byFile = IceLiteSource.foldPosDeletes(ref, newSidecars, prev.files)
           prev.files.flatMap { f =>
             val abs = ref.dir.resolve(f).toString
             byFile.get(IceLiteSource.normPath(abs)).map(pos =>
@@ -4510,7 +4533,7 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
             case BooleanType => row.update(i, cur.getBoolean(name, 0))
             case StringType =>
               row.update(i, UTF8String.fromString(cur.getString(name, 0)))
-            case TimestampType => // parquet INT64 micros
+            case TimestampType | TimestampNTZType => // parquet INT64 micros
               row.update(i, cur.getLong(name, 0))
             case FloatType => row.update(i, cur.getFloat(name, 0))
             case DateType => // parquet INT32 epoch days

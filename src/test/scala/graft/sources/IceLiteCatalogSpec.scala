@@ -865,4 +865,44 @@ class IceLiteCatalogSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("history"))
   }
+
+  test("SQL reads a TIMESTAMP_NTZ column while position deletes are live") {
+    val (cat, wh) = freshCatalog()
+    IceLite.createNamespace(wh, "src")
+    val ref = TableRef(wh, "src", "ntz")
+    val base = java.time.LocalDateTime.parse("2024-03-01T10:15:30.123456")
+    IceLite.createOrReplace(ref,
+      (0L until 60L).map(k => (k, base.plusHours(k))).toDF("k", "ts"))
+    IceLite.deleteWhereMoR(spark, ref, "k % 4 = 1")
+    assert(IceLite.readManifest(ref).current.deleteFiles.nonEmpty)
+    val got = spark.sql(s"SELECT k, ts FROM $cat.src.ntz")
+      .as[(Long, java.time.LocalDateTime)].collect().sortBy(_._1).toSeq
+    val expect = IceLite.read(spark, ref)
+      .as[(Long, java.time.LocalDateTime)].collect().sortBy(_._1).toSeq
+    assert(expect.map(_._1) == (0L until 60L).filterNot(_ % 4 == 1))
+    assert(got == expect)
+    val cut = java.time.LocalDateTime.parse("2024-03-01T20:00:00")
+    assert(spark.sql(s"SELECT count(*) FROM $cat.src.ntz WHERE ts < " +
+      "TIMESTAMP_NTZ '2024-03-01 20:00:00'").head.getLong(0) ==
+      expect.count(_._2.isBefore(cut)).toLong)
+  }
+
+  test("add_files of a DECIMAL(12,2) file records scaled stats that prune " +
+    "exactly through SQL and readPruned") {
+    val (cat, wh) = freshCatalog()
+    IceLite.createNamespace(wh, "src")
+    val ref = TableRef(wh, "src", "priced")
+    val ext = graft.GraftTmp.dir("addfiles_decimal")
+    Seq("100.00", "150.00").toDF("price")
+      .selectExpr("CAST(price AS DECIMAL(12,2)) AS price")
+      .coalesce(1).write.mode("overwrite").parquet(ext.toString)
+    val sources = IceLite.listDir(java.nio.file.Files.list(ext))(_
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+    val snap = IceLite.addFiles(ref, sources)
+    assert(snap.fileStats.values.flatten.toSeq ==
+      Seq(graft.icelite.ColStats("price", 100.0, 150.0)))
+    assert(spark.sql(s"SELECT count(*) FROM $cat.src.priced " +
+      "WHERE price < 200.00").head.getLong(0) == 2L)
+    assert(IceLite.readPruned(spark, ref, "price", 0, 200).count() == 2L)
+  }
 }

@@ -333,11 +333,66 @@ class PosDeleteScaleSpec extends AnyFunSuite {
     val n = spark.read.format("graft.sources.IceLiteSource")
       .load(ref.dir.toString).count()
     assert(n == 350L)
-    // planInputPartitions may run more than once per query (stats /
-    // exec re-plans) — pin the REGIME (folds happened, in whole
-    // 50-position sidecar units), not a call count
+    // planInputPartitions runs more than once per query (stats / exec
+    // re-plans), but the fold is memoized per scan: the 50-position
+    // sidecar is decoded exactly once
     val grown = IceLiteSource.posDriverFoldRows.get() - fold0
-    assert(grown > 0 && grown % 50L == 0,
-      s"a CDC-sized sidecar under the default budget folds on the driver ($grown)")
+    assert(grown == 50L,
+      s"a CDC-sized sidecar under the default budget folds once on the driver ($grown)")
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc); started.get() }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("the small-sidecar driver fold adds no Spark job to a MoR scan") {
+    val ref = mk()
+    IceLite.deleteWhereMoR(spark, ref, "k >= 100 AND k < 150")
+    // the filter keeps both counts scanning: a bare count() of the
+    // compacted table is answered from the manifest with fewer jobs
+    def count(): Long = spark.read.format("graft.sources.IceLiteSource")
+      .load(ref.dir.toString).filter($"v" >= 0.0).count()
+    var n = 0L
+    val morJobs = jobsDuring { n = count() }
+    assert(n == 350L)
+    IceLite.compact(spark, ref, targetFiles = 4)
+    val compactedJobs = jobsDuring { n = count() }
+    assert(n == 350L)
+    assert(morJobs <= compactedJobs,
+      s"MoR count() started $morJobs jobs, compacted count() $compactedJobs")
+  }
+
+  test("default budget: changelog stream folds small sidecars to the exact deletes") {
+    val ref = mk(rows = 100L, files = 2)
+    IceLite.deleteWhereMoR(spark, ref, "k < 10 OR k = 57")
+    val ck = graft.GraftTmp.dir("posdel_ck_default").toString
+    val fold0 = IceLiteSource.posDriverFoldRows.get()
+    val exec0 = IceLiteSource.posExecutorPlans.get()
+    val q = spark.readStream.format("graft.sources.IceLiteSource")
+      .option("changelog", "true").load(ref.dir.toString)
+      .writeStream.format("memory").queryName("posdel_cdc_default")
+      .outputMode("append")
+      .option("checkpointLocation", ck)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = spark.table("posdel_cdc_default")
+      .as[(Long, Double, String, Long)].collect().toSeq
+    assert(got.filter(_._3 == "delete").map(r => (r._1, r._2)).sorted ==
+      ((0L until 10L) :+ 57L).map(k => (k, k * 2.0)))
+    assert(got.count(_._3 == "insert") == 100)
+    assert(IceLiteSource.posDriverFoldRows.get() > fold0,
+      "under the default budget the changelog folds positions on the driver")
+    assert(IceLiteSource.posExecutorPlans.get() == exec0)
   }
 }
