@@ -249,6 +249,51 @@ final case class Snapshot(
     * overwrite / metadata-count path checks before trusting the
     * physical file set. */
   def morLive: Boolean = deleteFiles.nonEmpty || eqDeletes.nonEmpty
+
+  /** THE snapshot producer (Iceberg's `SnapshotProducer` role): the
+    * snapshot a commit builds on this one. A commit states only its
+    * delta — files removed and added (with their row counts and
+    * stats), the logical rows it removes (files' rows or rows its
+    * new sidecars kill, each commit counting its own way), sidecars
+    * added, its summary, and any layout field it changes on purpose.
+    * The layout (`partitionCols`, `partitionSpec`, `sortedBy`) and
+    * the live sidecars (`deleteFiles`, `eqDeletes`, `sidecarDead`)
+    * are inherited; fresh snapshots build on [[Snapshot.empty]].
+    * A delta that adds and removes no file hands back this
+    * snapshot's own `files`, `fileStats` and `fileRows` instances —
+    * the segment writer's identity reuse writes no segment for them.
+    * `parentId` stays None for commitCAS to stamp unless declared. */
+  def next(id: Long, operation: String,
+      removed: Set[String] = Set.empty, removedRows: Long = 0L,
+      added: Seq[String] = Nil, addedRows: Map[String, Long] = Map.empty,
+      addedStats: Map[String, Seq[ColStats]] = Map.empty,
+      addedDeletes: Seq[String] = Nil, addedEqDeletes: Seq[EqDelete] = Nil,
+      addedDead: Map[String, Map[String, Long]] = Map.empty,
+      summary: Map[String, String] = Map.empty,
+      partitionCols: Seq[String] = this.partitionCols,
+      partitionSpec: Seq[PartitionField] = this.partitionSpec,
+      sortedBy: Option[String] = this.sortedBy,
+      parentId: Option[Long] = None): Snapshot = {
+    val same = removed.isEmpty && added.isEmpty
+    copy(id = id, timestampMs = System.currentTimeMillis(),
+      operation = operation,
+      files = if (same) files else files.filterNot(removed) ++ added,
+      rowCount = rowCount - removedRows + addedRows.values.sum,
+      fileStats = if (same) fileStats else fileStats -- removed ++ addedStats,
+      fileRows = if (same) fileRows else fileRows -- removed ++ addedRows,
+      partitionCols = partitionCols, sortedBy = sortedBy,
+      summary = summary, partitionSpec = partitionSpec,
+      deleteFiles = deleteFiles ++ addedDeletes,
+      eqDeletes = eqDeletes ++ addedEqDeletes,
+      sidecarDead = sidecarDead ++ addedDead, parentId = parentId)
+  }
+}
+
+object Snapshot {
+  /** The base every fresh snapshot (create, replace, CTAS, clone,
+    * compaction) builds on: no files, no layout, no sidecars. Also
+    * the changelog's "before the first snapshot" sentinel. */
+  val empty: Snapshot = Snapshot(-1L, 0L, "empty", Nil, 0L)
 }
 
 /** d72: one equality-delete sidecar — a parquet file of key tuples
@@ -373,12 +418,24 @@ final case class Manifest(
     // id-only semantics for them).
     tableUuid: Option[String] = None) {
   def current: Snapshot = snapshots.find(_.id == currentSnapshotId).get
+  /** Snapshot ids are sequential from 1. */
+  def nextId: Long = snapshots.map(_.id).max + 1
+  /** This manifest with `snap` committed as its current snapshot. */
+  def advance(snap: Snapshot): Manifest =
+    copy(currentSnapshotId = snap.id, snapshots = snapshots :+ snap)
   /** The identity layout the NEXT write must use (d83). */
   def writeLayoutCols: Seq[String] =
     declaredPartitionCols.getOrElse(current.partitionCols)
   /** The transform spec the NEXT write must derive (d85). */
   def writeLayoutSpec: Seq[PartitionField] =
     declaredPartitionSpec.getOrElse(current.partitionSpec)
+}
+
+object Manifest {
+  def nextId(cur: Option[Manifest]): Long = cur.fold(1L)(_.nextId)
+  /** `cur` advanced to `snap`, or a new table's first manifest. */
+  def advance(cur: Option[Manifest], table: String, snap: Snapshot): Manifest =
+    cur.fold(Manifest(table, snap.id, Seq(snap)))(_.advance(snap))
 }
 
 final case class TableRef(warehouse: String, namespace: String, name: String) {
@@ -921,14 +978,11 @@ object IceLite {
       s"${ref.name} has a partition layout — compact through the " +
         "owning catalog (remote compaction restages flat/sorted only)")
     catch { case e: Throwable => unstageFiles(ref, added); throw e }
-    val id = m.snapshots.map(_.id).max + 1
-    val snap = Snapshot(id, System.currentTimeMillis(), "replace", added,
-      rowsByFile.values.sum, stats,
+    val snap = Snapshot.empty.next(m.nextId, "replace", added = added,
+      addedRows = rowsByFile, addedStats = stats,
       sortedBy = if (keepSorted) cur.sortedBy else None,
-      summary = Map("committed-via" -> "rest", "maintenance" -> "compact"),
-      fileRows = rowsByFile)
-    if (!claimVersion(ref, expectedVersion + 1,
-        m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap),
+      summary = Map("committed-via" -> "rest", "maintenance" -> "compact"))
+    if (!claimVersion(ref, expectedVersion + 1, m.advance(snap),
         added, Some(m))) raced()
     // parity with local compact(): the rewrite orphans any Bloom
     // sidecar — rebuild so point-lookup pruning survives (same
@@ -1160,14 +1214,8 @@ object IceLite {
         }
       val removedRows = removed.toSeq.map(f =>
         snap.fileRows.getOrElse(f, countRowsFromFooters(ref, Seq(f)))).sum
-      val id = base.snapshots.map(_.id).max + 1
-      val next = Snapshot(id, System.currentTimeMillis(), op,
-        snap.files.filterNot(removed) ++ added,
-        snap.rowCount - removedRows + rowsByFile.values.sum,
-        (snap.fileStats -- removed) ++ stats,
-        snap.partitionCols, snap.sortedBy,
-        fileRows = (snap.fileRows -- removed) ++ rowsByFile,
-        partitionSpec = snap.partitionSpec)
+      val next = snap.next(base.nextId, op, removed, removedRows,
+        added, rowsByFile, stats)
       // a row-level rewrite that empties the table pins the schema,
       // like rewriteWhere/compact (this face serves the REST replace
       // protocol too — REST fuzz seeds 1028/1046/1050 reached the
@@ -1180,8 +1228,7 @@ object IceLite {
       // staged files survive a lost CAS race (pass Nil): the loop
       // rebases and re-validates rather than recomputing the data
       if (claimVersion(ref, baseVersion + 1,
-          base.copy(currentSnapshotId = id, snapshots = base.snapshots :+ next,
-            declaredSchemaDdl = declared),
+          base.advance(next).copy(declaredSchemaDdl = declared),
           Nil, Some(base))) {
         BloomIndex.refreshAll(org.apache.spark.sql.SparkSession.active, ref)
         return next
@@ -1198,10 +1245,7 @@ object IceLite {
       truncate: Boolean, summary: Map[String, String] = Map.empty,
       keepSorted: Boolean = false): Snapshot = {
     val (rowsByFile, stats) = footerRowsAndStats(ref, files)
-    val rows = rowsByFile.values.sum
     commitCAS(ref) { cur =>
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      val now = System.currentTimeMillis()
       // d54: the writer met the table's range-distribution + sort
       // requirement, so the new files are range-clustered and the
       // sortedBy marker (layout-preserving rewrites, pruning claims)
@@ -1228,26 +1272,19 @@ object IceLite {
             "would drop the hidden-partition spec; stage through the " +
             "transformed write path")
       }
-      cur match {
-        case None =>
-          Manifest(ref.name, id, Seq(Snapshot(id, now, "create", files, rows,
-            stats, summary = summary, fileRows = rowsByFile)))
-        case Some(m) if truncate =>
-          m.copy(currentSnapshotId = id, snapshots = m.snapshots :+
-            Snapshot(id, now, "replace", files, rows, stats,
-              sortedBy = sortKept(m),
-              summary = summary, fileRows = rowsByFile))
-        case Some(m) =>
-          m.copy(currentSnapshotId = id, snapshots = m.snapshots :+
-            Snapshot(id, now, "append", m.current.files ++ files,
-              m.current.rowCount + rows, m.current.fileStats ++ stats,
-              sortedBy = sortKept(m),
-              summary = summary,
-              fileRows = m.current.fileRows ++ rowsByFile,
-              deleteFiles = m.current.deleteFiles,
-              eqDeletes = m.current.eqDeletes,
-              sidecarDead = m.current.sidecarDead))
+      val snap = cur match {
+        case Some(m) if !truncate =>
+          // lands the declared flat layout (d85: a spec DROPped to empty)
+          m.current.next(m.nextId, "append", added = files,
+            addedRows = rowsByFile, addedStats = stats, summary = summary,
+            partitionSpec = Nil, sortedBy = sortKept(m))
+        case _ =>
+          Snapshot.empty.next(Manifest.nextId(cur),
+            if (cur.isEmpty) "create" else "replace", added = files,
+            addedRows = rowsByFile, addedStats = stats, summary = summary,
+            sortedBy = cur.flatMap(sortKept))
       }
+      Manifest.advance(cur, ref.name, snap)
     }.current
   }
 
@@ -1264,8 +1301,7 @@ object IceLite {
     commitCAS(ref) { cur =>
       require(cur.isEmpty, s"${ref.name} already exists")
       Manifest(ref.name, 1L,
-        Seq(Snapshot(1L, System.currentTimeMillis(), "create", Nil, 0L,
-          Map.empty, partitionCols)),
+        Seq(Snapshot.empty.next(1L, "create", partitionCols = partitionCols)),
         declaredSchemaDdl = Some(schemaDdl))
     }.current
   }
@@ -1288,8 +1324,7 @@ object IceLite {
     commitCAS(ref) { cur =>
       require(cur.isEmpty, s"${ref.name} already exists")
       Manifest(ref.name, 1L,
-        Seq(Snapshot(1L, System.currentTimeMillis(), "create", Nil, 0L,
-          Map.empty, Nil, partitionSpec = spec)),
+        Seq(Snapshot.empty.next(1L, "create", partitionSpec = spec)),
         declaredSchemaDdl = Some(schemaDdl))
     }.current
   }
@@ -1322,18 +1357,12 @@ object IceLite {
             "evolution ledgers are live — the old ledgers cannot apply " +
             "to the new schema; recreate the table instead")
       }
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      val snap = Snapshot(id, System.currentTimeMillis(),
-        if (cur.isEmpty) "create" else "replace", files,
-        rowsByFile.values.sum, stats, partitionCols,
-        fileRows = rowsByFile, partitionSpec = partitionSpec)
+      val snap = Snapshot.empty.next(Manifest.nextId(cur),
+        if (cur.isEmpty) "create" else "replace", added = files,
+        addedRows = rowsByFile, addedStats = stats,
+        partitionCols = partitionCols, partitionSpec = partitionSpec)
       val ddl = if (files.isEmpty) Some(schemaDdl) else None
-      cur match {
-        case Some(m) => m.copy(currentSnapshotId = id,
-          snapshots = m.snapshots :+ snap, declaredSchemaDdl = ddl)
-        case None => Manifest(ref.name, id, Seq(snap),
-          declaredSchemaDdl = ddl)
-      }
+      Manifest.advance(cur, ref.name, snap).copy(declaredSchemaDdl = ddl)
     }.current
   }
 
@@ -1370,19 +1399,14 @@ object IceLite {
         val vals = partVals(f)
         eq.forall { case (c, vs) => vals.get(c).exists(vs.contains) }
       }
-      val keptSet = kept.toSet
-      val id = m.snapshots.map(_.id).max + 1
-      val next = Snapshot(id, System.currentTimeMillis(),
-        "delete-partitions", kept,
-        kept.map(snap.fileRows.getOrElse(_, 0L)).sum,
-        snap.fileStats.view.filterKeys(keptSet).toMap,
-        snap.partitionCols,
+      // the table keeps the recorded rows of its kept files (a
+      // missing fileRows entry counts 0)
+      m.advance(snap.next(m.nextId, "delete-partitions",
+        removed = snap.files.toSet -- kept,
+        removedRows = snap.rowCount - kept.map(snap.fileRows.getOrElse(_, 0L)).sum,
         summary = Map("deleted.partitions" -> eq.map {
           case (c, vs) => s"$c=${vs.toSeq.sorted.mkString("|")}"
-        }.toSeq.sorted.mkString(",")),
-        fileRows = snap.fileRows.view.filterKeys(keptSet).toMap,
-        partitionSpec = snap.partitionSpec)
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
+        }.toSeq.sorted.mkString(","))))
     }.current
   }
 
@@ -1461,24 +1485,15 @@ object IceLite {
           s"staged file $f does not carry the spec's derived dirs " +
             s"${spec.map(_.name).mkString("/")}")
       }
-      val survivors: Seq[String] = if (replace) Nil else snap.files
-      val survivorSet = survivors.toSet
-      val id = m.snapshots.map(_.id).max + 1
-      val next = Snapshot(id, System.currentTimeMillis(),
-        if (replace) "overwrite" else "append",
-        survivors ++ moved,
-        survivors.map(snap.fileRows.getOrElse(_, 0L)).sum +
-          rowsByFile.values.sum,
-        snap.fileStats.view.filterKeys(survivorSet).toMap ++ stats,
-        Nil, fileRows = snap.fileRows.view.filterKeys(survivorSet).toMap ++
-          rowsByFile,
-        partitionSpec = spec,
-        // appends carry live sidecars (they reference surviving
-        // files); a replace removes every file they point at
-        deleteFiles = if (replace) Nil else snap.deleteFiles,
-        eqDeletes = if (replace) Nil else snap.eqDeletes,
-        sidecarDead = if (replace) Map.empty else snap.sidecarDead)
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
+      // appends carry live sidecars (they reference surviving files);
+      // a replace removes every file they point at. Survivors keep
+      // their recorded rows (a missing fileRows entry counts 0).
+      val base = if (replace) Snapshot.empty else snap
+      m.advance(base.next(m.nextId, if (replace) "overwrite" else "append",
+        removedRows =
+          base.rowCount - base.files.map(base.fileRows.getOrElse(_, 0L)).sum,
+        added = moved, addedRows = rowsByFile, addedStats = stats,
+        partitionSpec = spec, sortedBy = None))
     }.current
   }
 
@@ -1564,24 +1579,16 @@ object IceLite {
           snap.files.filterNot(f =>
             touched.contains(snap.partitionCols.map(partVals(f).get)))
       }
-      val survivorSet = survivors.toSet
-      val id = m.snapshots.map(_.id).max + 1
-      val files = survivors ++ moved
-      val next = Snapshot(id, System.currentTimeMillis(),
-        if (mode == Append) "append" else "overwrite",
-        files,
-        survivors.map(snap.fileRows.getOrElse(_, 0L)).sum +
-          rowsByFile.values.sum,
-        snap.fileStats.view.filterKeys(survivorSet).toMap ++ stats,
-        writeCols, // d83: the landed layout is the declared one
+      // survivors keep their recorded rows (a missing fileRows entry
+      // counts 0); only appends can meet live sidecars, and they keep them
+      m.advance(snap.next(m.nextId, if (mode == Append) "append" else "overwrite",
+        removed = snap.files.toSet -- survivors,
+        removedRows =
+          snap.rowCount - survivors.map(snap.fileRows.getOrElse(_, 0L)).sum,
+        added = moved, addedRows = rowsByFile, addedStats = stats,
         summary = summary + ("mode" -> mode.toString),
-        fileRows = snap.fileRows.view.filterKeys(survivorSet).toMap ++
-          rowsByFile,
-        deleteFiles = if (mode == Append) snap.deleteFiles else Nil,
-        partitionSpec = snap.partitionSpec,
-        eqDeletes = if (mode == Append) snap.eqDeletes else Nil,
-        sidecarDead = if (mode == Append) snap.sidecarDead else Map.empty)
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
+        partitionCols = writeCols, // d83: the landed layout is the declared one
+        sortedBy = None))
     }.current
   }
 
@@ -1784,19 +1791,11 @@ object IceLite {
     Files.createDirectories(ref.dataDir)
     val files = stage(ref, df)
     val rowsByFile = fileRowCounts(ref, files)
-    val rows = rowsByFile.values.sum
     val stats = collectStats(df.sparkSession, ref, files, statsCols)
     commitCAS(ref) { cur =>
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      val op = if (cur.isDefined) "replace" else "create"
-      val snap = Snapshot(id, System.currentTimeMillis(), op, files, rows,
-        stats, fileRows = rowsByFile)
-      // copy from cur, never rebuild positionally — a rebuilt Manifest
-      // would silently drop fields like `branches` (bitten: WAP)
-      cur match {
-        case Some(m) => m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
-        case None    => Manifest(ref.name, id, Seq(snap))
-      }
+      Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
+        if (cur.isDefined) "replace" else "create", added = files,
+        addedRows = rowsByFile, addedStats = stats))
     }.current
   }
 
@@ -1820,23 +1819,20 @@ object IceLite {
         s"${ref.name} has a hidden-partition spec — use appendTransformed")
     val newFiles = stage(ref, df)
     val rowsByFile = fileRowCounts(ref, newFiles)
-    val rows = rowsByFile.values.sum
     val stats = collectStats(df.sparkSession, ref, newFiles, statsCols)
     commitCAS(ref) { cur =>
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      cur match {
+      val snap = cur match {
         case None =>
-          val snap = Snapshot(id, System.currentTimeMillis(), "create",
-            newFiles, rows, stats, summary = summary, fileRows = rowsByFile)
-          Manifest(ref.name, id, Seq(snap))
+          Snapshot.empty.next(1L, "create", added = newFiles,
+            addedRows = rowsByFile, addedStats = stats, summary = summary)
         case Some(m) =>
           require(m.current.partitionSpec.isEmpty,
             s"${ref.name} has a hidden-partition spec — use " +
               "appendTransformed (a flat append would strand the new " +
               "files outside the transform layout and drop the spec)")
-          val snap = Snapshot(id, System.currentTimeMillis(), "append",
-            m.current.files ++ newFiles, m.current.rowCount + rows,
-            m.current.fileStats ++ stats,
+          m.current.next(m.nextId, "append", added = newFiles,
+            addedRows = rowsByFile, addedStats = stats, summary = summary,
+            partitionCols = Nil, // the new files are flat
             // d54's rule on the API face: the sort marker survives an
             // append only when the writer range-clustered on the
             // TABLE's own sort ORDER (appendSorted passes it); any
@@ -1844,14 +1840,9 @@ object IceLite {
             // "a desc, b" and "a DESC,b" are the same order.
             sortedBy = m.current.sortedBy.filter(mk =>
               keepSortedOn.exists(k =>
-                SortKey.canon(k) == SortKey.canon(mk))),
-            summary = summary,
-            fileRows = m.current.fileRows ++ rowsByFile,
-            deleteFiles = m.current.deleteFiles, // live sidecars survive appends
-            eqDeletes = m.current.eqDeletes,
-            sidecarDead = m.current.sidecarDead)
-          m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
+                SortKey.canon(k) == SortKey.canon(mk))))
       }
+      Manifest.advance(cur, ref.name, snap)
     }.current
   }
 
@@ -1992,9 +1983,8 @@ object IceLite {
           val files = stage(ref, upserts)
           val rowsByFile = fileRowCounts(ref, files)
           val stats = collectStats(spark, ref, files, statsCols)
-          val snap = Snapshot(1L, System.currentTimeMillis(), "create",
-            files, rowsByFile.values.sum, stats, summary = summary,
-            fileRows = rowsByFile)
+          val snap = Snapshot.empty.next(1L, "create", added = files,
+            addedRows = rowsByFile, addedStats = stats, summary = summary)
           if (tryCommit(1L, Manifest(ref.name, 1L, Seq(snap)), files, None))
             return snap
         case Some((baseVersion, basePath)) =>
@@ -2025,13 +2015,12 @@ object IceLite {
               .map(currentName(base.renamedCols, _)).distinct
           val rowsByFile = fileRowCounts(ref, files)
           val stats = collectStats(spark, ref, files, keepStatsCols)
-          val id = base.snapshots.map(_.id).max + 1
-          val snap = Snapshot(id, System.currentTimeMillis(), "replace",
-            files, rowsByFile.values.sum, stats, cur.partitionCols,
-            cur.sortedBy, summary = summary, fileRows = rowsByFile,
-            partitionSpec = cur.partitionSpec) // met: restageWithLayout re-derived it
-          if (tryCommit(baseVersion + 1,
-              base.copy(currentSnapshotId = id, snapshots = base.snapshots :+ snap),
+          // restageWithLayout met the layout: the merged table keeps it
+          val snap = Snapshot.empty.next(base.nextId, "replace",
+            added = files, addedRows = rowsByFile, addedStats = stats,
+            summary = summary, partitionCols = cur.partitionCols,
+            partitionSpec = cur.partitionSpec, sortedBy = cur.sortedBy)
+          if (tryCommit(baseVersion + 1, base.advance(snap),
               files, Some(base))) {
             // MERGE rewrites the table → refresh any Bloom sidecar
             // (no-op without one), same as compact()
@@ -2163,18 +2152,9 @@ object IceLite {
             s"${ref.name}: the snapshot this MoR delete was computed " +
               "against changed concurrently (rewrite or sidecar) — re-run")
         }
-        val id = m.snapshots.map(_.id).max + 1
-        val next = Snapshot(id, System.currentTimeMillis(), "delete-mor",
-          head.files, head.rowCount - deleted, head.fileStats,
-          head.partitionCols, head.sortedBy,
-          fileRows = head.fileRows,
-          // transform tables take MoR ops (partitionCols stays empty
-          // on hidden layouts) — dropping the spec here silently ended
-          // transform pruning (TransformModelFuzzSpec seed 5)
-          partitionSpec = head.partitionSpec,
-          deleteFiles = head.deleteFiles ++ sidecars,
-          sidecarDead = head.sidecarDead ++ deadCensus.getOrElse(Map.empty))
-        m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
+        m.advance(head.next(m.nextId, "delete-mor", removedRows = deleted,
+          addedDeletes = sidecars,
+          addedDead = deadCensus.getOrElse(Map.empty)))
       }
       return committed.current
     }
@@ -2251,20 +2231,13 @@ object IceLite {
               s"${ref.name}: the snapshot this equality delete was " +
                 "computed against changed concurrently — re-run")
           }
-          val id = m.snapshots.map(_.id).max + 1
-          val next = Snapshot(id, System.currentTimeMillis(), "delete-eq",
-            head.files, head.rowCount - matched, head.fileStats,
-            head.partitionCols, head.sortedBy,
-            fileRows = head.fileRows,
-            partitionSpec = head.partitionSpec, // hidden layouts take MoR ops
-            deleteFiles = head.deleteFiles,
-            eqDeletes = head.eqDeletes ++
-              sidecars.map(EqDelete(_, keyCols, id)),
-            sidecarDead = head.sidecarDead ++ matchedByFile.map(mf =>
+          val id = m.nextId
+          m.advance(head.next(id, "delete-eq", removedRows = matched,
+            addedEqDeletes = sidecars.map(EqDelete(_, keyCols, id)),
+            addedDead = matchedByFile.map(mf =>
               Map(sidecars.head -> mf) ++
                 sidecars.tail.map(_ -> Map.empty[String, Long]))
-              .getOrElse(Map.empty))
-          m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
+              .getOrElse(Map.empty)))
         }
         return committed.current
       } catch { case e: java.util.ConcurrentModificationException =>
@@ -2354,22 +2327,14 @@ object IceLite {
             s"${ref.name}: the snapshot this upsert was computed against " +
               "changed concurrently — re-run")
         }
-        val id = m.snapshots.map(_.id).max + 1
-        val next = Snapshot(id, System.currentTimeMillis(), "upsert-eq",
-          head.files ++ dataFiles,
-          head.rowCount - matched + newRowsByFile.values.sum,
-          head.fileStats ++ newStats,
-          head.partitionCols, head.sortedBy,
-          fileRows = head.fileRows ++ newRowsByFile,
-          partitionSpec = head.partitionSpec, // hidden layouts take MoR ops
-          deleteFiles = head.deleteFiles,
-          eqDeletes = head.eqDeletes ++
-            sidecars.map(EqDelete(_, keyCols, id)),
-          sidecarDead = head.sidecarDead ++ (if (sidecars.isEmpty) Map.empty
+        val id = m.nextId
+        m.advance(head.next(id, "upsert-eq", removedRows = matched,
+          added = dataFiles, addedRows = newRowsByFile, addedStats = newStats,
+          addedEqDeletes = sidecars.map(EqDelete(_, keyCols, id)),
+          addedDead = if (sidecars.isEmpty) Map.empty
             else matchedByFile.map(mf => Map(sidecars.head -> mf) ++
               sidecars.tail.map(_ -> Map.empty[String, Long]))
               .getOrElse(Map.empty)))
-        m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
       }
       return committed.current
     }
@@ -2452,15 +2417,12 @@ object IceLite {
           s"${ref.name}: the snapshot this MoR update was computed " +
             "against changed concurrently (rewrite or sidecar) — re-run")
       }
-      val id = m.snapshots.map(_.id).max + 1
-      val next = Snapshot(id, System.currentTimeMillis(), "update-mor",
-        head.files ++ newFiles, head.rowCount, head.fileStats ++ stats,
-        head.partitionCols, head.sortedBy,
-        fileRows = head.fileRows ++ rowsByFile,
-        partitionSpec = head.partitionSpec, // hidden layouts take MoR ops
-        deleteFiles = head.deleteFiles ++ sidecars,
-        sidecarDead = head.sidecarDead ++ deadCensus.getOrElse(Map.empty))
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
+      // the copies replace the rows the sidecars kill: rowCount holds
+      m.advance(head.next(m.nextId, "update-mor",
+        removedRows = rowsByFile.values.sum,
+        added = newFiles, addedRows = rowsByFile, addedStats = stats,
+        addedDeletes = sidecars,
+        addedDead = deadCensus.getOrElse(Map.empty)))
     }.current
   }
 
@@ -2529,17 +2491,10 @@ object IceLite {
           s"${ref.name}: the snapshot this MoR $opName was computed " +
             "against changed concurrently (rewrite or sidecar) — re-run")
       }
-      val id = m.snapshots.map(_.id).max + 1
-      val next = Snapshot(id, System.currentTimeMillis(), opName,
-        head.files ++ newFiles,
-        head.rowCount - deleted + rowsByFile.values.sum,
-        head.fileStats ++ stats,
-        head.partitionCols, head.sortedBy,
-        fileRows = head.fileRows ++ rowsByFile,
-        partitionSpec = head.partitionSpec, // hidden layouts take MoR ops
-        deleteFiles = head.deleteFiles ++ sidecars,
-        sidecarDead = head.sidecarDead ++ deadCensus.getOrElse(Map.empty))
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ next)
+      m.advance(head.next(m.nextId, opName, removedRows = deleted,
+        added = newFiles, addedRows = rowsByFile, addedStats = stats,
+        addedDeletes = sidecars,
+        addedDead = deadCensus.getOrElse(Map.empty)))
     }.current
   }
 
@@ -2880,14 +2835,9 @@ object IceLite {
       val newRowsByFile = stagedRows -- emptyStage
       val affectedRows = countRowsFromFooters(ref, affected.toSeq)
       val stats = collectStats(spark, ref, newFiles, keepStatsCols)
-      val files = snap.files.filterNot(affected) ++ newFiles
-      val id = base.snapshots.map(_.id).max + 1
-      val next = Snapshot(id, System.currentTimeMillis(), op, files,
-        snap.rowCount - affectedRows + newRowsByFile.values.sum,
-        (snap.fileStats -- affected) ++ stats,
-        snap.partitionCols, snap.sortedBy,
-        fileRows = (snap.fileRows -- affected) ++ newRowsByFile,
-        partitionSpec = snap.partitionSpec) // met: restageWithLayout re-derived it
+      // restageWithLayout met the layout the snapshot carries forward
+      val next = snap.next(base.nextId, op, affected, affectedRows,
+        newFiles, newRowsByFile, stats)
       // delete-all: pin the schema before the file-bearing history
       // can expire (see compact's twin comment)
       val declared =
@@ -2895,8 +2845,7 @@ object IceLite {
           base.declaredSchemaDdl
         else Some(rewritten.schema.toDDL)
       if (claimVersion(ref, baseVersion + 1,
-          base.copy(currentSnapshotId = id, snapshots = base.snapshots :+ next,
-            declaredSchemaDdl = declared),
+          base.advance(next).copy(declaredSchemaDdl = declared),
           newFiles, Some(base))) {
         BloomIndex.refreshAll(spark, ref) // rewrite → refresh sidecars
         return next
@@ -2928,17 +2877,10 @@ object IceLite {
     val stats = collectStats(df.sparkSession, ref, files,
       (statsCols ++ SortKey.cols(Some(sortCol))).distinct)
     commitCAS(ref) { cur =>
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      val op = if (cur.isDefined) "replace" else "create"
-      val snap = Snapshot(id, System.currentTimeMillis(), op, files,
-        rowsByFile.values.sum, stats, Nil, Some(SortKey.canon(sortCol)),
-        fileRows = rowsByFile)
-      // copy from cur, never rebuild positionally — a rebuilt Manifest
-      // would silently drop fields like `branches` (bitten: WAP)
-      cur match {
-        case Some(m) => m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
-        case None    => Manifest(ref.name, id, Seq(snap))
-      }
+      Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
+        if (cur.isDefined) "replace" else "create", added = files,
+        addedRows = rowsByFile, addedStats = stats,
+        sortedBy = Some(SortKey.canon(sortCol))))
     }.current
   }
 
@@ -3061,20 +3003,17 @@ object IceLite {
         scala.util.Try(Files.deleteIfExists(ref.dir.resolve(f))))
       val rowsByFile = stagedRows -- emptyStage
       val stats = collectStats(spark, ref, kept, statsCols)
-      val id = base.snapshots.map(_.id).max + 1
-      val snap = Snapshot(id, System.currentTimeMillis(), "replace",
-        kept, rowsByFile.values.sum, stats,
+      val snap = Snapshot.empty.next(base.nextId, "replace", added = kept,
+        addedRows = rowsByFile, addedStats = stats,
         // d83/d85: the materialized layout is the declared one
-        landedCols,
+        partitionCols = landedCols, partitionSpec = landedSpec,
         // a flat→partitioned/transform materialization drops the
         // flat sort marker honestly (rule 25): the restage clusters
         // by value dirs, not the sort key. A flat restage EARNS the
         // declared order's marker (d89): every file was just
         // range-clustered on it
-        if (landedCols.nonEmpty || landedSpec.nonEmpty) None
-        else base.declaredSortedBy.orElse(cur.sortedBy),
-        fileRows = rowsByFile,
-        partitionSpec = landedSpec) // met: restaged through the spec
+        sortedBy = if (landedCols.nonEmpty || landedSpec.nonEmpty) None
+          else base.declaredSortedBy.orElse(cur.sortedBy))
       // a zero-file current snapshot with no declared DDL would lose
       // its schema the moment history expires or a clone strips it —
       // pin the logical schema in the manifest at emptying time
@@ -3084,8 +3023,7 @@ object IceLite {
           base.declaredSchemaDdl
         else Some(read(spark, ref).schema.toDDL)
       if (tryCommit(baseVersion + 1,
-          base.copy(currentSnapshotId = id, snapshots = base.snapshots :+ snap,
-            declaredSchemaDdl = declared), kept)) {
+          base.advance(snap).copy(declaredSchemaDdl = declared), kept)) {
         // rewrites orphan any Bloom sidecar (d17): its entries key the
         // replaced files, so lookups stop pruning until rebuilt.
         // No-op for tables without sidecars.
@@ -3274,16 +3212,10 @@ object IceLite {
     val rowsByFile = fileRowCounts(ref, files)
     val stats = collectStats(df.sparkSession, ref, files, statsCols)
     commitCAS(ref) { cur =>
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      val op = if (cur.isDefined) "replace" else "create"
-      val snap = Snapshot(id, System.currentTimeMillis(), op, files,
-        rowsByFile.values.sum, stats, partitionCols, fileRows = rowsByFile)
-      // copy from cur, never rebuild positionally — a rebuilt Manifest
-      // would silently drop fields like `branches` (bitten: WAP)
-      cur match {
-        case Some(m) => m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
-        case None    => Manifest(ref.name, id, Seq(snap))
-      }
+      Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
+        if (cur.isDefined) "replace" else "create", added = files,
+        addedRows = rowsByFile, addedStats = stats,
+        partitionCols = partitionCols))
     }.current
   }
 
@@ -3322,41 +3254,34 @@ object IceLite {
     Files.createDirectories(ref.dataDir)
     val newFiles = stagePartitioned(ref, df, partitionCols)
     val rowsByFile = fileRowCounts(ref, newFiles)
-    val rows = rowsByFile.values.sum
     val stats = collectStats(df.sparkSession, ref, newFiles, statsCols)
     commitCAS(ref) { cur =>
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      cur match {
+      val snap = cur match {
         case None =>
-          val snap = Snapshot(id, System.currentTimeMillis(), "create",
-            newFiles, rows, stats, partitionCols, fileRows = rowsByFile)
-          Manifest(ref.name, id, Seq(snap))
+          Snapshot.empty.next(1L, "create", added = newFiles,
+            addedRows = rowsByFile, addedStats = stats,
+            partitionCols = partitionCols)
         case Some(m) =>
           require(allowSpecChange || m.current.partitionCols == partitionCols,
             s"partition-spec mismatch: table is partitioned by " +
               s"${m.current.partitionCols}, append by $partitionCols " +
               "(use appendPartitionedEvolving to evolve the spec)")
           // the partitioned era carries no sidecars (same rule the
-          // SQL ADD PARTITION FIELD path enforces): evolving a spec
-          // UNDER live MoR sidecars would drop them here and silently
-          // resurface every deleted row (found by the round-9 fuzz
-          // analysis — the pre-fix Snapshot below carried neither
-          // deleteFiles nor eqDeletes)
+          // SQL ADD PARTITION FIELD path enforces): a spec evolved
+          // UNDER live MoR sidecars once lost them and silently
+          // resurfaced every deleted row (round-9 fuzz analysis)
           if (m.current.partitionCols != partitionCols)
             require(!m.current.morLive,
               s"${ref.name} has live MoR delete sidecars — compact() " +
                 "to materialize them before evolving the partition spec")
-          val snap = Snapshot(id, System.currentTimeMillis(), "append",
-            m.current.files ++ newFiles, m.current.rowCount + rows,
-            m.current.fileStats ++ stats, partitionCols,
-            fileRows = m.current.fileRows ++ rowsByFile,
-            // live sidecars survive same-spec appends (flat append's
-            // rule at its own commit)
-            deleteFiles = m.current.deleteFiles,
-            eqDeletes = m.current.eqDeletes,
-            sidecarDead = m.current.sidecarDead)
-          m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
+          // live sidecars survive same-spec appends (flat append's
+          // rule at its own commit); the sort marker never does
+          m.current.next(m.nextId, "append", added = newFiles,
+            addedRows = rowsByFile, addedStats = stats,
+            partitionCols = partitionCols, partitionSpec = Nil,
+            sortedBy = None)
       }
+      Manifest.advance(cur, ref.name, snap)
     }.current
   }
 
@@ -3710,15 +3635,9 @@ object IceLite {
     val rowsByFile = fileRowCounts(ref, files)
     val stats = collectStats(df.sparkSession, ref, files, statsCols)
     commitCAS(ref) { cur =>
-      val id = cur.map(_.snapshots.map(_.id).max + 1).getOrElse(1L)
-      val op = if (cur.isDefined) "replace" else "create"
-      val snap = Snapshot(id, System.currentTimeMillis(), op, files,
-        rowsByFile.values.sum, stats, fileRows = rowsByFile,
-        partitionSpec = spec)
-      cur match {
-        case Some(m) => m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
-        case None    => Manifest(ref.name, id, Seq(snap))
-      }
+      Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
+        if (cur.isDefined) "replace" else "create", added = files,
+        addedRows = rowsByFile, addedStats = stats, partitionSpec = spec))
     }.current
   }
 
@@ -3739,18 +3658,9 @@ object IceLite {
         throw new IllegalStateException(s"no manifest for ${ref.name}"))
       require(m.writeLayoutSpec == spec,
         s"partition spec changed concurrently on ${ref.name}")
-      val id = m.snapshots.map(_.id).max + 1
-      val snap = Snapshot(id, System.currentTimeMillis(), "append",
-        m.current.files ++ files, m.current.rowCount + rowsByFile.values.sum,
-        m.current.fileStats ++ stats,
-        fileRows = m.current.fileRows ++ rowsByFile, partitionSpec = spec,
-        // an append never invalidates live sidecars — carry them like
-        // the flat path does (dropping them here silently resurrected
-        // MoR-deleted rows on transform tables)
-        deleteFiles = m.current.deleteFiles,
-        eqDeletes = m.current.eqDeletes,
-        sidecarDead = m.current.sidecarDead)
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
+      m.advance(m.current.next(m.nextId, "append", added = files,
+        addedRows = rowsByFile, addedStats = stats,
+        partitionSpec = spec, sortedBy = None))
     }.current
   }
 
@@ -4590,12 +4500,9 @@ object IceLite {
           val base = m.copy(declaredSortedBy = None)
           if (m.current.sortedBy.isEmpty) base
           else {
-            val id = m.snapshots.map(_.id).max + 1
-            base.copy(currentSnapshotId = id,
-              snapshots = m.snapshots :+ m.current.copy(id = id,
-                timestampMs = System.currentTimeMillis(),
-                operation = "unorder", sortedBy = None,
-                parentId = Some(m.current.id)))
+            base.advance(m.current.next(m.nextId, "unorder",
+              summary = m.current.summary, sortedBy = None,
+              parentId = Some(m.current.id)))
           }
         case Some(enc) =>
           require(m.writeLayoutCols.isEmpty && m.writeLayoutSpec.isEmpty &&
@@ -4771,15 +4678,16 @@ object IceLite {
     Files.createDirectories(dst.dataDir)
     commitCAS(dst) { cur =>
       require(cur.isEmpty, s"clone target ${dst.name} already exists")
-      val snap = Snapshot(1L, System.currentTimeMillis(), "clone",
-        absFiles, srcSnap.rowCount,
-        absFiles.zip(srcSnap.files).flatMap { case (abs, rel) =>
+      val snap = Snapshot.empty.next(1L, "clone", added = absFiles,
+        addedRows = absFiles.zip(srcSnap.files).flatMap { case (abs, rel) =>
+          srcSnap.fileRows.get(rel).map(abs -> _) }.toMap,
+        addedStats = absFiles.zip(srcSnap.files).flatMap { case (abs, rel) =>
           srcSnap.fileStats.get(rel).map(abs -> _) }.toMap,
-        srcSnap.partitionCols, srcSnap.sortedBy,
+        partitionCols = srcSnap.partitionCols, sortedBy = srcSnap.sortedBy,
         summary = Map("clone.source" -> src.dir.toString,
-          "clone.sourceSnapshot" -> srcSnap.id.toString),
-        fileRows = absFiles.zip(srcSnap.files).flatMap { case (abs, rel) =>
-          srcSnap.fileRows.get(rel).map(abs -> _) }.toMap)
+          "clone.sourceSnapshot" -> srcSnap.id.toString))
+        // the source's own count: its fileRows may be partial
+        .copy(rowCount = srcSnap.rowCount)
       // the clone's snapshot 1 sees every column the source's current
       // snapshot saw, ALTER-added ones included
       Manifest(dst.name, 1L, Seq(snap), addedCols = srcManifest.addedCols
@@ -5088,13 +4996,10 @@ object IceLite {
       val target = m.snapshots.find(_.id == toSnapshotId).getOrElse(
         throw new IllegalArgumentException(
           s"snapshot $toSnapshotId not found (expired?)"))
-      val id = m.snapshots.map(_.id).max + 1
-      val snap = target.copy(id = id,
-        timestampMs = System.currentTimeMillis(), operation = "rollback",
+      m.advance(target.next(m.nextId, "rollback", summary = target.summary,
         // lineage continues from the RESTORED snapshot, not the undone
         // head: the rolled-back commits are off the current ancestry
-        parentId = Some(toSnapshotId))
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
+        parentId = Some(toSnapshotId)))
     }.current
 
   /** d62: METADATA retention — Iceberg's
@@ -5173,12 +5078,8 @@ object IceLite {
       val m = cur.getOrElse(
         throw new IllegalStateException(s"no manifest for ${ref.name}"))
       val base = m.current
-      val id = m.snapshots.map(_.id).max + 1
-      val snap = base.copy(id = id,
-        timestampMs = System.currentTimeMillis(), operation = "analyze",
-        summary = base.summary ++ ndv,
-        parentId = Some(base.id)) // copy would inherit base's OWN parent
-      m.copy(currentSnapshotId = id, snapshots = m.snapshots :+ snap)
+      m.advance(base.next(m.nextId, "analyze", summary = base.summary ++ ndv,
+        parentId = Some(base.id)))
     }.current
   }
 
@@ -5235,15 +5136,12 @@ object IceLite {
       // refuses to fast-forward if main has advanced past it
       val wapBase = branchHead.flatMap(_.summary.get("wap.base"))
         .getOrElse(m.current.id.toString)
-      val id = m.snapshots.map(_.id).max + 1
-      val snap = Snapshot(id, System.currentTimeMillis(), "stage-append",
-        base.files ++ files, base.rowCount + rowsByFile.values.sum,
-        base.fileStats ++ stats, base.partitionCols,
-        if (keepSorted) base.sortedBy else None,
-        summary = Map("wap.base" -> wapBase),
-        fileRows = base.fileRows ++ rowsByFile)
+      val snap = base.next(m.nextId, "stage-append", added = files,
+        addedRows = rowsByFile, addedStats = stats,
+        sortedBy = if (keepSorted) base.sortedBy else None,
+        summary = Map("wap.base" -> wapBase))
       m.copy(snapshots = m.snapshots :+ snap,
-        branches = m.branches + (branch -> id))
+        branches = m.branches + (branch -> snap.id))
     }
     man.snapshots.find(_.id == man.branches(branch)).get
   }
@@ -5328,22 +5226,14 @@ object IceLite {
         require(delta.forall(staged.fileRows.contains),
           s"branch '$branch' staged files lack row counts — cannot " +
             "carry an exact rowCount through cherry-pick")
-        val newId = m.snapshots.map(_.id).max + 1
-        val snap = Snapshot(newId, System.currentTimeMillis(), "cherrypick",
-          head.files ++ delta,
-          head.rowCount + delta.map(staged.fileRows).sum,
-          head.fileStats ++ staged.fileStats.view.filterKeys(deltaSet).toMap,
-          head.partitionCols,
-          if (staged.sortedBy.isDefined && staged.sortedBy == head.sortedBy)
-            head.sortedBy else None,
-          summary = Map("cherrypick.source" -> id.toString),
-          fileRows = head.fileRows ++
-            staged.fileRows.view.filterKeys(deltaSet).toMap,
-          deleteFiles = head.deleteFiles,
-          eqDeletes = head.eqDeletes,
-          sidecarDead = head.sidecarDead)
-        m.copy(currentSnapshotId = newId, snapshots = m.snapshots :+ snap,
-          branches = m.branches - branch)
+        m.advance(head.next(m.nextId, "cherrypick", added = delta,
+          addedRows = staged.fileRows.view.filterKeys(deltaSet).toMap,
+          addedStats = staged.fileStats.view.filterKeys(deltaSet).toMap,
+          sortedBy =
+            if (staged.sortedBy.isDefined && staged.sortedBy == head.sortedBy)
+              head.sortedBy else None,
+          summary = Map("cherrypick.source" -> id.toString)))
+          .copy(branches = m.branches - branch)
       }
     }.current
 

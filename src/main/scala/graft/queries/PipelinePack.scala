@@ -94,7 +94,8 @@ object PipelinePack extends Pack {
         // local sort of the payload first (sortBeforeRepartition,
         // SPARK-23207) so retried tasks reproduce their assignment;
         // hashing a dense unique key is deterministic by construction
-        // and skips that sort. Same 4 files, same re-read aggregate.
+        // and skips that sort. Up to 4 files (a hash partition that
+        // draws no key writes none), same re-read aggregate.
         Tables.load(s, dir, "lineitem").repartition(4, col("l_orderkey"))
           .write.mode("overwrite").parquet(out)
         val files = IceLite.listDir(Files.list(Paths.get(out)))(_

@@ -3997,10 +3997,7 @@ class IceLiteCdcMicroBatchStream(ref: TableRef,
     val startIdx = if (startId == -1L) -1 else idxOf(m, startId)
     val range = m.snapshots.slice(startIdx.max(0), endIdx + 1)
     val pairs: Seq[(Snapshot, Snapshot)] = {
-      val base =
-        if (startIdx == -1)
-          Snapshot(-1L, 0L, "empty", Nil, 0L) +: range
-        else range
+      val base = if (startIdx == -1) Snapshot.empty +: range else range
       base.sliding(2).collect { case Seq(a, b) => (a, b) }.toSeq
     }
     val bad = pairs.map(_._2.operation)

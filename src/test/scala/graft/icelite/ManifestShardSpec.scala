@@ -57,6 +57,31 @@ class ManifestShardSpec extends AnyFunSuite {
     assert(m.current.files.size == m.current.fileRows.size)
   }
 
+  test("commits that leave the file set unchanged write no segment") {
+    val ref = freshRef()
+    IceLite.createOrReplace(ref, (1L to 20L).map(k => (k, k * 1.0)).toDF("k", "v"),
+      statsCols = Seq("k"))
+    def segmentsWritten(commit: => Snapshot): Int = {
+      val before = segFiles(ref).size
+      commit
+      segFiles(ref).size - before
+    }
+    assert(segmentsWritten(IceLite.append(ref,
+      (21L to 30L).map(k => (k, k * 1.0)).toDF("k", "v"), statsCols = Seq("k"))) == 1)
+    // MoR deletes add a sidecar, analyze adds a summary, rollback
+    // restores an earlier file set: each reuses an existing chain
+    assert(segmentsWritten(IceLite.deleteWhereMoR(spark, ref, "k = 3")) == 0)
+    assert(segmentsWritten(IceLite.deleteWhereMoR(spark, ref, "k = 25")) == 0)
+    val beforeUpdate = IceLite.readManifest(ref).currentSnapshotId
+    assert(segmentsWritten(IceLite.analyze(spark, ref, Seq("k"))) == 0)
+    assert(segmentsWritten(IceLite.updateWhereMoR(spark, ref, "k = 7",
+      Map("v" -> "-1.0"))) == 1)
+    assert(segmentsWritten(IceLite.rollback(ref, beforeUpdate)) == 0)
+    assert(IceLite.read(spark, ref).count() == 28)
+    assert(segmentsWritten(IceLite.compact(spark, ref)) == 1)
+    assert(IceLite.read(spark, ref).count() == 28)
+  }
+
   test("pointer files carry no data-file paths (commit serialization is O(delta))") {
     val ref = freshRef()
     IceLite.createOrReplace(ref, (1L to 50L).map(k => (k, s"p$k")).toDF("k", "s"))
