@@ -55,31 +55,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     sweepStaleTmp()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // r16 (guide §6): IceLite reads pass EXPLICIT leaf-file paths
-      // from the manifest, yet Spark still launches a distributed
-      // "listing leaf files" job whenever >32 paths are passed
-      // (default parallelPartitionDiscovery.threshold) — pure
-      // overhead on a local fs where a stat is ~µs. 1024 keeps the
-      // listing on the driver for every fixture-scale table; on an
-      // object-store cluster, where driver-serial listing of huge
-      // tables is the slower side, set SPARK_GRAFT_LIST_THRESHOLD
-      // back down (the distributed listing resumes above it).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
-    // A/B hook: swap the streaming state store
-    // provider without touching any declared query, e.g.
-    // SPARK_GRAFT_STATESTORE=org.apache.spark.sql.execution.streaming
-    // .state.RocksDBStateStoreProvider. Unset = Spark's default.
-    sys.env.get("SPARK_GRAFT_STATESTORE").foreach(v =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", v))
-    val spark = builder.getOrCreate()
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("WARN")
     // r16 (verdict #2): a SCALING WITNESS the driver can read. At the
     // bench SF every fixture is one parquet file, so low-core/high-core

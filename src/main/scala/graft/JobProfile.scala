@@ -15,17 +15,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val ids = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // match the bench's listing posture so profiles reflect it
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("WARN")
 
     final case class Job(id: Int, desc: String, start: Long,

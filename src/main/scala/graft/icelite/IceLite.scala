@@ -31,7 +31,12 @@ import org.json4s.jackson.Serialization
   * metadata only.
   */
 /** Per-file numeric column range, the manifest-level pruning stat
-  * (Iceberg's min/max file-skipping role, SURVEY §4.2). */
+  * (Iceberg's min/max file-skipping role, SURVEY §4.2). Read from the
+  * data file's parquet footer. The unit is the parquet physical value,
+  * except that decimals are scaled: integers and floats as stored,
+  * decimals in their SQL value, DATE in epoch days, TIMESTAMP and
+  * TIMESTAMP_NTZ in epoch microseconds. Footers widen a zero bound
+  * (a min of 0.0 reads back as -0.0, a max of -0.0 as +0.0). */
 final case class ColStats(col: String, min: Double, max: Double)
 
 /** d56: a HIDDEN-partitioning field (Iceberg partition transforms).
@@ -900,8 +905,8 @@ object IceLite {
     * `outputTimestampType` is still the legacy INT96 — which the
     * connector's vectorized reader (and most non-Spark engines) will
     * not decode. Every engine write path runs through this, so an
-    * icelite data file never carries an INT96 column; the custom
-    * DSv2 writers already emit micros natively. */
+    * icelite data file never carries an INT96 column; the DSv2
+    * writers pin the same conf (`IceLiteDataWriter.writeConf`). */
   private[graft] def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.getOption(key)
@@ -991,21 +996,13 @@ object IceLite {
     snap
   }
 
-  /** Exact PER-FILE row counts from parquet footers, driver-side — no
-    * Spark job. This is how Iceberg itself records manifest row
-    * counts: the file metadata is authoritative, and for a freshly
-    * staged commit it replaces a full scan-and-count job per commit.
-    * Every commit path stores the map in `Snapshot.fileRows`, so the
-    * count survives as manifest metadata (grouped/global COUNT
-    * pushdown reads it instead of re-opening footers). */
   /** One footer open per file, PARALLEL on the driver: a commit of a
     * wide fanout write (hidden-partition INSERT: buckets × days dirs)
     * stages hundreds of files, and a sequential open-per-file loop at
     * ~10-20ms each dominates commit latency (bitten: d84's two
     * INSERTs paid ~480 sequential opens ≈ 12s). Footers are
     * metadata-sized, so a bounded thread pool makes this O(files /
-    * threads) — the driver-side analogue of collectStats' one-job
-    * rule. */
+    * threads). */
   private def mapFooters[A](ref: TableRef, files: Seq[String])(
       fn: (String, org.apache.parquet.hadoop.ParquetFileReader) => A): Seq[A] =
     if (files.isEmpty) Nil
@@ -1030,11 +1027,8 @@ object IceLite {
       }
     }
 
-  private def fileRowCounts(ref: TableRef, files: Seq[String]): Map[String, Long] =
-    mapFooters(ref, files)((f, r) => f -> r.getRecordCount).toMap
-
   private def countRowsFromFooters(ref: TableRef, files: Seq[String]): Long =
-    fileRowCounts(ref, files).values.sum
+    mapFooters(ref, files)((_, r) => r.getRecordCount).sum
 
   /** Resolve an input_file_name() URI back to its table-relative
     * staged path. Matches on the FULL table-relative path, not a
@@ -1086,64 +1080,28 @@ object IceLite {
       .toMap) ++ sidecars.tail.map(_ -> Map.empty[String, Long]))
   }
 
-  /** Collect per-file min/max for the requested numeric columns in ONE
-    * Spark job: scan all staged files together, group by
-    * input_file_name(). The result is metadata-sized (files × cols
-    * rows); with thousands of staged files this is one scan instead of
-    * thousands of job launches. */
-  private def collectStats(spark: SparkSession, ref: TableRef,
-      files: Seq[String], statsCols: Seq[String]): Map[String, Seq[ColStats]] =
-    if (statsCols.isEmpty || files.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions.{col, input_file_name, max => fmax, min => fmin}
-      val frame = spark.read.parquet(files.map(f => ref.dir.resolve(f).toString): _*)
-      // a requested column the staged files don't carry (e.g. a stats
-      // ledger keyed under a pre-rename stored name) records no stat
-      // — pruning then conservatively keeps, same as an all-null file
-      val present = {
-        val have = frame.columns.toSet
-        statsCols.filter(have)
-      }
-      if (present.isEmpty) return Map.empty
-      val aggs = present.flatMap(c =>
-        Seq(fmin(col(c)).cast("double"), fmax(col(c)).cast("double")))
-      val rows = frame
-        .groupBy(input_file_name().as("_file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-      rows.flatMap { row =>
-        matchStagedPath(files, row.getString(0))
-          .map { f =>
-            // empty files / all-null columns have null min/max: record no
-            // stat (the file is then conservatively kept by pruning)
-            f -> present.zipWithIndex.flatMap { case (c, i) =>
-              if (row.isNullAt(1 + 2 * i) || row.isNullAt(2 + 2 * i)) None
-              else Some(ColStats(c, row.getDouble(1 + 2 * i), row.getDouble(2 + 2 * i))) }
-          }
-      }.toMap
-    }
-
-  /** Per-file min/max for numeric columns read from the parquet
-    * FOOTERS, driver-side — no Spark job. This is how Iceberg derives
-    * manifest stats on write: the row-group statistics are
-    * authoritative for freshly written files. Used by the DSv2 write
-    * path (d26), whose files are produced by external writers, so a
-    * collectStats scan would be a second pass over just-written data.
-    * Columns without usable stats record nothing (pruning then keeps
-    * the file conservatively). */
-  private def footerStats(ref: TableRef, files: Seq[String]): Map[String, Seq[ColStats]] =
-    footerRowsAndStats(ref, files)._2
-
-  /** One footer open serving BOTH row counts and min/max stats —
-    * every commit path needs the pair, and two sweeps over the same
-    * footers doubled the driver-side open cost on wide fanout commits
-    * (the d84 class). */
-  private def footerRowsAndStats(ref: TableRef, files: Seq[String])
+  /** The one definition of per-file row counts and min/max stats:
+    * the parquet FOOTERS of the files a commit adds, opened once on
+    * the driver, with no Spark job. This is how Iceberg derives a
+    * `DataFile`'s metrics. Every commit needs the pair, and one open
+    * serves both (two sweeps doubled the open cost on wide fanout
+    * commits, the d84 class). Every commit path stores the row counts
+    * in `Snapshot.fileRows`, so grouped and global COUNT pushdown
+    * read them instead of re-opening footers. `statsCols` picks the
+    * columns whose stats are recorded: engine commits pass their
+    * `statsCols`, and staged commits record every column. A column
+    * without usable stats records nothing, so pruning keeps the file:
+    * BINARY and BOOLEAN stats, an all-null column, and a float column
+    * holding NaN (parquet-mr drops those bounds on read). Units are
+    * the [[ColStats]] units. */
+  private def footerRowsAndStats(ref: TableRef, files: Seq[String],
+      statsCols: String => Boolean = _ => true)
       : (Map[String, Long], Map[String, Seq[ColStats]]) = {
     val both = mapFooters(ref, files) { (f, r) =>
       val perCol: Map[String, Seq[(Double, Double)]] = {
         import scala.jdk.CollectionConverters._
-        r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).flatMap { c =>
+        r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .filter(c => statsCols(c.getPath.toDotString)).flatMap { c =>
           val st = c.getStatistics
           // INT32/INT64-backed decimals store UNSCALED integers; stats
           // carry the scaled value the pruners compare literals against
@@ -1295,14 +1253,16 @@ object IceLite {
     * (instead of failing schema-on-read). One CAS commit; creating a
     * table that exists refuses via the normal claim conflict. */
   def createEmptyPartitioned(ref: TableRef, schemaDdl: String,
-      partitionCols: Seq[String]): Snapshot = {
+      partitionCols: Seq[String],
+      properties: Map[String, String] = Map.empty): Snapshot = {
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
+    checkProperties(properties)
     Files.createDirectories(ref.dataDir)
     commitCAS(ref) { cur =>
       require(cur.isEmpty, s"${ref.name} already exists")
       Manifest(ref.name, 1L,
         Seq(Snapshot.empty.next(1L, "create", partitionCols = partitionCols)),
-        declaredSchemaDdl = Some(schemaDdl))
+        declaredSchemaDdl = Some(schemaDdl), properties = properties)
     }.current
   }
 
@@ -1311,8 +1271,10 @@ object IceLite {
     * create commit carrying the transform spec and the declared
     * schema; the first INSERT stages through the spec. */
   def createEmptyTransformed(ref: TableRef, schemaDdl: String,
-      spec: Seq[PartitionField]): Snapshot = {
+      spec: Seq[PartitionField],
+      properties: Map[String, String] = Map.empty): Snapshot = {
     require(spec.nonEmpty, "partition spec must be non-empty")
+    checkProperties(properties)
     val declared = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
     spec.foreach { f =>
       require(declared.fieldNames.contains(f.sourceCol),
@@ -1325,7 +1287,7 @@ object IceLite {
       require(cur.isEmpty, s"${ref.name} already exists")
       Manifest(ref.name, 1L,
         Seq(Snapshot.empty.next(1L, "create", partitionSpec = spec)),
-        declaredSchemaDdl = Some(schemaDdl))
+        declaredSchemaDdl = Some(schemaDdl), properties = properties)
     }.current
   }
 
@@ -1343,9 +1305,11 @@ object IceLite {
   private[graft] def replaceTableStaged(ref: TableRef, files: Seq[String],
       partitionCols: Seq[String], schemaDdl: String,
       mustNotExist: Boolean, mustExist: Boolean,
-      partitionSpec: Seq[PartitionField] = Nil): Snapshot = {
+      partitionSpec: Seq[PartitionField] = Nil,
+      properties: Map[String, String] = Map.empty): Snapshot = {
     require(partitionCols.isEmpty || partitionSpec.isEmpty,
       "a table has either an identity layout or a transform spec, not both")
+    checkProperties(properties)
     val (rowsByFile, stats) = footerRowsAndStats(ref, files)
     commitCAS(ref) { cur =>
       if (mustNotExist) require(cur.isEmpty, s"${ref.name} already exists")
@@ -1362,7 +1326,8 @@ object IceLite {
         addedRows = rowsByFile, addedStats = stats,
         partitionCols = partitionCols, partitionSpec = partitionSpec)
       val ddl = if (files.isEmpty) Some(schemaDdl) else None
-      Manifest.advance(cur, ref.name, snap).copy(declaredSchemaDdl = ddl)
+      val m = Manifest.advance(cur, ref.name, snap)
+      m.copy(declaredSchemaDdl = ddl, properties = m.properties ++ properties)
     }.current
   }
 
@@ -1485,13 +1450,10 @@ object IceLite {
           s"staged file $f does not carry the spec's derived dirs " +
             s"${spec.map(_.name).mkString("/")}")
       }
-      // appends carry live sidecars (they reference surviving files);
-      // a replace removes every file they point at. Survivors keep
-      // their recorded rows (a missing fileRows entry counts 0).
+      // appends carry live sidecars (they reference surviving files)
+      // and remove no rows; a replace starts from the empty snapshot
       val base = if (replace) Snapshot.empty else snap
       m.advance(base.next(m.nextId, if (replace) "overwrite" else "append",
-        removedRows =
-          base.rowCount - base.files.map(base.fileRows.getOrElse(_, 0L)).sum,
         added = moved, addedRows = rowsByFile, addedStats = stats,
         partitionSpec = spec, sortedBy = None))
     }.current
@@ -1579,12 +1541,13 @@ object IceLite {
           snap.files.filterNot(f =>
             touched.contains(snap.partitionCols.map(partVals(f).get)))
       }
-      // survivors keep their recorded rows (a missing fileRows entry
-      // counts 0); only appends can meet live sidecars, and they keep them
+      // only appends can meet live sidecars; they keep them and
+      // remove no rows. An overwrite keeps its survivors' recorded
+      // rows (a missing fileRows entry counts 0)
       m.advance(snap.next(m.nextId, if (mode == Append) "append" else "overwrite",
         removed = snap.files.toSet -- survivors,
-        removedRows =
-          snap.rowCount - survivors.map(snap.fileRows.getOrElse(_, 0L)).sum,
+        removedRows = if (mode == Append) 0L
+          else snap.rowCount - survivors.map(snap.fileRows.getOrElse(_, 0L)).sum,
         added = moved, addedRows = rowsByFile, addedStats = stats,
         summary = summary + ("mode" -> mode.toString),
         partitionCols = writeCols, // d83: the landed layout is the declared one
@@ -1790,8 +1753,7 @@ object IceLite {
       statsCols: Seq[String] = Nil): Snapshot = {
     Files.createDirectories(ref.dataDir)
     val files = stage(ref, df)
-    val rowsByFile = fileRowCounts(ref, files)
-    val stats = collectStats(df.sparkSession, ref, files, statsCols)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, files, statsCols.toSet)
     commitCAS(ref) { cur =>
       Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
         if (cur.isDefined) "replace" else "create", added = files,
@@ -1818,8 +1780,7 @@ object IceLite {
       require(readManifest(ref).current.partitionSpec.isEmpty,
         s"${ref.name} has a hidden-partition spec — use appendTransformed")
     val newFiles = stage(ref, df)
-    val rowsByFile = fileRowCounts(ref, newFiles)
-    val stats = collectStats(df.sparkSession, ref, newFiles, statsCols)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, newFiles, statsCols.toSet)
     commitCAS(ref) { cur =>
       val snap = cur match {
         case None =>
@@ -1981,8 +1942,7 @@ object IceLite {
           // v1 instead loops back into the normal merge path against
           // the now-existing table.
           val files = stage(ref, upserts)
-          val rowsByFile = fileRowCounts(ref, files)
-          val stats = collectStats(spark, ref, files, statsCols)
+          val (rowsByFile, stats) = footerRowsAndStats(ref, files, statsCols.toSet)
           val snap = Snapshot.empty.next(1L, "create", added = files,
             addedRows = rowsByFile, addedStats = stats, summary = summary)
           if (tryCommit(1L, Manifest(ref.name, 1L, Seq(snap)), files, None))
@@ -2010,11 +1970,9 @@ object IceLite {
           val files = restageWithLayout(ref,
             upserts.unionByName(survivors, allowMissingColumns = true),
             cur, cur.files.size)
-          val keepStatsCols =
-            (statsCols ++ cur.fileStats.values.flatten.map(_.col)).distinct
-              .map(currentName(base.renamedCols, _)).distinct
-          val rowsByFile = fileRowCounts(ref, files)
-          val stats = collectStats(spark, ref, files, keepStatsCols)
+          val keepStatsCols = (statsCols ++ cur.fileStats.values.flatten
+            .map(_.col)).toSet.map(currentName(base.renamedCols, _))
+          val (rowsByFile, stats) = footerRowsAndStats(ref, files, keepStatsCols)
           // restageWithLayout met the layout: the merged table keeps it
           val snap = Snapshot.empty.next(base.nextId, "replace",
             added = files, addedRows = rowsByFile, addedStats = stats,
@@ -2400,12 +2358,11 @@ object IceLite {
     // (transform dirs re-derived, sorted tables re-clustered) so the
     // MoR append keeps pruning tight instead of accreting flat files
     val newFiles = restageWithLayout(ref, rewritten, snap, 1)
-    val rowsByFile = fileRowCounts(ref, newFiles)
     // ledger stats key STORED names; the rewrite staged era-visible
     // ones — re-collect under the chain-resolved names
-    val keepStatsCols = snap.fileStats.values.flatten.map(_.col).toSeq
-      .distinct.map(currentName(base.renamedCols, _)).distinct
-    val stats = collectStats(spark, ref, newFiles, keepStatsCols)
+    val keepStatsCols = snap.fileStats.values.flatten.map(_.col).toSet
+      .map(currentName(base.renamedCols, _))
+    val (rowsByFile, stats) = footerRowsAndStats(ref, newFiles, keepStatsCols)
     commitCAS(ref) { cur =>
       val m = cur.getOrElse(throw new IllegalStateException("table vanished"))
       val head = m.current
@@ -2466,7 +2423,6 @@ object IceLite {
       throw new IllegalArgumentException(s"${ref.name} does not exist"))
     val base = decodeManifest(ref, basePath)
     val deleted = countRowsFromFooters(ref, sidecars)
-    val rowsByFile = fileRowCounts(ref, newFiles)
     // per-file dead census rides the commit so pruned scans keep
     // exact logical row stats (one grouped count, O(sidecar rows))
     val deadCensus =
@@ -2474,11 +2430,9 @@ object IceLite {
       else posSidecarDead(spark, ref, sidecars, scanned.files)
     // ledger stats key STORED names; the delta staged era-visible
     // ones — re-collect under the chain-resolved names
-    val keepStatsCols = scanned.fileStats.values.flatten.map(_.col).toSeq
-      .distinct.map(currentName(base.renamedCols, _)).distinct
-    val stats =
-      if (newFiles.isEmpty) Map.empty[String, Seq[ColStats]]
-      else collectStats(spark, ref, newFiles, keepStatsCols)
+    val keepStatsCols = scanned.fileStats.values.flatten.map(_.col).toSet
+      .map(currentName(base.renamedCols, _))
+    val (rowsByFile, stats) = footerRowsAndStats(ref, newFiles, keepStatsCols)
     commitCAS(ref) { cur =>
       val m = cur.getOrElse(throw new IllegalStateException("table vanished"))
       val head = m.current
@@ -2820,21 +2774,20 @@ object IceLite {
       // delete-all otherwise leaves junk files that survive forever
       // and make `files` metadata lie at scale). Found by the
       // empty-state sweep: delete-all must yield a ZERO-FILE snapshot.
-      val stagedRows = fileRowCounts(ref, staged)
+      // Keep pruning precise across the rewrite: re-collect every
+      // column the current snapshot tracks, plus any caller additions
+      // (ledger names chain-resolved: the restage stores era-visible
+      // names). An empty file carries no stats.
+      val keepStatsCols = (statsCols ++ snap.fileStats.values.flatten
+        .map(_.col)).toSet.map(currentName(base.renamedCols, _))
+      val (stagedRows, stats) =
+        footerRowsAndStats(ref, staged, keepStatsCols)
       val (newFiles, emptyStage) =
         staged.partition(f => stagedRows.getOrElse(f, 0L) > 0L)
       emptyStage.foreach(f =>
         scala.util.Try(Files.deleteIfExists(ref.dir.resolve(f))))
-      // keep pruning precise across the rewrite: re-collect every
-      // column the current snapshot tracks, plus any caller additions
-      // (ledger names chain-resolved: the restage stores era-visible
-      // names)
-      val keepStatsCols =
-        (statsCols ++ snap.fileStats.values.flatten.map(_.col)).distinct
-          .map(currentName(base.renamedCols, _)).distinct
       val newRowsByFile = stagedRows -- emptyStage
       val affectedRows = countRowsFromFooters(ref, affected.toSeq)
-      val stats = collectStats(spark, ref, newFiles, keepStatsCols)
       // restageWithLayout met the layout the snapshot carries forward
       val next = snap.next(base.nextId, op, affected, affectedRows,
         newFiles, newRowsByFile, stats)
@@ -2873,9 +2826,8 @@ object IceLite {
     val shaped =
       df.repartitionByRange(numFiles, cs: _*).sortWithinPartitions(cs: _*)
     val files = stage(ref, shaped)
-    val rowsByFile = fileRowCounts(ref, files)
-    val stats = collectStats(df.sparkSession, ref, files,
-      (statsCols ++ SortKey.cols(Some(sortCol))).distinct)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, files,
+      (statsCols ++ SortKey.cols(Some(sortCol))).toSet)
     commitCAS(ref) { cur =>
       Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
         if (cur.isDefined) "replace" else "create", added = files,
@@ -2943,8 +2895,8 @@ object IceLite {
         throw new IllegalStateException(s"no manifest for ${ref.name}"))
       val base = decodeManifest(ref, basePath)
       val cur = base.current
-      val statsCols = cur.fileStats.values.flatten.map(_.col).toSeq.distinct
-        .map(currentName(base.renamedCols, _)).distinct.sorted
+      val statsCols = cur.fileStats.values.flatten.map(_.col).toSet
+        .map(currentName(base.renamedCols, _))
       // d83/d85: the layout this compaction LANDS — the declared
       // write layout (identical to the current one when no evolution
       // is pending); compaction is the EVOLUTION MATERIALIZER for
@@ -2996,13 +2948,13 @@ object IceLite {
       // compacting a fully-tombstoned table must land ZERO files, not
       // one empty one (empty-state sweep) — the schema survives in
       // the manifest's declared DDL, recorded below
-      val stagedRows = fileRowCounts(ref, files)
+      val (stagedRows, stats) =
+        footerRowsAndStats(ref, files, statsCols)
       val (kept, emptyStage) =
         files.partition(f => stagedRows.getOrElse(f, 0L) > 0L)
       emptyStage.foreach(f =>
         scala.util.Try(Files.deleteIfExists(ref.dir.resolve(f))))
       val rowsByFile = stagedRows -- emptyStage
-      val stats = collectStats(spark, ref, kept, statsCols)
       val snap = Snapshot.empty.next(base.nextId, "replace", added = kept,
         addedRows = rowsByFile, addedStats = stats,
         // d83/d85: the materialized layout is the declared one
@@ -3209,8 +3161,7 @@ object IceLite {
       partitionCols: Seq[String], statsCols: Seq[String]): Snapshot = {
     Files.createDirectories(ref.dataDir)
     val files = stagePartitioned(ref, df, partitionCols)
-    val rowsByFile = fileRowCounts(ref, files)
-    val stats = collectStats(df.sparkSession, ref, files, statsCols)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, files, statsCols.toSet)
     commitCAS(ref) { cur =>
       Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
         if (cur.isDefined) "replace" else "create", added = files,
@@ -3253,8 +3204,7 @@ object IceLite {
       allowSpecChange: Boolean): Snapshot = {
     Files.createDirectories(ref.dataDir)
     val newFiles = stagePartitioned(ref, df, partitionCols)
-    val rowsByFile = fileRowCounts(ref, newFiles)
-    val stats = collectStats(df.sparkSession, ref, newFiles, statsCols)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, newFiles, statsCols.toSet)
     commitCAS(ref) { cur =>
       val snap = cur match {
         case None =>
@@ -3632,8 +3582,7 @@ object IceLite {
       spec: Seq[PartitionField], statsCols: Seq[String] = Nil): Snapshot = {
     Files.createDirectories(ref.dataDir)
     val files = stageTransformed(ref, df, spec)
-    val rowsByFile = fileRowCounts(ref, files)
-    val stats = collectStats(df.sparkSession, ref, files, statsCols)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, files, statsCols.toSet)
     commitCAS(ref) { cur =>
       Manifest.advance(cur, ref.name, Snapshot.empty.next(Manifest.nextId(cur),
         if (cur.isDefined) "replace" else "create", added = files,
@@ -3651,8 +3600,7 @@ object IceLite {
     val spec = readManifest(ref).writeLayoutSpec
     require(spec.nonEmpty, s"${ref.name} has no partition-transform spec")
     val files = stageTransformed(ref, df, spec)
-    val rowsByFile = fileRowCounts(ref, files)
-    val stats = collectStats(df.sparkSession, ref, files, statsCols)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, files, statsCols.toSet)
     commitCAS(ref) { cur =>
       val m = cur.getOrElse(
         throw new IllegalStateException(s"no manifest for ${ref.name}"))
@@ -4292,10 +4240,7 @@ object IceLite {
     * some later scan. */
   def alterSetProperties(ref: TableRef, props: Map[String, String]): Unit = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one pair")
-    props.get(SplitSizeProp).foreach { v =>
-      require(scala.util.Try(v.trim.toLong).toOption.exists(_ > 0),
-        s"$SplitSizeProp must be a positive byte count, got '$v'")
-    }
+    checkProperties(props)
     commitCAS(ref) { cur =>
       val m = cur.getOrElse(throw new IllegalArgumentException(
         s"${ref.name} does not exist"))
@@ -4303,6 +4248,14 @@ object IceLite {
     }
     ()
   }
+
+  /** The honored keys' validation, shared by SET TBLPROPERTIES and
+    * CREATE TABLE … TBLPROPERTIES. */
+  private def checkProperties(props: Map[String, String]): Unit =
+    props.get(SplitSizeProp).foreach { v =>
+      require(scala.util.Try(v.trim.toLong).toOption.exists(_ > 0),
+        s"$SplitSizeProp must be a positive byte count, got '$v'")
+    }
 
   /** d82: `ALTER TABLE … UNSET TBLPROPERTIES` (IF EXISTS semantics —
     * unsetting an absent key is a no-op, Spark's default). */
@@ -5093,9 +5046,8 @@ object IceLite {
     * on the normal schedule. */
   def stageBranchAppend(ref: TableRef, branch: String, df: DataFrame,
       statsCols: Seq[String] = Nil): Snapshot = {
-    val files = stage(ref, df)
-    val stats = collectStats(df.sparkSession, ref, files, statsCols)
-    commitFilesToBranch(ref, branch, files, stats, keepSorted = false)
+    commitFilesToBranch(ref, branch, stage(ref, df), statsCols.toSet,
+      keepSorted = false)
   }
 
   /** d60: the `spark.wap.branch` connector write path — commit files
@@ -5104,7 +5056,7 @@ object IceLite {
     * from the parquet footers at commit, like every connector write. */
   private[graft] def commitStagedToBranch(ref: TableRef, branch: String,
       files: Seq[String], keepSorted: Boolean): Snapshot =
-    commitFilesToBranch(ref, branch, files, footerStats(ref, files), keepSorted)
+    commitFilesToBranch(ref, branch, files, _ => true, keepSorted)
 
   /** Shared branch-commit body. A second stage onto a LIVE branch
     * chains on the BRANCH head (Iceberg wap.branch appends accumulate
@@ -5115,9 +5067,9 @@ object IceLite {
     * clustering (NOTES rule 25) — publish would otherwise advance
     * main onto a layout claim the staged files break. */
   private def commitFilesToBranch(ref: TableRef, branch: String,
-      files: Seq[String], stats: Map[String, Seq[ColStats]],
+      files: Seq[String], statsCols: String => Boolean,
       keepSorted: Boolean): Snapshot = {
-    val rowsByFile = fileRowCounts(ref, files)
+    val (rowsByFile, stats) = footerRowsAndStats(ref, files, statsCols)
     val man = commitCAS(ref) { cur =>
       val m = cur.getOrElse(
         throw new IllegalStateException(s"no manifest for ${ref.name}"))

@@ -187,13 +187,19 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
     val ref = refOf(ident)
     if (IceLite.tableExists(ref)) throw new TableAlreadyExistsException(ident)
     IceLite.createNamespace(warehouse, ident.namespace.head)
+    // TBLPROPERTIES land in the create commit; Spark's reserved keys
+    // (provider, location, owner, …) describe the statement, not the table
+    val props = properties.asScala.toMap -- Seq(TableCatalog.PROP_PROVIDER,
+      TableCatalog.PROP_LOCATION, TableCatalog.PROP_OWNER,
+      TableCatalog.PROP_COMMENT, TableCatalog.PROP_EXTERNAL,
+      TableCatalog.PROP_IS_MANAGED_LOCATION)
     if (partitions.isEmpty) {
       // an EMPTY flat table with its declared schema in the manifest
       // (one CAS create commit) — a pre-insert SELECT answers empty
       // and the REST face can spool it, same as d68's partitioned
       // DDL. CTAS never lands here (StagingTableCatalog owns it).
       IceLite.replaceTableStaged(ref, Nil, Nil, schema.toDDL,
-        mustNotExist = true, mustExist = false)
+        mustNotExist = true, mustExist = false, properties = props)
       new IceLiteTable(ref, schema)
     } else IceLiteCatalog.transformSpecOf(partitions) match {
       case Some(spec) =>
@@ -201,12 +207,12 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
         // days(ts), …)` — a hidden-partition table born in SQL. The
         // schema stays exactly as declared (source columns live in
         // the data pages; the derived dirs never enter the schema)
-        IceLite.createEmptyTransformed(ref, schema.toDDL, spec)
+        IceLite.createEmptyTransformed(ref, schema.toDDL, spec, props)
         new IceLiteTable(ref, schema)
       case None =>
         // d68: `CREATE TABLE … PARTITIONED BY (c, …)`
         val (ordered, cols) = partitionedShape(schema, partitions)
-        IceLite.createEmptyPartitioned(ref, ordered.toDDL, cols)
+        IceLite.createEmptyPartitioned(ref, ordered.toDDL, cols, props)
         new IceLiteTable(ref, ordered)
     }
   }

@@ -1337,11 +1337,12 @@ class IceLiteDeltaWriterFactory(dataStageDir: String, delStageDir: String,
     rowSchema: StructType, partCols: Seq[String],
     spec: Seq[graft.icelite.PartitionField], timeZoneId: String)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
+  private val conf = IceLiteDataWriter.writeConf()
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
     new IceLiteDeltaWriter(dataStageDir, delStageDir,
       f"part-$partitionId%05d-$taskId.parquet", rowSchema, partCols,
-      spec, timeZoneId)
+      spec, timeZoneId, conf)
 }
 
 /** Per-task delta writer: `delete(meta, id)` appends the row's
@@ -1353,7 +1354,8 @@ class IceLiteDeltaWriterFactory(dataStageDir: String, delStageDir: String,
   * file and vice versa. */
 class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
     fileName: String, rowSchema: StructType, partCols: Seq[String],
-    spec: Seq[graft.icelite.PartitionField], timeZoneId: String)
+    spec: Seq[graft.icelite.PartitionField], timeZoneId: String,
+    conf: Map[String, String])
   extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
 
   private var posWriter: IceLiteDataWriter = _
@@ -1363,7 +1365,8 @@ class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     if (posWriter == null)
       posWriter = new IceLiteDataWriter(delStageDir, fileName,
-        Array(("file_path", StringType), ("pos", LongType)))
+        new StructType().add("file_path", StringType).add("pos", LongType),
+        conf)
     // rowId projection order is rowId(): (_file string, _pos long)
     delRow.update(0, id.getUTF8String(0))
     delRow.update(1, id.getLong(1))
@@ -1375,13 +1378,11 @@ class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
       insertWriter =
         if (spec.nonEmpty)
           new IceLiteTransformedDataWriter(dataStageDir, fileName,
-            rowSchema, spec, timeZoneId)
+            rowSchema, spec, timeZoneId, conf)
         else if (partCols.nonEmpty)
           new IceLitePartitionedDataWriter(dataStageDir, fileName,
-            rowSchema, partCols)
-        else
-          new IceLiteDataWriter(dataStageDir, fileName,
-            rowSchema.fields.map(f => (f.name, f.dataType)))
+            rowSchema, partCols, conf)
+        else new IceLiteDataWriter(dataStageDir, fileName, rowSchema, conf)
     insertWriter.write(row)
   }
 
@@ -1541,8 +1542,7 @@ class IceLiteReplaceWrite(ref: TableRef, schema: StructType,
       new IceLitePartitionedWriterFactory(
         ref.dataDir.resolve(token).toString, schema, partCols)
     else
-      new IceLiteWriterFactory(ref.dataDir.resolve(token).toString,
-        schema.fields.map(f => (f.name, f.dataType)))
+      new IceLiteWriterFactory(ref.dataDir.resolve(token).toString, schema)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1812,8 +1812,7 @@ class IceLiteBatchWrite(ref: TableRef, schema: StructType, replace: Boolean,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    new IceLiteWriterFactory(ref.dataDir.resolve(token).toString,
-      schema.fields.map(f => (f.name, f.dataType)))
+    new IceLiteWriterFactory(ref.dataDir.resolve(token).toString, schema)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1857,10 +1856,12 @@ class IceLiteBatchWrite(ref: TableRef, schema: StructType, replace: Boolean,
   }
 }
 
-class IceLiteWriterFactory(dir: String, fields: Array[(String, DataType)])
+class IceLiteWriterFactory(dir: String, schema: StructType)
   extends DataWriterFactory {
+  private val conf = IceLiteDataWriter.writeConf()
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLiteDataWriter(dir, f"part-$partitionId%05d-$taskId.parquet", fields)
+    new IceLiteDataWriter(dir, f"part-$partitionId%05d-$taskId.parquet",
+      schema, conf)
 }
 
 /** d67: files staged by one partitioned-write task, paths relative to
@@ -1879,13 +1880,14 @@ case class IceLitePartitionedCommitMessage(files: Seq[String])
 class IceLitePartitionedWriterFactory(stageDir: String,
     schema: StructType, partitionCols: Seq[String])
   extends DataWriterFactory {
+  private val conf = IceLiteDataWriter.writeConf()
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new IceLitePartitionedDataWriter(stageDir,
-      f"part-$partitionId%05d-$taskId.parquet", schema, partitionCols)
+      f"part-$partitionId%05d-$taskId.parquet", schema, partitionCols, conf)
 }
 
 class IceLitePartitionedDataWriter(stageDir: String, fileName: String,
-    schema: StructType, partitionCols: Seq[String])
+    schema: StructType, partitionCols: Seq[String], conf: Map[String, String])
   extends DataWriter[InternalRow] {
   import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
@@ -1893,11 +1895,9 @@ class IceLitePartitionedDataWriter(stageDir: String, fileName: String,
     partitionCols.map(schema.fieldIndex).toArray
   private val dataIdx: Array[Int] = schema.fields.indices
     .filterNot(partIdx.contains(_)).toArray
-  private val dataFields: Array[(String, DataType)] =
-    dataIdx.map(i => (schema.fields(i).name, schema.fields(i).dataType))
+  private val dataSchema = StructType(dataIdx.map(schema.fields(_)))
   private val projected = new org.apache.spark.sql.catalyst
-    .ProjectingInternalRow(
-      StructType(dataIdx.map(schema.fields(_))), dataIdx.toIndexedSeq)
+    .ProjectingInternalRow(dataSchema, dataIdx.toIndexedSeq)
 
   private def dirOf(row: InternalRow): String =
     partitionCols.indices.map { j =>
@@ -1917,7 +1917,7 @@ class IceLitePartitionedDataWriter(stageDir: String, fileName: String,
     val w = open.getOrElseUpdate(dir, {
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(stageDir, dir))
-      new IceLiteDataWriter(s"$stageDir/$dir", fileName, dataFields)
+      new IceLiteDataWriter(s"$stageDir/$dir", fileName, dataSchema, conf)
     })
     projected.project(row)
     w.write(projected)
@@ -1980,9 +1980,10 @@ class IceLiteTransformedBatchWrite(ref: TableRef, schema: StructType,
 class IceLiteTransformedWriterFactory(stageDir: String,
     schema: StructType, spec: Seq[graft.icelite.PartitionField],
     timeZoneId: String) extends DataWriterFactory {
+  private val conf = IceLiteDataWriter.writeConf()
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new IceLiteTransformedDataWriter(stageDir,
-      f"part-$partitionId%05d-$taskId.parquet", schema, spec, timeZoneId)
+      f"part-$partitionId%05d-$taskId.parquet", schema, spec, timeZoneId, conf)
 }
 
 /** Per-task transform writer: evaluates the spec's derived values
@@ -1996,12 +1997,10 @@ class IceLiteTransformedWriterFactory(stageDir: String,
   * names live in the path. */
 class IceLiteTransformedDataWriter(stageDir: String, fileName: String,
     schema: StructType, spec: Seq[graft.icelite.PartitionField],
-    timeZoneId: String) extends DataWriter[InternalRow] {
+    timeZoneId: String, conf: Map[String, String])
+  extends DataWriter[InternalRow] {
   import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   import org.apache.spark.sql.catalyst.expressions._
-
-  private val allFields: Array[(String, DataType)] =
-    schema.fields.map(f => (f.name, f.dataType))
 
   private val outTypes: Array[DataType] = spec.map { f =>
     f.transform match {
@@ -2063,7 +2062,7 @@ class IceLiteTransformedDataWriter(stageDir: String, fileName: String,
     val w = open.getOrElseUpdate(dir, {
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(stageDir, dir))
-      new IceLiteDataWriter(s"$stageDir/$dir", fileName, allFields)
+      new IceLiteDataWriter(s"$stageDir/$dir", fileName, schema, conf)
     })
     w.write(row)
   }
@@ -2111,7 +2110,7 @@ class IceLiteStreamingWrite(ref: TableRef, schema: StructType)
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
     new IceLiteStreamingWriterFactory(ref.dataDir.resolve(token).toString,
-      schema.fields.map(f => (f.name, f.dataType)))
+      schema)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -2199,81 +2198,54 @@ class IceLitePartitionedStreamingWrite(ref: TableRef, schema: StructType,
 class IceLitePartitionedStreamingWriterFactory(stageDir: String,
     schema: StructType, partitionCols: Seq[String])
   extends StreamingDataWriterFactory {
+  private val conf = IceLiteDataWriter.writeConf()
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stageDir))
     new IceLitePartitionedDataWriter(stageDir,
-      f"part-e$epochId-$partitionId%05d-$taskId.parquet", schema, partitionCols)
+      f"part-e$epochId-$partitionId%05d-$taskId.parquet", schema,
+      partitionCols, conf)
   }
 }
 
-class IceLiteStreamingWriterFactory(dir: String,
-    fields: Array[(String, DataType)]) extends StreamingDataWriterFactory {
+class IceLiteStreamingWriterFactory(dir: String, schema: StructType)
+  extends StreamingDataWriterFactory {
+  private val conf = IceLiteDataWriter.writeConf()
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
     // executor-side dir ensure (same machine in local mode; an object
     // store at scale, where prefixes need no creation)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     new IceLiteDataWriter(dir,
-      f"part-e$epochId-$partitionId%05d-$taskId.parquet", fields)
+      f"part-e$epochId-$partitionId%05d-$taskId.parquet", schema, conf)
   }
 }
 
-/** Group-materializing parquet writer over the projected primitive
-  * types — the mirror of the read path's decoder. Empty partitions
-  * commit no file (their would-be part file is deleted), so small
-  * upstream fan-out never litters the table with 0-row files. */
-class IceLiteDataWriter(dir: String, name: String,
-    fields: Array[(String, DataType)]) extends DataWriter[InternalRow] {
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  private val msgType: org.apache.parquet.schema.MessageType = {
-    val b = Types.buildMessage()
-    fields.foreach { case (n, dt) =>
-      dt match {
-        case LongType    => b.optional(INT64).named(n)
-        case IntegerType => b.optional(INT32).named(n)
-        case DoubleType  => b.optional(DOUBLE).named(n)
-        case BooleanType => b.optional(BOOLEAN).named(n)
-        case StringType  =>
-          b.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(n)
-        case TimestampType => // micros, matching Spark's internal repr
-          b.optional(INT64).as(LogicalTypeAnnotation.timestampType(
-            true, LogicalTypeAnnotation.TimeUnit.MICROS)).named(n)
-        case other => throw new UnsupportedOperationException(
-          s"icelite sink writes primitive columns only, got $other for $n")
-      }
-    }
-    b.named("spark_schema")
-  }
-
+/** The connector's one parquet writer: Spark's own `ParquetWriteSupport`
+  * behind parquet-mr's `ParquetWriter.Builder` (the role Iceberg's
+  * `SparkParquetWriters` plays), so a SQL, DSv2 or streaming write
+  * lands the same parquet types and footer statistics as an engine
+  * `df.write.parquet`. `conf` holds the SQL confs the write support
+  * reads, captured on the driver ([[IceLiteDataWriter.writeConf]]).
+  * Codec and row-group size are parquet-mr's builder defaults. Empty
+  * partitions commit no file (their would-be part file is deleted),
+  * so small upstream fan-out never litters the table with 0-row files. */
+class IceLiteDataWriter(dir: String, name: String, schema: StructType,
+    conf: Map[String, String]) extends DataWriter[InternalRow] {
   private val file = new java.io.File(dir, name)
-  private val factory =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
-  private val writer =
-    org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new HPath(file.toString)).withType(msgType).build()
+  private val writer = {
+    val hadoopConf = new Configuration()
+    conf.foreach { case (k, v) => hadoopConf.set(k, v) }
+    org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+      .setSchema(schema, hadoopConf)
+    new IceLiteDataWriter.Builder(new HPath(file.toString))
+      .withConf(hadoopConf).build()
+  }
   private var rows = 0L
   private var closed = false
 
   override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < fields.length) {
-      val (n, dt) = fields(i)
-      if (!row.isNullAt(i)) dt match {
-        case LongType      => g.append(n, row.getLong(i))
-        case IntegerType   => g.append(n, row.getInt(i))
-        case DoubleType    => g.append(n, row.getDouble(i))
-        case BooleanType   => g.append(n, row.getBoolean(i))
-        case StringType    => g.append(n, row.getUTF8String(i).toString)
-        case TimestampType => g.append(n, row.getLong(i))
-        case other => throw new UnsupportedOperationException(s"$other")
-      }
-      i += 1
-    }
-    writer.write(g)
+    writer.write(row)
     rows += 1
   }
 
@@ -2286,6 +2258,32 @@ class IceLiteDataWriter(dir: String, name: String,
   }
   override def abort(): Unit = { closeOnce(); file.delete(); () }
   override def close(): Unit = closeOnce()
+}
+
+object IceLiteDataWriter {
+  private class Builder(path: HPath) extends org.apache.parquet.hadoop
+      .ParquetWriter.Builder[InternalRow, Builder](path) {
+    override def self(): Builder = this
+    override def getWriteSupport(conf: Configuration)
+        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport()
+  }
+
+  /** Driver side, at factory construction: the SQL confs
+    * `ParquetWriteSupport` reads, the way `ParquetFileFormat
+    * .prepareWrite` captures them. Timestamps are pinned to INT64
+    * micros, the rule `IceLite.withMicrosTimestamps` applies to every
+    * engine write. */
+  def writeConf(): Map[String, String] = {
+    import org.apache.spark.sql.internal.SQLConf
+    val c = SQLConf.get
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+        SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .map(e => e.key -> c.getConf(e).toString).toMap +
+      (SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key ->
+        SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+  }
 }
 
 /** The pushed-down shape of one aggregate a metadata-only scan can
@@ -2600,7 +2598,8 @@ class IceLiteScanBuilder(ref: TableRef, schema: StructType,
     * stored as doubles — exact) or, for GROUP BY keys, LONG/INT
     * whose stat values are all integral below 2^53 (the double
     * round-trips exactly). Any gap — missing stat, non-pure file,
-    * missing record count, other types — falls back to the normal
+    * missing record count, other types, a zero double bound whose
+    * sign the footer may have flipped — falls back to the normal
     * scan, so pushdown is never a correctness risk. Spark only
     * attempts aggregate pushdown when no post-scan filter remains,
     * and this source keeps every pushed filter residual — so a
@@ -2616,11 +2615,15 @@ class IceLiteScanBuilder(ref: TableRef, schema: StructType,
   private def typeOf(col: String): Option[DataType] =
     schema.fields.find(_.name == col).map(_.dataType)
 
-  private def statsCovered(col: String): Boolean =
+  /** MIN/MAX answerable from the `bound` side of every file's stats.
+    * A zero bound declines: footer stats widen 0.0 to -0.0 (min) and
+    * -0.0 to +0.0 (max), so a zero answer could carry the wrong sign. */
+  private def statsCovered(bound: ColStats => Double)(col: String): Boolean =
     typeOf(col).contains(DoubleType) &&
       currentSnap.files.nonEmpty &&
       currentSnap.files.forall(f =>
-        currentSnap.fileStats.get(f).exists(_.exists(_.col == col)))
+        currentSnap.fileStats.get(f).exists(_.exists(cs =>
+          cs.col == col && bound(cs) != 0.0)))
 
   /** A column every file is value-pure on: a PARTITION column (the
     * path carries one value per file by construction) or a
@@ -2647,17 +2650,20 @@ class IceLiteScanBuilder(ref: TableRef, schema: StructType,
       IceLiteSource.pathPartValues(f).get(col).exists(_ !=
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .DEFAULT_PARTITION_NAME))) || {
-    def pointStats = currentSnap.files.forall { f =>
+    // a zero point declines for doubles, whose footer bounds widen
+    // 0.0 to [-0.0, +0.0] (the statsCovered rule)
+    def pointStats(zeroOk: Boolean) = currentSnap.files.forall { f =>
       currentSnap.fileStats.get(f).exists(_.exists(cs =>
-        cs.col == col && cs.min == cs.max))
+        cs.col == col && cs.min == cs.max && (zeroOk || cs.min != 0.0)))
     }
     def integralPoints = currentSnap.files.forall { f =>
       currentSnap.fileStats.get(f).flatMap(_.find(_.col == col)).forall(cs =>
         cs.min == math.rint(cs.min) && math.abs(cs.min) <= (1L << 53).toDouble)
     }
     currentSnap.files.nonEmpty && (typeOf(col) match {
-      case Some(DoubleType) => pointStats
-      case Some(LongType) | Some(IntegerType) => pointStats && integralPoints
+      case Some(DoubleType) => pointStats(zeroOk = false)
+      case Some(LongType) | Some(IntegerType) =>
+        pointStats(zeroOk = true) && integralPoints
       case _ => false
     })
   }
@@ -2693,8 +2699,8 @@ class IceLiteScanBuilder(ref: TableRef, schema: StructType,
         case _: CountStar
           if (!grouped && partFilters.isEmpty) || fileRowsComplete =>
           Some(PushedCountStar)
-        case m: Min => colOf(m.column).filter(statsCovered).map(PushedMin)
-        case m: Max => colOf(m.column).filter(statsCovered).map(PushedMax)
+        case m: Min => colOf(m.column).filter(statsCovered(_.min)).map(PushedMin)
+        case m: Max => colOf(m.column).filter(statsCovered(_.max)).map(PushedMax)
         case _ => None
       }
       if (specs.nonEmpty && specs.forall(_.isDefined) && groupCols.forall(_.isDefined))

@@ -92,7 +92,7 @@ class IceLiteStagedTable(ref: TableRef, declared: StructType,
               ref.dataDir.resolve(token).toString, querySchema, partitionCols)
           else
             new IceLiteWriterFactory(ref.dataDir.resolve(token).toString,
-              querySchema.fields.map(f => (f.name, f.dataType)))
+              querySchema)
         }
         // records the staged set; the MANIFEST commit waits for
         // commitStagedChanges so the whole statement stays atomic

@@ -933,8 +933,7 @@ private[rest] class RestBatchWrite(spool: graft.icelite.TableRef,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     Files.createDirectories(spool.dataDir.resolve(token))
     new graft.sources.IceLiteWriterFactory(
-      spool.dataDir.resolve(token).toString,
-      schema.fields.map(f => (f.name, f.dataType)))
+      spool.dataDir.resolve(token).toString, schema)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {

@@ -905,4 +905,57 @@ class IceLiteCatalogSpec extends AnyFunSuite {
       "WHERE price < 200.00").head.getLong(0) == 2L)
     assert(IceLite.readPruned(spark, ref, "price", 0, 200).count() == 2L)
   }
+
+  test("an INSERT after a merge-on-read DELETE keeps a partitioned " +
+    "table's rowCount logical") {
+    Seq("g" -> "(g)", "bucket" -> "(bucket(2, k))").foreach { case (name, by) =>
+      val (cat, wh) = freshCatalog()
+      IceLite.createNamespace(wh, "src")
+      val ref = TableRef(wh, "src", name)
+      val t = s"$cat.src.$name"
+      spark.sql(s"CREATE TABLE $t (k BIGINT, g STRING) PARTITIONED BY $by")
+      spark.sql(s"INSERT INTO $t VALUES (1, 'a'), (2, 'a'), (3, 'b'), (4, 'b')")
+      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
+        "('write.delete.mode'='merge-on-read')")
+      spark.sql(s"DELETE FROM $t WHERE k = 1")
+      assert(IceLite.readManifest(ref).current.deleteFiles.nonEmpty, by)
+      spark.sql(s"INSERT INTO $t VALUES (5, 'b')")
+      val n = spark.sql(s"SELECT count(*) FROM $t").head.getLong(0)
+      assert(n == 4L, by)
+      assert(IceLite.readManifest(ref).current.rowCount == n, by)
+    }
+  }
+
+  test("CREATE TABLE … TBLPROPERTIES lands the user properties in the " +
+    "create commit") {
+    val (cat, wh) = freshCatalog()
+    IceLite.createNamespace(wh, "src")
+    val ref = TableRef(wh, "src", "props")
+    spark.sql(s"CREATE TABLE $cat.src.props (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+    val m = IceLite.readManifest(ref)
+    assert(m.properties == Map("write.delete.mode" -> "merge-on-read"))
+    assert(m.snapshots.size == 1)
+    spark.sql(s"INSERT INTO $cat.src.props VALUES (1, 1.0), (2, 2.0)")
+    spark.sql(s"DELETE FROM $cat.src.props WHERE k = 1")
+    assert(IceLite.readManifest(ref).current.deleteFiles.nonEmpty,
+      "the declared delete mode must route DELETE to merge-on-read")
+    assert(spark.sql(s"SELECT k FROM $cat.src.props").as[Long].collect()
+      .toSeq == Seq(2L))
+    // partitioned and hidden-partition DDL carry them the same way
+    spark.sql(s"CREATE TABLE $cat.src.pprops (k BIGINT, g STRING) " +
+      "PARTITIONED BY (g) TBLPROPERTIES ('read.split.target-size'='1048576')")
+    spark.sql(s"CREATE TABLE $cat.src.tprops (k BIGINT, g STRING) " +
+      "PARTITIONED BY (bucket(4, k)) TBLPROPERTIES ('a'='b')")
+    assert(IceLite.readManifest(TableRef(wh, "src", "pprops")).properties ==
+      Map("read.split.target-size" -> "1048576"))
+    assert(IceLite.readManifest(TableRef(wh, "src", "tprops")).properties ==
+      Map("a" -> "b"))
+    // an honored key is validated exactly as SET TBLPROPERTIES does
+    intercept[IllegalArgumentException] {
+      spark.sql(s"CREATE TABLE $cat.src.bad (k BIGINT) " +
+        "TBLPROPERTIES ('read.split.target-size'='-1')")
+    }
+    assert(!IceLite.tableExists(TableRef(wh, "src", "bad")))
+  }
 }

@@ -774,4 +774,39 @@ class IceLiteSourceSpec extends AnyFunSuite {
       s"nulls decoded as 0 under a non-nullable scan schema: ${got.mkString(", ")}")
     assert(got.find(_.getLong(0) == 11L).exists(_.getLong(1) == 4L))
   }
+
+  test("MIN/MAX and grouped pushdown decline a zero bound, which footers " +
+    "widen to the wrong sign") {
+    // parquet-mr reads a min of 0.0 back as -0.0 and a max of -0.0 as
+    // +0.0, so a metadata answer of zero could carry the wrong sign
+    def table(name: String, files: Seq[Seq[Double]]): org.apache.spark.sql.DataFrame = {
+      val wh = graft.GraftTmp.dir(s"v2src_zero_$name").toString
+      val ref = TableRef(wh, "ns", "t")
+      IceLite.createNamespace(wh, "ns")
+      val ext = graft.GraftTmp.dir(s"v2src_zero_ext_$name")
+      files.zipWithIndex.foreach { case (xs, i) =>
+        xs.toDF("x").coalesce(1).write.parquet(ext.resolve(s"f$i").toString)
+      }
+      IceLite.addFiles(ref, IceLite.listDir(java.nio.file.Files.walk(ext))(_
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq))
+      spark.read.format(Fmt).load(ref.dir.toString)
+    }
+    def isPositiveZero(d: Double) = java.lang.Double.compare(d, 0.0) == 0
+    def isNegativeZero(d: Double) = java.lang.Double.compare(d, -0.0) == 0
+    val pos = table("pos", Seq(Seq(0.0, 2.5)))
+    val lo = pos.agg(min($"x")).head.getDouble(0)
+    assert(isPositiveZero(lo), s"min(x) over {0.0, 2.5} answered $lo")
+    // a non-zero bound still answers from the manifest
+    IceLiteSource.lastScanMetadataOnly = false
+    assert(pos.agg(max($"x")).head.getDouble(0) == 2.5)
+    assert(IceLiteSource.lastScanMetadataOnly)
+    val neg = table("neg", Seq(Seq(-2.5, -0.0)))
+    val hi = neg.agg(max($"x")).head.getDouble(0)
+    assert(isNegativeZero(hi), s"max(x) over {-2.5, -0.0} answered $hi")
+    val grouped = table("grp", Seq(Seq(0.0, 0.0), Seq(1.5)))
+      .groupBy($"x").agg(count(lit(1))).collect()
+      .map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
+    assert(grouped.map(_._2).toSeq == Seq(2L, 1L) && isPositiveZero(grouped.head._1),
+      s"GROUP BY x answered ${grouped.mkString(", ")}")
+  }
 }

@@ -272,14 +272,14 @@ class WriteOrderDdlSpec extends AnyFunSuite {
     // compact materializes the transform order and earns the marker;
     // day-clustered files then SKIP on a one-day ts range probe (the
     // d10-style pruned-scan witness at the engine face — ts stats are
-    // epoch-second doubles)
+    // epoch-microsecond doubles, the footer unit)
     IceLite.compact(spark, ref, targetFiles = 4)
     val m3 = IceLite.readManifest(ref)
     assert(m3.current.sortedBy.contains("days(ts) DESC,k NULLS LAST"))
     val lo = java.time.Instant.parse("2024-01-05T00:00:00Z")
-      .getEpochSecond.toDouble
+      .getEpochSecond * 1e6
     val hi = java.time.Instant.parse("2024-01-06T00:00:00Z")
-      .getEpochSecond.toDouble
+      .getEpochSecond * 1e6
     val kept = IceLite.prunedFilesMulti(ref, Seq(("ts", lo, hi)))
     assert(kept.nonEmpty && kept.size < m3.current.files.size,
       s"day-clustered files must prune a one-day probe: kept " +
