@@ -1,8 +1,13 @@
 package graft.icelite
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter => SchemaConverter}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 import org.json4s.{Formats, NoTypeHints}
 import org.json4s.jackson.Serialization
 
@@ -996,6 +1001,11 @@ object IceLite {
     snap
   }
 
+  /** The DEFAULT Hadoop conf (not the session's) every footer open
+    * shares, loaded once: a fresh one costs ~4 ms, a copy ~0.2 ms.
+    * Read-only; a site that sets keys copies it. */
+  private[graft] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
   /** One footer open per file, PARALLEL on the driver: a commit of a
     * wide fanout write (hidden-partition INSERT: buckets × days dirs)
     * stages hundreds of files, and a sequential open-per-file loop at
@@ -1003,32 +1013,56 @@ object IceLite {
     * INSERTs paid ~480 sequential opens ≈ 12s). Footers are
     * metadata-sized, so a bounded thread pool makes this O(files /
     * threads). */
-  private def mapFooters[A](ref: TableRef, files: Seq[String])(
-      fn: (String, org.apache.parquet.hadoop.ParquetFileReader) => A): Seq[A] =
-    if (files.isEmpty) Nil
+  private[graft] def mapFooters[A](paths: Seq[Path])(
+      fn: (Path, ParquetFileReader) => A): Seq[A] =
+    if (paths.isEmpty) Nil
     else {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      def one(f: String): A = {
-        val p = new org.apache.hadoop.fs.Path(ref.dir.resolve(f).toUri)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try fn(f, r) finally r.close()
+      def one(p: Path): A = {
+        val r = ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p.toUri), hadoopConf))
+        try fn(p, r) finally r.close()
       }
-      if (files.size == 1) Seq(one(files.head))
+      if (paths.size == 1) Seq(one(paths.head))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, files.size))
-        try files.map(f => pool.submit(
+          math.min(16, paths.size))
+        try paths.map(p => pool.submit(
             new java.util.concurrent.Callable[A] {
-              override def call(): A = one(f)
+              override def call(): A = one(p)
             }))
-          .map(_.get())
+          .map(f => try f.get() catch {
+            case e: java.util.concurrent.ExecutionException => throw e.getCause })
         finally pool.shutdown()
       }
     }
 
+  /** [[mapFooters]] over a commit's files, filling the schema memo. */
+  private def mapCommitFooters[A](ref: TableRef, files: Seq[String])(
+      fn: ParquetFileReader => A): Seq[A] = {
+    val conv = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(schemaConverter)
+    mapFooters(files.map(ref.dir.resolve)) { (p, r) =>
+      // a schema Spark cannot convert fails the read, not the commit
+      for ((c, bits) <- conv; k <- schemaKey(p, bits);
+           sch <- scala.util.Try(footerSchema(c, p, r))) rememberSchema(k, sch)
+      fn(r)
+    }
+  }
+
   private def countRowsFromFooters(ref: TableRef, files: Seq[String]): Long =
-    mapFooters(ref, files)((_, r) => r.getRecordCount).sum
+    mapCommitFooters(ref, files)(_.getRecordCount).sum
+
+  /** `spark.read.parquet(paths)` and its row count, from the footers
+    * with no Spark job: the first file's schema in inference order
+    * (the default `mergeSchema=false`) and the summed record counts. */
+  private[icelite] def readCounted(spark: SparkSession,
+      paths: Seq[Path]): (DataFrame, Long) = {
+    val conv = schemaConverter(spark)._1
+    val footers = mapFooters(inferenceOrder(paths))((p, r) =>
+      (footerSchema(conv, p, r), r.getRecordCount))
+    (readParquet(spark, paths, Some(footers.head._1)), footers.map(_._2).sum)
+  }
 
   /** Resolve an input_file_name() URI back to its table-relative
     * staged path. Matches on the FULL table-relative path, not a
@@ -1097,7 +1131,7 @@ object IceLite {
   private def footerRowsAndStats(ref: TableRef, files: Seq[String],
       statsCols: String => Boolean = _ => true)
       : (Map[String, Long], Map[String, Seq[ColStats]]) = {
-    val both = mapFooters(ref, files) { (f, r) =>
+    val both = files.zip(mapCommitFooters(ref, files) { r =>
       val perCol: Map[String, Seq[(Double, Double)]] = {
         import scala.jdk.CollectionConverters._
         r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
@@ -1124,10 +1158,10 @@ object IceLite {
       val stats = perCol.map { case (col, ranges) =>
         ColStats(col, ranges.map(_._1).min, ranges.map(_._2).max)
       }.toSeq.sortBy(_.col)
-      (f, r.getRecordCount, stats)
-    }
-    (both.map { case (f, n, _) => f -> n }.toMap,
-      both.collect { case (f, _, s) if s.nonEmpty => f -> s }.toMap)
+      (r.getRecordCount, stats)
+    })
+    (both.map { case (f, (n, _)) => f -> n }.toMap,
+      both.collect { case (f, (_, s)) if s.nonEmpty => f -> s }.toMap)
   }
 
   /** d42/d43: group-based copy-on-write commit (the DSv2 ReplaceData
@@ -1576,33 +1610,26 @@ object IceLite {
     */
   def addFiles(ref: TableRef, sources: Seq[java.nio.file.Path]): Snapshot = {
     require(sources.nonEmpty, "addFiles: no source files given")
-    val conf = new org.apache.hadoop.conf.Configuration()
-    def fieldNames(p: java.nio.file.Path): Seq[String] = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toUri), conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
-        // Iceberg's spec forbids INT96 and this format follows it:
-        // every engine write emits INT64-micros timestamps and the
-        // connector's vectorized reader decodes exactly that — a
-        // registered INT96 file would pass schema-name checks and
-        // then fail (or misread) at scan time
-        fields.foreach { f =>
-          require(!f.isPrimitive ||
-            f.asPrimitiveType.getPrimitiveTypeName !=
-              org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96,
-            s"addFiles: ${p.getFileName} stores ${f.getName} as INT96 — " +
-              "the icelite format (like Iceberg's spec) requires " +
-              "INT64-micros timestamps; rewrite the file first")
-        }
-        fields.map(_.getName).toSeq
-      } finally r.close()
+    def fieldNames(ps: Seq[Path]): Seq[Seq[String]] = mapFooters(ps) { (p, r) =>
+      val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
+      // Iceberg's spec forbids INT96 and this format follows it:
+      // every engine write emits INT64-micros timestamps and the
+      // connector's vectorized reader decodes exactly that — a
+      // registered INT96 file would pass schema-name checks and
+      // then fail (or misread) at scan time
+      fields.foreach { f =>
+        require(!f.isPrimitive ||
+          f.asPrimitiveType.getPrimitiveTypeName !=
+            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96,
+          s"addFiles: ${p.getFileName} stores ${f.getName} as INT96 — " +
+            "the icelite format (like Iceberg's spec) requires " +
+            "INT64-micros timestamps; rewrite the file first")
+      }
+      fields.map(_.getName).toSeq.sorted
     }
-    val want = fieldNames(sources.head).sorted
-    sources.tail.foreach { s =>
-      val got = fieldNames(s).sorted
+    val names = fieldNames(sources)
+    val want = names.head
+    sources.zip(names).tail.foreach { case (s, got) =>
       require(got == want,
         s"addFiles: schema mismatch — ${s.getFileName} has ${got.mkString(",")}, " +
           s"expected ${want.mkString(",")}")
@@ -1616,7 +1643,7 @@ object IceLite {
       require(!snap.morLive,
         s"${ref.name} has live MoR delete sidecars — compact() before add_files")
       snap.files.headOption.foreach { f =>
-        val got = fieldNames(ref.dir.resolve(f)).sorted
+        val got = fieldNames(Seq(ref.dir.resolve(f))).head
         require(got == want,
           s"addFiles: schema mismatch vs table — sources have ${want.mkString(",")}, " +
             s"table has ${got.mkString(",")}")
@@ -2522,7 +2549,7 @@ object IceLite {
         // `_metadata` would not resolve on the schema-only fallback
         if (newSidecars.isEmpty || prev.files.isEmpty) None
         else {
-          val dels = readPlainCached(spark, ref, newSidecars)
+          val dels = readPlain(spark, ref, newSidecars)
           val prior = readSlice(prev, prev.files, withPositions = true)
           Some(prior.join(dels,
               normPathCol(prior("_mor_file")) === normPathCol(dels("file_path")) &&
@@ -2543,7 +2570,7 @@ object IceLite {
           val prior = readSnapWithDeletes(spark, ref, prev, prev.files)
           Some(newEq.groupBy(_.keyCols).map { case (kc, dels) =>
             val keys = dels.map(d =>
-              readPlainCached(spark, ref, Seq(d.file))
+              readPlain(spark, ref, Seq(d.file))
                 .select(kc.map(col): _*)).reduce(_ unionByName _).distinct()
             prior.join(org.apache.spark.sql.functions.broadcast(keys),
               kc, "left_semi")
@@ -2586,7 +2613,7 @@ object IceLite {
         .withColumn("_mor_pos", col("_metadata.row_index"))
     if (snap.deleteFiles.isEmpty || snap.files.isEmpty) df
     else {
-      val dels = readPlainCached(spark, ref, snap.deleteFiles)
+      val dels = readPlain(spark, ref, snap.deleteFiles)
       df.join(dels,
         normPathCol(df("_mor_file")) === normPathCol(dels("file_path")) &&
         df("_mor_pos") === dels("pos"), "left_anti")
@@ -2621,7 +2648,7 @@ object IceLite {
         val df = readFiles(spark, ref, files, widensOf, renamesOf)
           .withColumn("_mor_file", col("_metadata.file_path"))
           .withColumn("_mor_pos", col("_metadata.row_index"))
-        val dels = readPlainCached(spark, ref, snap.deleteFiles)
+        val dels = readPlain(spark, ref, snap.deleteFiles)
         val anti = df.join(dels,
             normPathCol(df("_mor_file")) === normPathCol(dels("file_path")) &&
             df("_mor_pos") === dels("pos"), "left_anti")
@@ -2706,7 +2733,7 @@ object IceLite {
       val folded = snap.eqDeletes.groupBy(_.keyCols).foldLeft(withAdded) {
         case (cur, (kc, dels)) =>
           val keys = dels.map { d =>
-            readPlainCached(spark, ref, Seq(d.file))
+            readPlain(spark, ref, Seq(d.file))
               .select(kc.map(col): _*)
               .withColumn("_eq_dsnap", lit(d.snapshotId))
           }.reduce(_ unionByName _)
@@ -3344,24 +3371,11 @@ object IceLite {
       val basePath =
         if (fileLayout(fs.head).isEmpty) None
         else Some(ref.dataDir.resolve("part").toString)
-      val paths = fs.map(f => ref.dir.resolve(f).toString)
-      // merged-schema replay (see cache above): a replayed schema
-      // skips both the footer-merge job AND partition-column type
-      // inference — the cached StructType already carries the
-      // discovered partition columns with their inferred types, and
-      // discovery itself (values from the k=v dirs) still runs
-      val key = mergedSchemaKey("part|" + basePath.getOrElse(""), paths)
-      val df = key.flatMap(k => Option(mergedSchemaCache.get(k))) match {
-        case Some(s) =>
-          val r = spark.read.schema(s)
-          basePath.fold(r)(b => r.option("basePath", b)).parquet(paths: _*)
-        case None =>
-          val r = spark.read.option("mergeSchema", "true")
-          val df0 = basePath.fold(r)(b => r.option("basePath", b))
-            .parquet(paths: _*)
-          putMergedSchema(key, df0.schema)
-          df0
-      }
+      // the footers' merged DATA schema; discovery still adds the
+      // path-borne partition columns with their inferred types
+      val paths = fs.map(ref.dir.resolve)
+      val df = readParquet(spark, paths, fileSchemas(spark,
+        inferenceOrder(paths)).map(mergeSchemas(spark, _)), basePath)
       // positions must be captured BEFORE the union: `_metadata` is a
       // per-relation pseudo-column and does not survive unionByName
       if (!withPositions) df
@@ -3801,70 +3815,98 @@ object IceLite {
     renames.foldLeft(c)((n, r) => if (n == r.from) r.to else n)
 
   // -------------------------------------------------------------
-  // Merged-schema REPLAY cache (r16, guide §5/§6 — driver work).
-  // `spark.read.option("mergeSchema", "true")` runs a DISTRIBUTED
-  // footer-merge job (SchemaMergeUtils.mergeSchemasInParallel) on
-  // every call, and the lifecycle operators re-read the same
-  // snapshot's file set many times per invocation (r16 JobProfile:
-  // one ~32-task merge job per read on d84/d85/d86). Cache the
-  // merged StructType keyed on the exact file IDENTITY set —
-  // absolute path + size + mtime per file, in read order, plus the
-  // reader-shaping inputs (basePath / widen ledger) — and replay it
-  // via spark.read.schema(...): Spark skips inference entirely when
-  // a user schema is supplied, and per-file by-name resolution with
-  // missing-column nulls is exactly mergeSchema's union semantics
-  // for the same file set. Size+mtime in the key keeps this sound
-  // under path reuse (DROP + re-CREATE restarts version counters
-  // and can re-issue a data path — the r15 manifest-cache hazard);
-  // a stat failure skips the cache and the read infers as before.
-  // METADATA-ONLY: data pages are re-read from parquet on every
-  // action. Unlike the r15-reverted driver footer probe, no footer
-  // is ever opened serially — the first read of a file set pays
-  // Spark's own parallel merge once and later reads replay it.
-  private val mergedSchemaCache = new java.util.concurrent
-    .ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private val MergedSchemaCacheMax = 8192
+  // Per-file SCHEMA MEMO. `spark.read.parquet` infers a schema with a
+  // Spark job per call, even for one file. Instead each file's schema
+  // is read ONCE from its footer, as that job reads it
+  // (`readSchemaFromFooter` with inference's converter): by the commit
+  // that adds the file, or by the first read that misses it (in
+  // parallel on the driver, no Spark job). Reads visit files in
+  // inference's path order (ParquetUtils.splitFiles) and pass the
+  // result to `spark.read.schema`: merged reads fold with Spark's
+  // `StructType.merge`, plain reads take the first file's, and
+  // partitioned reads let discovery add the path-borne columns. Keys
+  // are absolute path, size, nanosecond mtime and the converter's
+  // confs, so a same-path rewrite (DROP + re-CREATE) or a flipped conf
+  // (binaryAsString) misses, never hits stale. An unstat-able path
+  // reads through plain Spark and fails as it always did. Bounded:
+  // cleared when full.
+  private final case class SchemaKey(path: String, size: Long,
+      mtimeNanos: Long, confs: String)
+  private val schemaMemo = new ConcurrentHashMap[SchemaKey, StructType]()
+  // one instance per distinct schema: files mostly share theirs
+  private val distinctSchemas = new ConcurrentHashMap[StructType, StructType]()
+  private val SchemaMemoMax = 65536
 
-  /** Cache key for `paths` under `variant`, or None when any path
-    * cannot be stat'ed (the caller then infers uncached). */
-  private def mergedSchemaKey(variant: String,
-      paths: Seq[String]): Option[String] = {
-    val sb = new StringBuilder(variant)
-    var ok = true
-    paths.foreach { p =>
-      val f = new java.io.File(p)
-      val len = f.length()
-      if (len == 0L && !f.exists()) ok = false
-      sb.append('|').append(p).append(':').append(len)
-        .append(':').append(f.lastModified())
+  /** Inference's converter for `spark`'s conf (the five confs it
+    * reads; the rest at their defaults), and those confs as a key. */
+  private def schemaConverter(spark: SparkSession): (SchemaConverter, String) = {
+    val c = Bridge.sqlConf(spark)
+    val bits = Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+      c.parquetInferTimestampNTZEnabled, c.legacyParquetNanosAsLong,
+      c.parquetReaderRespectUnknownTypeAnnotation)
+    (new SchemaConverter(assumeBinaryIsString = bits(0),
+        assumeInt96IsTimestamp = bits(1), inferTimestampNTZ = bits(2),
+        nanosAsLong = bits(3), respectUnknownTypeAnnotation = bits(4)),
+      bits.map(b => if (b) '1' else '0').mkString)
+  }
+
+  private def schemaKey(p: Path, confs: String): Option[SchemaKey] =
+    scala.util.Try(Files.readAttributes(p,
+        classOf[java.nio.file.attribute.BasicFileAttributes])).toOption
+      .map(a => SchemaKey(p.toAbsolutePath.toString, a.size,
+        a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS), confs))
+
+  private def footerSchema(conv: SchemaConverter, p: Path,
+      r: ParquetFileReader): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(
+      new org.apache.hadoop.fs.Path(p.toUri), r.getFooter), conv)
+
+  private def rememberSchema(k: SchemaKey, s: StructType): Unit = {
+    if (schemaMemo.size >= SchemaMemoMax) { schemaMemo.clear(); distinctSchemas.clear() }
+    schemaMemo.put(k, Option(distinctSchemas.putIfAbsent(s, s)).getOrElse(s))
+  }
+
+  /** Each file's Spark schema, in order, opening only the footers the
+    * memo misses. None when a path cannot be stat'ed. */
+  private def fileSchemas(spark: SparkSession,
+      paths: Seq[Path]): Option[Seq[StructType]] = {
+    val (conv, confs) = schemaConverter(spark)
+    val keys = paths.map(schemaKey(_, confs))
+    if (keys.contains(None)) None
+    else {
+      val ks = keys.flatten
+      val hits = ks.flatMap(k => Option(schemaMemo.get(k)).map(k -> _)).toMap
+      val missing = ks.filterNot(hits.contains).distinct
+      val opened = missing.zip(mapFooters(missing.map(k => Paths.get(k.path)))(
+        footerSchema(conv, _, _))).toMap
+      opened.foreach { case (k, s) => rememberSchema(k, s) }
+      Some(ks.map(k => hits.getOrElse(k, opened(k))))
     }
-    if (ok) Some(sb.toString) else None
   }
 
-  private def putMergedSchema(key: Option[String],
-      s: org.apache.spark.sql.types.StructType): Unit = key.foreach { k =>
-    if (mergedSchemaCache.size >= MergedSchemaCacheMax)
-      mergedSchemaCache.clear() // crude but bounded; never hit in practice
-    mergedSchemaCache.put(k, s)
+  private def inferenceOrder(paths: Seq[Path]): Seq[Path] =
+    paths.sortBy(_.toString)
+
+  private def mergeSchemas(spark: SparkSession,
+      schemas: Seq[StructType]): StructType = {
+    val caseSensitive = Bridge.sqlConf(spark).caseSensitiveAnalysis
+    schemas.reduceLeft(Bridge.mergeSchemas(_, _, caseSensitive))
   }
 
-  /** Plain (single-schema) read of sidecar/eq-key `files` with schema
-    * replay: every read of a MoR-live snapshot re-reads its sidecars,
-    * and each bare spark.read.parquet call re-infers the schema from
-    * a footer on the driver. Same cache + identity-key soundness as
-    * the merge sites above; the replayed schema is the one the plain
-    * read inferred for the SAME ordered file set. */
-  private def readPlainCached(spark: SparkSession, ref: TableRef,
+  /** `spark.read.parquet(paths)` under `schema` (inference when None). */
+  private def readParquet(spark: SparkSession, paths: Seq[Path],
+      schema: Option[StructType], basePath: Option[String] = None): DataFrame = {
+    val r = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    schema.fold(r)(r.schema).parquet(paths.map(_.toString): _*)
+  }
+
+  /** Plain (single-schema) read of sidecar/eq-key `files`: every read
+    * of a MoR-live snapshot re-reads its sidecars. */
+  private def readPlain(spark: SparkSession, ref: TableRef,
       files: Seq[String]): DataFrame = {
-    val paths = files.map(f => ref.dir.resolve(f).toString)
-    val key = mergedSchemaKey("plain", paths)
-    key.flatMap(k => Option(mergedSchemaCache.get(k))) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None =>
-        val df = spark.read.parquet(paths: _*)
-        putMergedSchema(key, df.schema)
-        df
-    }
+    val paths = files.map(ref.dir.resolve)
+    readParquet(spark, paths, fileSchemas(spark,
+      inferenceOrder(paths).take(1)).flatMap(_.headOption))
   }
 
   // mergeSchema: appends may evolve the schema (Iceberg v2 semantics,
@@ -3890,7 +3932,7 @@ object IceLite {
   private def readFilesStored(spark: SparkSession, ref: TableRef,
       files: Seq[String],
       widensOf: Option[Seq[WidenedCol]] = None): DataFrame = {
-    val paths = files.map(f => ref.dir.resolve(f).toString)
+    val paths = files.map(ref.dir.resolve)
     if (files.isEmpty) {
       // An EMPTY file set still needs a real schema: spark.read
       // .parquet() with zero paths throws UNABLE_TO_INFER_SCHEMA,
@@ -3934,62 +3976,15 @@ object IceLite {
     }
     val widens = widensOf.getOrElse(
       scala.util.Try(readManifest(ref).widenedCols).getOrElse(Nil))
-    if (widens.isEmpty) {
-      val key = mergedSchemaKey("flat", paths)
-      key.flatMap(k => Option(mergedSchemaCache.get(k))) match {
-        case Some(s) => spark.read.schema(s).parquet(paths: _*)
-        case None =>
-          val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-          putMergedSchema(key, df.schema)
-          df
-      }
-    } else {
-      // d66: a widened table mixes narrow/wide file eras, which
-      // schema MERGING refuses (CANNOT_MERGE_SCHEMAS) — read with the
-      // explicit post-widen schema instead; Spark 4's parquet readers
-      // natively upcast int32→long / float→double per file
-      import org.apache.spark.sql.types._
-      // same replay cache as the flat path: this loop opens every
-      // footer SERIALLY on the driver, per read — cache the result
-      // keyed on the file identities + the widen ledger it folds in
-      val key = mergedSchemaKey(
-        "widen|" + widens.map(w => s"${w.name}>${w.toType}").mkString(","),
-        paths)
-      key.flatMap(k => Option(mergedSchemaCache.get(k))).foreach { s =>
-        return spark.read.schema(s).parquet(paths: _*)
-      }
-      val conv = new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetToSparkSchemaConverter()
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-      files.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(ref.dir.resolve(f).toUri)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        val sch = try conv.convert(r.getFooter.getFileMetaData.getSchema)
-          finally r.close()
-        sch.fields.foreach { fd =>
-          fields.get(fd.name) match {
-            case None => fields(fd.name) = fd
-            case Some(prev) if prev.dataType == fd.dataType => ()
-            case Some(prev) => // eras disagree: take the wider side
-              val wide = (prev.dataType, fd.dataType) match {
-                case (IntegerType, LongType) | (LongType, IntegerType) => LongType
-                case (FloatType, DoubleType) | (DoubleType, FloatType) => DoubleType
-                case (a, b) => throw new IllegalStateException(
-                  s"${ref.name}: column ${fd.name} has irreconcilable " +
-                    s"types across files (${a.simpleString} vs ${b.simpleString})")
-              }
-              fields(fd.name) = prev.copy(dataType = wide)
-          }
-        }
-      }
-      val target = widens.map(w => w.name -> DataType.fromDDL(w.toType)).toMap
-      val widened = StructType(fields.values.toSeq.map(fd =>
-        target.get(fd.name).fold(fd)(t => fd.copy(dataType = t))))
-      putMergedSchema(key, widened)
-      spark.read.schema(widened).parquet(paths: _*)
-    }
+    // d66: narrow/wide file eras do not merge, so each file's schema
+    // takes the ledger's post-widen type before the fold; Spark 4's
+    // parquet readers upcast int32→long / float→double per file
+    val target = widens.map(w =>
+      w.name -> org.apache.spark.sql.types.DataType.fromDDL(w.toType)).toMap
+    def widened(s: StructType) = StructType(s.fields.map(f =>
+      target.get(f.name).fold(f)(t => f.copy(dataType = t))))
+    readParquet(spark, paths, fileSchemas(spark, inferenceOrder(paths))
+      .map(ss => mergeSchemas(spark, ss.map(widened))))
   }
 
   /** Read the current snapshot (schema-on-read from Parquet footers,
@@ -4057,17 +4052,8 @@ object IceLite {
   /** First data file's parquet field names (the connector's
     * schema-of-record; stored names, pre-rename). */
   private def firstFileCols(ref: TableRef, m: Manifest): Set[String] =
-    m.current.files.headOption.map { f =>
-      val p = new org.apache.hadoop.fs.Path(ref.dir.resolve(f).toUri)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          p, new org.apache.hadoop.conf.Configuration()))
-      try {
-        import scala.jdk.CollectionConverters._
-        r.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .map(_.getName).toSet
-      } finally r.close()
-    }.getOrElse(Set.empty)
+    if (m.current.files.isEmpty) Set.empty
+    else firstFileMessageType(ref, m).getFields.asScala.map(_.getName).toSet
 
   /** The CURRENT visible column names: file schema ∪ ALTER-added,
     * minus dropped, with the rename chain applied. A still-empty
@@ -4500,11 +4486,8 @@ object IceLite {
       m: Manifest): org.apache.parquet.schema.MessageType = {
     val f = m.current.files.headOption.getOrElse(
       throw new IllegalStateException(s"${ref.name} has no data files"))
-    val p = new org.apache.hadoop.fs.Path(ref.dir.resolve(f).toUri)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        p, new org.apache.hadoop.conf.Configuration()))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
+    mapFooters(Seq(ref.dir.resolve(f)))((_, r) =>
+      r.getFooter.getFileMetaData.getSchema).head
   }
 
   /** Time travel: read the table as of a specific snapshot id. */
@@ -4561,7 +4544,7 @@ object IceLite {
     val df1 =
       if (snap.deleteFiles.isEmpty || files.isEmpty) df0
       else {
-        val dels = readPlainCached(spark, ref, snap.deleteFiles)
+        val dels = readPlain(spark, ref, snap.deleteFiles)
         df0.join(dels,
           normPathCol(df0("_mor_file")) === normPathCol(dels("file_path")) &&
           df0("_mor_pos") === dels("pos"), "left_anti")

@@ -15,6 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *               a02 scan → a11 append/create → a06 state append →
   *               a12 expire
   *
+  * A steady-state incremental load runs three Spark jobs: the a04
+  * lookup (a semi-filter pushed into the state read) and the two
+  * writes. a02's schema and a07's count come from the batch footers.
+  *
   * The loaded-files state is itself an IceLite table with a single
   * `file_path` string column (extract_load.py:55-66), so ingest
   * bookkeeping rides the same snapshot/commit path as data. File
@@ -56,7 +60,7 @@ object IngestJob {
     * (extract_load.py:55-61). Inspection/test helper ONLY — it
     * collects the full tracked-file history to the driver, which at
     * 100 TB is millions of rows. `run` computes its new-file diff with
-    * the a04 anti-join instead (newFiles below), never materializing
+    * the a04 semi-filter instead (newFiles below), never materializing
     * the history driver-side. */
   def loadedFiles(spark: SparkSession, warehouse: String, table: String): Set[String] = {
     val ref = stateRef(warehouse, table)
@@ -65,18 +69,18 @@ object IngestJob {
       .collect().map(_.getString(0)).toSet
   }
 
-  /** a04 as `run` uses it: listed − tracked as a DataFrame anti-join —
-    * the tracking table stays distributed; only the NEW files (bounded
-    * by the batch, not by history) ever reach the driver. */
+  /** a04 as `run` uses it: listed − tracked. The reference's own a04
+    * is a driver-side set difference over the whole history (SURVEY
+    * §2). Here the listing, already on the driver, is pushed into the
+    * state read as an `IN` filter (one narrow job, no shuffle), so
+    * what comes back is bounded by the listing, never the history. */
   private def newFiles(spark: SparkSession, warehouse: String, table: String,
       listed: Seq[String]): Seq[String] = {
-    import spark.implicits._
     val ref = stateRef(warehouse, table)
-    if (!IceLite.tableExists(ref)) listed
-    else listed.toDF("file_path")
-      .join(IceLite.read(spark, ref).select("file_path"),
-        Seq("file_path"), "left_anti")
-      .as[String].collect().toSeq.sorted
+    if (listed.isEmpty || !IceLite.tableExists(ref)) listed
+    else listed.filterNot(IceLite.read(spark, ref).select("file_path")
+      .where(org.apache.spark.sql.functions.col("file_path").isin(listed: _*))
+      .collect().map(_.getString(0)).toSet)
   }
 
   /** a06: append newly loaded paths to the tracking table
@@ -110,7 +114,7 @@ object IngestJob {
         if (listed.isEmpty) Seq.empty else Seq(listed.max)
       case "incremental" =>
         // a04: listed − already-loaded diff (extract_load.py:154-157),
-        // as a distributed anti-join — the tracked-file history never
+        // as a pushed semi-filter — the tracked-file history never
         // lands on the driver
         newFiles(spark, warehouse, table, listed)                  // a05
 
@@ -128,9 +132,10 @@ object IngestJob {
         if (IceLite.tableExists(ref)) IceLite.readManifest(ref).currentSnapshotId else 0L)
     }
 
-    // a02: one multi-file scan over the batch (extract_load.py:68-73)
-    val df = spark.read.parquet(toLoad.map(f => s"$sourceDir/$f"): _*)
-    val rows = df.count()                                          // a07
+    // a02: one multi-file scan over the batch (extract_load.py:68-73);
+    // a07: its row count, from the footers
+    val (df, rows) = IceLite.readCounted(spark,
+      toLoad.map(Paths.get(sourceDir).resolve))
 
     // partitionCol opts the target table into the Hive-style layout
     // (Iceberg identity partitioning) — same snapshot/commit semantics,

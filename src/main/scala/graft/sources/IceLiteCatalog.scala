@@ -187,12 +187,7 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
     val ref = refOf(ident)
     if (IceLite.tableExists(ref)) throw new TableAlreadyExistsException(ident)
     IceLite.createNamespace(warehouse, ident.namespace.head)
-    // TBLPROPERTIES land in the create commit; Spark's reserved keys
-    // (provider, location, owner, …) describe the statement, not the table
-    val props = properties.asScala.toMap -- Seq(TableCatalog.PROP_PROVIDER,
-      TableCatalog.PROP_LOCATION, TableCatalog.PROP_OWNER,
-      TableCatalog.PROP_COMMENT, TableCatalog.PROP_EXTERNAL,
-      TableCatalog.PROP_IS_MANAGED_LOCATION)
+    val props = IceLiteCatalog.tableProperties(properties)
     if (partitions.isEmpty) {
       // an EMPTY flat table with its declared schema in the manifest
       // (one CAS create commit) — a pre-insert SELECT answers empty
@@ -228,8 +223,9 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
     * commit publishes it — Iceberg's transactional replace, not the
     * non-atomic drop-then-create fallback. */
   private def staged(ident: Identifier, schema: StructType,
-      partitions: Array[Transform], mustNotExist: Boolean,
-      mustExist: Boolean): org.apache.spark.sql.connector.catalog.StagedTable = {
+      partitions: Array[Transform], properties: JMap[String, String],
+      mustNotExist: Boolean, mustExist: Boolean)
+      : org.apache.spark.sql.connector.catalog.StagedTable = {
     val ref = refOf(ident)
     if (mustNotExist && IceLite.tableExists(ref))
       throw new TableAlreadyExistsException(ident)
@@ -242,7 +238,7 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
       if (partitions.isEmpty || tSpec.isDefined) (schema, Nil)
       else partitionedShape(schema, partitions)
     new IceLiteStagedTable(ref, ordered, cols, mustNotExist, mustExist,
-      tSpec.getOrElse(Nil))
+      tSpec.getOrElse(Nil), IceLiteCatalog.tableProperties(properties))
   }
 
   private def structOf(columns: Array[org.apache.spark.sql.connector.catalog.Column]): StructType =
@@ -253,21 +249,21 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
       partitions: Array[Transform],
       properties: JMap[String, String]): org.apache.spark.sql.connector.catalog.StagedTable =
-    staged(ident, structOf(columns), partitions,
+    staged(ident, structOf(columns), partitions, properties,
       mustNotExist = true, mustExist = false)
 
   override def stageReplace(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
       partitions: Array[Transform],
       properties: JMap[String, String]): org.apache.spark.sql.connector.catalog.StagedTable =
-    staged(ident, structOf(columns), partitions,
+    staged(ident, structOf(columns), partitions, properties,
       mustNotExist = false, mustExist = true)
 
   override def stageCreateOrReplace(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
       partitions: Array[Transform],
       properties: JMap[String, String]): org.apache.spark.sql.connector.catalog.StagedTable =
-    staged(ident, structOf(columns), partitions,
+    staged(ident, structOf(columns), partitions, properties,
       mustNotExist = false, mustExist = false)
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -531,6 +527,15 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object IceLiteCatalog extends org.apache.spark.internal.Logging {
+  /** The TBLPROPERTIES a create or CTAS/RTAS commit lands: Spark's
+    * reserved keys (provider, location, …) describe the statement. */
+  private[graft] def tableProperties(
+      properties: JMap[String, String]): Map[String, String] =
+    properties.asScala.toMap -- Seq(TableCatalog.PROP_PROVIDER,
+      TableCatalog.PROP_LOCATION, TableCatalog.PROP_OWNER,
+      TableCatalog.PROP_COMMENT, TableCatalog.PROP_EXTERNAL,
+      TableCatalog.PROP_IS_MANAGED_LOCATION)
+
   /** d68/d70: identity transforms only (hidden-partition transforms
     * write through the engine). Partition values are PATH-BORNE in
     * the Hive layout, so the partition columns surface as strings and

@@ -218,10 +218,8 @@ object IceLiteSource {
       eqDeletes: Seq[graft.icelite.EqDelete]): Boolean =
     eqDeletes.forall { d =>
       scala.util.Try {
-        val fr = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new HPath(ref.dir.resolve(d.file).toString), new Configuration()))
-        val schema = try fr.getFooter.getFileMetaData.getSchema
-          finally fr.close()
+        val schema = IceLite.mapFooters(Seq(ref.dir.resolve(d.file)))(
+          (_, r) => r.getFooter.getFileMetaData.getSchema).head
         d.keyCols.forall { c =>
           val t = schema.getType(Array(c): _*)
           t.isPrimitive && {
@@ -312,7 +310,7 @@ object IceLiteSource {
     else refs.groupBy(_._2).toSeq.map { case (kc, rs) =>
       val keys = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], Long)]
       rs.foreach { case (path, _, dsnap) =>
-        val conf = new Configuration()
+        val conf = new Configuration(IceLite.hadoopConf)
         val fr = ParquetFileReader.open(
           HadoopInputFile.fromPath(new HPath(path), conf))
         val schema = try fr.getFooter.getFileMetaData.getSchema
@@ -417,7 +415,7 @@ object IceLiteSource {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
     import org.apache.parquet.io.api.Binary
-    val conf = new Configuration()
+    val conf = IceLite.hadoopConf
     val acc = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
     sidecars.foreach { case (sc, wanted) =>
@@ -706,13 +704,9 @@ object IceLiteSource {
     * table without rebinding the ledger scope. */
   private def preLedgerSchema(ref: TableRef, m: graft.icelite.Manifest,
       snap: graft.icelite.Snapshot): StructType = {
-    val file = new HPath(ref.dir.resolve(snap.files.head).toUri)
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, new Configuration()))
-    val fileSchema = try {
-      val msg = r.getFooter.getFileMetaData.getSchema
-      new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetToSparkSchemaConverter().convert(msg)
-    } finally r.close()
+    val fileSchema = IceLite.mapFooters(Seq(ref.dir.resolve(snap.files.head)))(
+      (_, r) => new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter().convert(r.getFooter.getFileMetaData.getSchema)).head
     if (snap.partitionCols.isEmpty) fileSchema
     else {
       // d83: a mid-evolution snapshot mixes layouts. The schema is
@@ -2234,7 +2228,7 @@ class IceLiteDataWriter(dir: String, name: String, schema: StructType,
     conf: Map[String, String]) extends DataWriter[InternalRow] {
   private val file = new java.io.File(dir, name)
   private val writer = {
-    val hadoopConf = new Configuration()
+    val hadoopConf = new Configuration(IceLite.hadoopConf)
     conf.foreach { case (k, v) => hadoopConf.set(k, v) }
     org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
       .setSchema(schema, hadoopConf)
@@ -4235,7 +4229,7 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
           // predates ride along as constant null vectors
           val (fileCols, fileTypes, fileRows) = {
             val fr = ParquetFileReader.open(HadoopInputFile.fromPath(
-              new HPath(path), new Configuration()))
+              new HPath(path), IceLite.hadoopConf))
             try {
               val msg = fr.getFooter.getFileMetaData.getSchema
               val sparkTypes = new org.apache.spark.sql.execution.datasources
@@ -4399,7 +4393,7 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
       new PartitionReader[InternalRow] {
         private val physTotal = {
           val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new HPath(file), new Configuration()))
+            HadoopInputFile.fromPath(new HPath(file), IceLite.hadoopConf))
           try r.getRecordCount finally r.close()
         }
         // tombstoned rows are not rows: the footer count is physical
@@ -4438,7 +4432,7 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
     if (fields.isEmpty) return countOnlyReader()
     val fullFileSchema: org.apache.parquet.schema.MessageType = {
       val fr = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(file), new Configuration()))
+        HadoopInputFile.fromPath(new HPath(file), IceLite.hadoopConf))
       try fr.getFooter.getFileMetaData.getSchema finally fr.close()
     }
     val fileColsSeq: Seq[String] =
@@ -4466,7 +4460,7 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
       }
     }
     new PartitionReader[InternalRow] {
-      private val conf = new Configuration()
+      private val conf = new Configuration(IceLite.hadoopConf)
       // d83: per-slot path value for columns this file does NOT store
       // but carries in its value dirs (the demoted partition field)
       private val pathTail: Array[Any] = {

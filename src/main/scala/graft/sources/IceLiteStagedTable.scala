@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
   * the non-atomic drop-then-create fallback. */
 class IceLiteStagedTable(ref: TableRef, declared: StructType,
     partitionCols: Seq[String], mustNotExist: Boolean, mustExist: Boolean,
-    transformSpec: Seq[graft.icelite.PartitionField] = Nil)
+    transformSpec: Seq[graft.icelite.PartitionField] = Nil,
+    properties: Map[String, String] = Map.empty)
   extends StagedTable with SupportsWrite {
   require(partitionCols.isEmpty || transformSpec.isEmpty,
     "a staged table has either an identity layout or a transform spec")
@@ -124,7 +125,7 @@ class IceLiteStagedTable(ref: TableRef, declared: StructType,
     * through the catalog service (staging stays data-plane). */
   protected def commitTable(files: Seq[String]): Unit = {
     IceLite.replaceTableStaged(ref, files, partitionCols,
-      declared.toDDL, mustNotExist, mustExist, transformSpec)
+      declared.toDDL, mustNotExist, mustExist, transformSpec, properties)
     ()
   }
 

@@ -94,7 +94,8 @@ private[rest] final case class CommitReq(
 private[rest] final case class CreateStagedReq(
     files: Seq[String], partitionCols: Seq[String], schemaDdl: String,
     mustNotExist: Boolean, mustExist: Boolean,
-    partitionSpec: Seq[graft.icelite.PartitionField] = Nil)
+    partitionSpec: Seq[graft.icelite.PartitionField] = Nil,
+    properties: Map[String, String] = Map.empty)
 
 /** `CREATE TABLE … PARTITIONED BY` with no data (d68 identity /
   * d84 transform). */
@@ -326,7 +327,7 @@ class CatalogServer(warehouse: String, port: Int = 0) {
           IceLite.createNamespace(warehouse, ns)
           val snap = IceLite.replaceTableStaged(ref, req.files,
             req.partitionCols, req.schemaDdl, req.mustNotExist, req.mustExist,
-            req.partitionSpec)
+            req.partitionSpec, req.properties)
           send(ex, 200, Serialization.write(Map(
             "snapshotId" -> snap.id, "rowCount" -> snap.rowCount)))
         case ("POST", Seq("namespaces", ns, "tables", t, "create-empty")) =>

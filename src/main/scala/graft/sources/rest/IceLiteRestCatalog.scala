@@ -651,8 +651,9 @@ class IceLiteRestCatalog extends TableCatalog with SupportsNamespaces
 
   private def stagedTable(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
-      partitions: Array[Transform], mustNotExist: Boolean,
-      mustExist: Boolean): org.apache.spark.sql.connector.catalog.StagedTable = {
+      partitions: Array[Transform], properties: JMap[String, String],
+      mustNotExist: Boolean, mustExist: Boolean)
+      : org.apache.spark.sql.connector.catalog.StagedTable = {
     require(ident.namespace.length == 1,
       s"icelite namespaces are single-level, got ${ident.namespace.mkString(".")}")
     if (mustNotExist && tableExists(ident))
@@ -671,26 +672,27 @@ class IceLiteRestCatalog extends TableCatalog with SupportsNamespaces
     // exist yet, so there is no spool to mount through
     new RestStagedTable(TableRef(warehouse, ident.namespace.head, ident.name),
       ordered, cols, mustNotExist, mustExist,
-      uri + tablePath(ident) + "/create-staged", http, tSpec.getOrElse(Nil))
+      uri + tablePath(ident) + "/create-staged", http, tSpec.getOrElse(Nil),
+      graft.sources.IceLiteCatalog.tableProperties(properties))
   }
 
   override def stageCreate(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
       partitions: Array[Transform],
       properties: JMap[String, String]): org.apache.spark.sql.connector.catalog.StagedTable =
-    stagedTable(ident, columns, partitions, mustNotExist = true, mustExist = false)
+    stagedTable(ident, columns, partitions, properties, mustNotExist = true, mustExist = false)
 
   override def stageReplace(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
       partitions: Array[Transform],
       properties: JMap[String, String]): org.apache.spark.sql.connector.catalog.StagedTable =
-    stagedTable(ident, columns, partitions, mustNotExist = false, mustExist = true)
+    stagedTable(ident, columns, partitions, properties, mustNotExist = false, mustExist = true)
 
   override def stageCreateOrReplace(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
       partitions: Array[Transform],
       properties: JMap[String, String]): org.apache.spark.sql.connector.catalog.StagedTable =
-    stagedTable(ident, columns, partitions, mustNotExist = false, mustExist = false)
+    stagedTable(ident, columns, partitions, properties, mustNotExist = false, mustExist = false)
 }
 
 private[rest] class RestCatalogException(val code: Int, msg: String)
@@ -1100,16 +1102,17 @@ private[rest] class RestReplaceWrite(spool: TableRef, schema: StructType,
 private[rest] class RestStagedTable(ref: TableRef, declared: StructType,
     partitionCols: Seq[String], mustNotExist: Boolean, mustExist: Boolean,
     createUrl: String, http: java.net.http.HttpClient,
-    transformSpec: Seq[graft.icelite.PartitionField] = Nil)
+    transformSpec: Seq[graft.icelite.PartitionField] = Nil,
+    properties: Map[String, String] = Map.empty)
   extends graft.sources.IceLiteStagedTable(ref, declared, partitionCols,
-    mustNotExist, mustExist, transformSpec) {
+    mustNotExist, mustExist, transformSpec, properties) {
   private implicit val formats: org.json4s.Formats =
     Serialization.formats(org.json4s.NoTypeHints)
 
   override protected def commitTable(files: Seq[String]): Unit = {
     RestCommitClient.postCommit(http, createUrl, Serialization.write(
       CreateStagedReq(files, partitionCols, declared.toDDL,
-        mustNotExist, mustExist, transformSpec)))
+        mustNotExist, mustExist, transformSpec, properties)))
     ()
   }
 }

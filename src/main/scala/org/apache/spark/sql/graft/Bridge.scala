@@ -7,9 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * DataFrame from a custom [[LogicalPlan]] node requires
   * `Dataset.ofRows`, which Spark keeps sql-private. Extensions that
   * ship custom operators (Delta, Iceberg, Sedona, …) all open this
-  * same bridge from a `org.apache.spark.sql` subpackage. Nothing else
-  * may go through here — keep the surface to exactly these two
-  * functions. */
+  * same bridge from a `org.apache.spark.sql` subpackage. Keep the
+  * surface to the sql-private reaches below, each a one-liner. */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -37,4 +36,13 @@ object Bridge {
 
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     classic(spark).sessionState.sqlParser.parsePlan(sql)
+
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    classic(spark).sessionState.conf
+
+  /** `StructType.merge`: the `mergeSchema=true` inference fold. */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
 }

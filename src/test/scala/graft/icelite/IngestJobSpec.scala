@@ -187,4 +187,72 @@ class IngestJobSpec extends AnyFunSuite {
     assert(got == Seq(1, 2, 3))
     assert(IceLite.readManifest(IngestJob.tableRef(wh, "t")).snapshots.size == 1)
   }
+
+  /** Spark jobs started while `body` runs (listener bus drained). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc); started.get() }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("a steady-state incremental load runs three Spark jobs: the " +
+    "tracked-file lookup and the two writes") {
+    val full = makeSource((0 until 4).map(i => Seq(2 * i, 2 * i + 1)))
+    val visible = graft.GraftTmp.dir("ingest_spec_vis").toString
+    val wh = graft.GraftTmp.dir("ingest_spec_wh").toString
+    val names = IngestJob.listSourceFiles(full)
+    def reveal(n: String): Unit =
+      Files.copy(Paths.get(full, n), Paths.get(visible, n))
+    // the first two loads create the data and state tables
+    names.take(2).foreach { n =>
+      reveal(n)
+      IngestJob.run(spark, wh, "t", visible, "incremental")
+    }
+    names.drop(2).foreach { n =>
+      reveal(n)
+      var r: IngestJob.Result = null
+      val jobs = jobsDuring {
+        r = IngestJob.run(spark, wh, "t", visible, "incremental")
+      }
+      assert(r.filesLoaded == Seq(n))
+      assert(jobs == 3, s"load of $n ran $jobs Spark jobs")
+    }
+    assert(IceLite.read(spark, IngestJob.tableRef(wh, "t"))
+      .as[Int].collect().sorted.toSeq == (0 until 8))
+  }
+
+  test("the batch read schema and row count come from the footers and " +
+    "equal Spark's inference and count()") {
+    val src = graft.GraftTmp.dir("ingest_spec_src").toString
+    val stage = graft.GraftTmp.dir("ingest_spec_stage")
+    def put(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      val part = IceLite.listDir(Files.list(stage))(_
+        .find(_.toString.endsWith(".parquet")).get)
+      Files.move(part, Paths.get(src, name))
+    }
+    // two files whose schemas differ: a column added, one type changed
+    put("a.parquet", Seq((1L, "x"), (2L, "y")).toDF("k", "s"))
+    put("b.parquet", Seq((3, "z", 1.5), (4, "w", 2.5), (5, "v", 3.5))
+      .toDF("k", "s", "extra"))
+    val batch = Seq("a.parquet", "b.parquet")
+    val paths = batch.map(f => Paths.get(src, f).toString)
+    val (df, rows) = IceLite.readCounted(spark, batch.map(Paths.get(src, _)))
+    assert(df.schema == spark.read.parquet(paths: _*).schema)
+    assert(rows == 5L && rows == spark.read.parquet(paths: _*).count())
+
+    val wh = graft.GraftTmp.dir("ingest_spec_wh").toString
+    val r = IngestJob.run(spark, wh, "t", src, "incremental", retentionMs = -1)
+    assert(r.filesLoaded == batch)
+    assert(r.rowsLoaded == spark.read.parquet(paths: _*).count())
+    assert(IceLite.read(spark, IngestJob.tableRef(wh, "t")).count() == 5L)
+  }
 }

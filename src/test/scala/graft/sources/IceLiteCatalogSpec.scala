@@ -958,4 +958,40 @@ class IceLiteCatalogSpec extends AnyFunSuite {
     }
     assert(!IceLite.tableExists(TableRef(wh, "src", "bad")))
   }
+
+  test("CTAS and RTAS … TBLPROPERTIES land the user properties in the " +
+    "staged commit, on the owning and the REST catalog") {
+    val (cat, wh) = freshCatalog()
+    IceLite.createNamespace(wh, "src")
+    val ref = TableRef(wh, "src", "ctas")
+    spark.sql(s"CREATE TABLE $cat.src.ctas " +
+      "TBLPROPERTIES ('write.delete.mode'='merge-on-read') AS " +
+      "SELECT * FROM VALUES (1L, 1.0D), (2L, 2.0D) AS v(k, v)")
+    assert(IceLite.readManifest(ref).properties ==
+      Map("write.delete.mode" -> "merge-on-read"))
+    spark.sql(s"DELETE FROM $cat.src.ctas WHERE k = 1")
+    assert(IceLite.readManifest(ref).current.deleteFiles.nonEmpty,
+      "the declared delete mode must route DELETE to merge-on-read")
+    assert(spark.sql(s"SELECT k FROM $cat.src.ctas").as[Long].collect()
+      .toSeq == Seq(2L))
+    // RTAS and CREATE OR REPLACE merge theirs over the table's own
+    spark.sql(s"REPLACE TABLE $cat.src.ctas TBLPROPERTIES ('a'='1') " +
+      "AS SELECT 3L AS k, 3.0D AS v")
+    spark.sql(s"CREATE OR REPLACE TABLE $cat.src.ctas " +
+      "TBLPROPERTIES ('b'='2') AS SELECT 4L AS k, 4.0D AS v")
+    assert(IceLite.readManifest(ref).properties == Map(
+      "write.delete.mode" -> "merge-on-read", "a" -> "1", "b" -> "2"))
+    // the REST attachment posts them with its one create-staged commit
+    val srv = new graft.sources.rest.CatalogServer(wh).start()
+    try {
+      val rcat = s"restcat_${java.util.UUID.randomUUID.toString.take(8)}"
+      spark.conf.set(s"spark.sql.catalog.$rcat",
+        "graft.sources.rest.IceLiteRestCatalog")
+      spark.conf.set(s"spark.sql.catalog.$rcat.uri", srv.uri)
+      spark.sql(s"CREATE TABLE $rcat.src.rctas " +
+        "TBLPROPERTIES ('write.delete.mode'='merge-on-read') AS SELECT 1L AS k")
+      assert(IceLite.readManifest(TableRef(wh, "src", "rctas")).properties ==
+        Map("write.delete.mode" -> "merge-on-read"))
+    } finally srv.stop()
+  }
 }

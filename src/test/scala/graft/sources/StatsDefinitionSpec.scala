@@ -6,10 +6,11 @@ import graft.TestSpark
 import graft.icelite.{ColStats, IceLite, TableRef}
 
 /** One stats definition across the write faces: the engine append,
-  * SQL INSERT, add_files and compact() all take `fileStats` from the
-  * footers of the files they add, in the units `ColStats` declares
-  * (decimals scaled, DATE in days, TIMESTAMP_NTZ in micros), and the
-  * same rows prune to the same counts whichever face wrote them. */
+  * SQL INSERT, a REST append, add_files and compact() all take
+  * `fileStats` from the footers of the files they add, in the units
+  * `ColStats` declares (decimals scaled, DATE in days, TIMESTAMP_NTZ
+  * in micros), and the same rows prune to the same counts whichever
+  * face wrote them. */
 class StatsDefinitionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -49,6 +50,30 @@ class StatsDefinitionSpec extends AnyFunSuite {
       .sortBy(_.col)
   }
 
+  private def micros(hour: Int): Double = java.time.LocalDateTime
+    .of(2024, 1, 1, hour, 0).toEpochSecond(java.time.ZoneOffset.UTC) * 1e6
+  private val day = java.time.LocalDate.of(2024, 1, 2).toEpochDay.toDouble
+
+  /** The stats every face records for `rows()`. */
+  private val expectedStats = Seq(
+    ColStats("d", day, day + 3), ColStats("k", 1, 4),
+    ColStats("price", 125, 200), ColStats("ts", micros(1), micros(4)),
+    ColStats("x", 2.5, 10))
+
+  private def assertPrunedCounts(cat: String, table: String): Unit =
+    Seq("k >= 3" -> 2L, "x > 5" -> 2L, "price < 150.00" -> 1L,
+      "d >= DATE'2024-01-04'" -> 2L,
+      "ts < TIMESTAMP_NTZ'2024-01-01 02:30:00'" -> 2L, "k > 9" -> 0L)
+      .foreach { case (p, n) =>
+        assert(spark.sql(s"SELECT count(*) FROM $cat.src.$table WHERE $p")
+          .head.getLong(0) == n, s"$cat.$table WHERE $p")
+      }
+
+  private def assertEnginePruning(ref: TableRef): Unit = {
+    assert(IceLite.readPruned(spark, ref, "price", 0, 149).count() == 1L)
+    assert(IceLite.readPruned(spark, ref, "k", 5, 9).count() == 0L)
+  }
+
   test("engine append, SQL INSERT, add_files and compact record identical " +
     "footer stats and prune to identical counts") {
     val (cat, wh) = freshCatalog()
@@ -66,29 +91,35 @@ class StatsDefinitionSpec extends AnyFunSuite {
     IceLite.append(compacted, rows().filter("k > 2"), statsCols = Cols)
     IceLite.compact(spark, compacted)
 
-    def micros(hour: Int): Double = java.time.LocalDateTime.of(2024, 1, 1, hour, 0)
-      .toEpochSecond(java.time.ZoneOffset.UTC) * 1e6
-    val day = java.time.LocalDate.of(2024, 1, 2).toEpochDay.toDouble
-    val expect = Seq(
-      ColStats("d", day, day + 3), ColStats("k", 1, 4),
-      ColStats("price", 125, 200), ColStats("ts", micros(1), micros(4)),
-      ColStats("x", 2.5, 10))
     Seq(engine, sql, added, compacted).foreach { ref =>
-      assert(onlyFileStats(ref) == expect, s"${ref.name} stats")
+      assert(onlyFileStats(ref) == expectedStats, s"${ref.name} stats")
     }
+    for (t <- Seq("engine", "sqlins", "added", "compacted"))
+      assertPrunedCounts(cat, t)
+    Seq(engine, sql, added, compacted).foreach(assertEnginePruning)
+  }
 
-    val predicates = Seq(
-      "k >= 3" -> 2L, "x > 5" -> 2L, "price < 150.00" -> 1L,
-      "d >= DATE'2024-01-04'" -> 2L,
-      "ts < TIMESTAMP_NTZ'2024-01-01 02:30:00'" -> 2L, "k > 9" -> 0L)
-    for (t <- Seq("engine", "sqlins", "added", "compacted");
-         (p, n) <- predicates)
-      assert(spark.sql(s"SELECT count(*) FROM $cat.src.$t WHERE $p")
-        .head.getLong(0) == n, s"$t WHERE $p")
-    Seq(engine, sql, added, compacted).foreach { ref =>
-      assert(IceLite.readPruned(spark, ref, "price", 0, 149).count() == 1L)
-      assert(IceLite.readPruned(spark, ref, "k", 5, 9).count() == 0L)
-    }
+  test("a REST append records the same footer stats and prunes to the " +
+    "same counts") {
+    val (cat, wh) = freshCatalog()
+    val srv = new graft.sources.rest.CatalogServer(wh).start()
+    try {
+      val rcat = s"statsrest_${java.util.UUID.randomUUID.toString.take(8)}"
+      spark.conf.set(s"spark.sql.catalog.$rcat",
+        "graft.sources.rest.IceLiteRestCatalog")
+      spark.conf.set(s"spark.sql.catalog.$rcat.uri", srv.uri)
+      spark.sql(s"CREATE TABLE $rcat.src.restins (k BIGINT, x DOUBLE, " +
+        "price DECIMAL(12,2), d DATE, ts TIMESTAMP_NTZ)")
+      rows().createOrReplaceTempView("stats_rest_rows")
+      spark.sql(s"INSERT INTO $rcat.src.restins SELECT * FROM stats_rest_rows")
+      val ref = TableRef(wh, "src", "restins")
+      assert(IceLite.readManifest(ref).current.summary
+        .get("committed-via").contains("rest"))
+      assert(onlyFileStats(ref) == expectedStats)
+      assertPrunedCounts(rcat, "restins")
+      assertPrunedCounts(cat, "restins")
+      assertEnginePruning(ref)
+    } finally srv.stop()
   }
 
   test("compact() after add_files of a DATE column keeps its day stats") {
