@@ -3,7 +3,15 @@ package graft.icelite
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter => SchemaConverter}
 import org.apache.spark.sql.graft.Bridge
@@ -1001,10 +1009,40 @@ object IceLite {
     snap
   }
 
-  /** The DEFAULT Hadoop conf (not the session's) every footer open
-    * shares, loaded once: a fresh one costs ~4 ms, a copy ~0.2 ms.
-    * Read-only; a site that sets keys copies it. */
-  private[graft] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+  /** The DEFAULT Hadoop conf (not the session's) every parquet-mr
+    * open reads its options from, through [[openParquet]] and
+    * [[groupReader]], loaded once: a fresh one costs ~4 ms, a copy
+    * ~0.2 ms. Read-only; a site that sets keys copies it. Each open
+    * builds its OWN options over it:
+    * `ParquetFileReader.close` releases its options' codec factory,
+    * so one options object shared by concurrent opens would hand a
+    * live decompressor back to the pool. */
+  private[graft] lazy val hadoopConf = new Configuration()
+
+  /** A footer/row-group reader over `p`, its options built per open
+    * from [[hadoopConf]] (one-argument `ParquetFileReader.open`
+    * parses a fresh default conf for them). */
+  private[graft] def openParquet(p: HPath): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, hadoopConf),
+      HadoopReadOptions.builder(hadoopConf, p).build())
+
+  /** A `Group` row reader over `p` decoding only the top-level columns
+    * `keep` accepts, its options built per open from [[hadoopConf]]
+    * (the InputFile constructor reads them from the file's conf;
+    * `ParquetReader.builder` parses a fresh one). The read support
+    * projects, so no conf is copied to carry a read schema. */
+  private[graft] def groupReader(p: HPath, keep: String => Boolean = _ => true)
+      : ParquetReader.Builder[Group] =
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(p, hadoopConf)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport {
+          override def init(ctx: InitContext): ReadSupport.ReadContext = {
+            val s = ctx.getFileSchema
+            new ReadSupport.ReadContext(new MessageType(s.getName,
+              s.getFields.asScala.filter(f => keep(f.getName)).asJava))
+          }
+        }
+    }
 
   /** One footer open per file, PARALLEL on the driver: a commit of a
     * wide fanout write (hidden-partition INSERT: buckets × days dirs)
@@ -1018,9 +1056,7 @@ object IceLite {
     if (paths.isEmpty) Nil
     else {
       def one(p: Path): A = {
-        val r = ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), hadoopConf))
+        val r = openParquet(new HPath(p.toUri))
         try fn(p, r) finally r.close()
       }
       if (paths.size == 1) Seq(one(paths.head))

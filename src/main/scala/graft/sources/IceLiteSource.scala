@@ -4,10 +4,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -310,21 +307,13 @@ object IceLiteSource {
     else refs.groupBy(_._2).toSeq.map { case (kc, rs) =>
       val keys = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], Long)]
       rs.foreach { case (path, _, dsnap) =>
-        val conf = new Configuration(IceLite.hadoopConf)
-        val fr = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new HPath(path), conf))
-        val schema = try fr.getFooter.getFileMetaData.getSchema
-          finally fr.close()
-        val projected = new org.apache.parquet.schema.MessageType(
-          schema.getName,
-          schema.getFields.asScala.filter(f => kc.contains(f.getName)).asJava)
-        conf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
         def value(g: Group, c: String): Any =
           if (g.getFieldRepetitionCount(c) == 0) null
           else {
             import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
             import org.apache.parquet.schema.LogicalTypeAnnotation
-            val prim = projected.getType(Array(c): _*).asPrimitiveType
+            // the row's type is the projected read schema
+            val prim = g.getType.getType(c).asPrimitiveType
             val dec = prim.getLogicalTypeAnnotation match {
               case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => d
               case _ => null
@@ -361,8 +350,7 @@ object IceLiteSource {
                 s"undecodable eq key primitive $other (planning gate broken)")
             }
           }
-        val reader = ParquetReader.builder(new GroupReadSupport(),
-          new HPath(path)).withConf(conf).build()
+        val reader = IceLite.groupReader(new HPath(path), kc.contains).build()
         try {
           var g = reader.read()
           while (g != null) {
@@ -401,8 +389,10 @@ object IceLiteSource {
   }
 
   /** The one position-sidecar decoder both regimes share: parquet-mr's
-    * Group reader over each sidecar's `(file_path, pos)` rows, all
-    * opened with ONE Hadoop `Configuration` — no Spark job, no schema
+    * Group reader over each sidecar's `(file_path, pos)` rows, each
+    * opened with its own read options over the loaded
+    * [[IceLite.hadoopConf]] (one options object per open: a close
+    * releases its codec factory) — no Spark job, no schema
     * inference. Each sidecar comes with the recorded `file_path`
     * strings to push down (the executor side's per-split want list:
     * row groups whose path stats or dictionaries exclude every wanted
@@ -415,7 +405,6 @@ object IceLiteSource {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
     import org.apache.parquet.io.api.Binary
-    val conf = IceLite.hadoopConf
     val acc = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
     sidecars.foreach { case (sc, wanted) =>
@@ -424,8 +413,7 @@ object IceLiteSource {
         else FilterCompat.get(wanted.map(r => FilterApi.eq(
             FilterApi.binaryColumn("file_path"), Binary.fromString(r)))
           .reduce[FilterPredicate](FilterApi.or(_, _)))
-      val reader = ParquetReader.builder(new GroupReadSupport(), new HPath(sc))
-        .withConf(conf).withFilter(filter).build()
+      val reader = IceLite.groupReader(new HPath(sc)).withFilter(filter).build()
       try {
         var g = reader.read()
         while (g != null) {
@@ -3187,8 +3175,10 @@ class IceLiteScan(ref: TableRef, required: StructType,
     * a fold keyed over the static set serves every call.
     * AT-OR-UNDER the driver-fold budget the sidecars fold to per-file
     * tombstone indexes on the driver with the shared parquet-mr
-    * decoder: no Spark job, one Hadoop `Configuration` for the whole
-    * fold (cheap and exact for CDC-sized sidecars). ABOVE it
+    * decoder: no Spark job, every sidecar's read options built per
+    * open over the one loaded [[IceLite.hadoopConf]] (never a shared
+    * options object: a close releases its codec factory), cheap and
+    * exact for CDC-sized sidecars. ABOVE it
     * positions never visit the driver: planning runs one distinct
     * (sidecar, file_path) census (O(touched files) rows) and each
     * split ships its files' matched sidecar paths + exact recorded
@@ -4228,8 +4218,7 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
           // d51: decode the columns this file HAS; ALTER-added ones it
           // predates ride along as constant null vectors
           val (fileCols, fileTypes, fileRows) = {
-            val fr = ParquetFileReader.open(HadoopInputFile.fromPath(
-              new HPath(path), IceLite.hadoopConf))
+            val fr = IceLite.openParquet(new HPath(path))
             try {
               val msg = fr.getFooter.getFileMetaData.getSchema
               val sparkTypes = new org.apache.spark.sql.execution.datasources
@@ -4385,17 +4374,18 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
       tombstones.foreach(s.add(_))
       s
     }
+    // one footer open per split: the file schema and its record count
+    val (fullFileSchema, physTotal) = {
+      val fr = IceLite.openParquet(new HPath(file))
+      try (fr.getFooter.getFileMetaData.getSchema, fr.getRecordCount)
+      finally fr.close()
+    }
     // no data columns projected (partition-only select, a count over
     // a declined aggregate, or every projected column postdates this
     // file's write — d51): the footer's record count is the whole
     // answer — emit that many constant rows, zero pages decoded
     def countOnlyReader(): PartitionReader[InternalRow] =
       new PartitionReader[InternalRow] {
-        private val physTotal = {
-          val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new HPath(file), IceLite.hadoopConf))
-          try r.getRecordCount finally r.close()
-        }
         // tombstoned rows are not rows: the footer count is physical
         private val total =
           if (emitOnly) dead.size.toLong else physTotal - dead.size
@@ -4430,11 +4420,6 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
         override def close(): Unit = ()
       }
     if (fields.isEmpty) return countOnlyReader()
-    val fullFileSchema: org.apache.parquet.schema.MessageType = {
-      val fr = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(file), IceLite.hadoopConf))
-      try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-    }
     val fileColsSeq: Seq[String] =
       fullFileSchema.getFields.asScala.map(_.getName).toSeq
     // d58: per-file stored name for each projected column (rename
@@ -4460,7 +4445,6 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
       }
     }
     new PartitionReader[InternalRow] {
-      private val conf = new Configuration(IceLite.hadoopConf)
       // d83: per-slot path value for columns this file does NOT store
       // but carries in its value dirs (the demoted partition field)
       private val pathTail: Array[Any] = {
@@ -4478,17 +4462,9 @@ class IceLiteReaderFactory(fields: Array[(String, DataType)],
       // parquet reader materializes only those pages; a column ABSENT
       // from this file (written before its ALTER TABLE ADD COLUMN,
       // d51) is null-filled per row below
-      private val present: Array[Boolean] = {
-        val want = storedNames.filter(_ != null).toSet
-        val projected = new org.apache.parquet.schema.MessageType(
-          fullFileSchema.getName,
-          fullFileSchema.getFields.asScala.filter(f => want(f.getName)).asJava)
-        conf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-        storedNames.map(_ != null)
-      }
-      private val reader: ParquetReader[Group] =
-        ParquetReader.builder(new GroupReadSupport(), new HPath(file))
-          .withConf(conf).build()
+      private val present: Array[Boolean] = storedNames.map(_ != null)
+      private val reader: ParquetReader[Group] = IceLite.groupReader(
+        new HPath(file), storedNames.filter(_ != null).toSet).build()
       private val partTail: Array[Any] = partTail0
       private var cur: Group = _
       private var pos = -1L
