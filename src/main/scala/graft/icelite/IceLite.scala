@@ -357,6 +357,37 @@ object PartitionedWriteMode {
   case object ReplaceDynamic extends PartitionedWriteMode
 }
 
+/** The one commit request of every connector write: the write's stage
+  * has staged (and, for value-dir layouts, promoted) its files in the
+  * table's storage; this names the snapshot to make of them. The owning
+  * catalog applies it in-process ([[IceLite.applyCommit]]); the REST
+  * attachment POSTs it as JSON, and the catalog service applies the
+  * same request. `operation` selects the commit shape:
+  *  - `append` / `overwrite`            flat tables (commitStaged)
+  *  - `append-partitioned` /
+  *    `overwrite-partitioned`           Hive-layout tables; `mode` is
+  *                                      all|dynamic|static (+`eq` for
+  *                                      static partition filters)
+  *  - `append-transformed` /
+  *    `overwrite-transformed`           hidden-partition (d56) tables:
+  *                                      promoted derived-dir files,
+  *                                      validated against the spec
+  *  - `replace`                         row-level rewrite: swap
+  *                                      `removed` for `added`
+  *                                      (`opName` names the statement)
+  *  - `compact`                         remote compaction, claimed
+  *                                      only at `expectedVersion` + 1
+  */
+final case class CommitReq(
+    operation: String,
+    added: Seq[String] = Nil,
+    removed: Seq[String] = Nil,
+    mode: Option[String] = None,
+    eq: Map[String, String] = Map.empty,
+    opName: Option[String] = None,
+    keepSorted: Boolean = false,
+    expectedVersion: Option[Long] = None)
+
 final case class Manifest(
     table: String,
     currentSnapshotId: Long,
@@ -966,7 +997,8 @@ object IceLite {
     * delete materializer, d47/d72) and keeps the sort marker the
     * client preserved. */
   private[graft] def commitCompactStaged(ref: TableRef, added: Seq[String],
-      expectedVersion: Long, keepSorted: Boolean): Snapshot = {
+      expectedVersion: Long, keepSorted: Boolean,
+      summary: Map[String, String]): Snapshot = {
     val (rowsByFile, stats) = footerRowsAndStats(ref, added)
     // local compact()'s race rule, over the wire: claim EXACTLY the
     // version after the one the client compacted against, so ANY
@@ -999,7 +1031,7 @@ object IceLite {
     val snap = Snapshot.empty.next(m.nextId, "replace", added = added,
       addedRows = rowsByFile, addedStats = stats,
       sortedBy = if (keepSorted) cur.sortedBy else None,
-      summary = Map("committed-via" -> "rest", "maintenance" -> "compact"))
+      summary = summary + ("maintenance" -> "compact"))
     if (!claimVersion(ref, expectedVersion + 1, m.advance(snap),
         added, Some(m))) raced()
     // parity with local compact(): the rewrite orphans any Bloom
@@ -1212,7 +1244,8 @@ object IceLite {
     * the new files come from parquet footers; the removed files'
     * row counts leave through the manifest's own record counts. */
   private[graft] def commitReplace(ref: TableRef, removed: Set[String],
-      added: Seq[String], op: String): Snapshot = {
+      added: Seq[String], op: String,
+      summary: Map[String, String] = Map.empty): Snapshot = {
     val (rowsByFile, stats) = footerRowsAndStats(ref, added)
     while (true) {
       val (baseVersion, basePath) = latestManifestFile(ref).getOrElse(
@@ -1231,8 +1264,8 @@ object IceLite {
             "re-run the statement against the current snapshot")
       }
       // d56: a transform-layout rewrite must land the spec's derived
-      // dirs (the transformed replace-writer stages them; validate
-      // like commitStagedTransformed) and CARRY the spec forward —
+      // dirs (the replace-write's stage derives them; validate like
+      // commitPromotedTransformed) and CARRY the spec forward —
       // dropping it would silently end transform pruning
       if (snap.partitionSpec.nonEmpty)
         added.foreach { f =>
@@ -1243,7 +1276,7 @@ object IceLite {
       val removedRows = removed.toSeq.map(f =>
         snap.fileRows.getOrElse(f, countRowsFromFooters(ref, Seq(f)))).sum
       val next = snap.next(base.nextId, op, removed, removedRows,
-        added, rowsByFile, stats)
+        added, rowsByFile, stats, summary = summary)
       // a row-level rewrite that empties the table pins the schema,
       // like rewriteWhere/compact (this face serves the REST replace
       // protocol too — REST fuzz seeds 1028/1046/1050 reached the
@@ -1265,6 +1298,54 @@ object IceLite {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Apply one [[CommitReq]] as ONE CAS snapshot whose summary carries
+    * `summary` (the catalog service passes `committed-via=rest`, a
+    * streaming sink its epoch marker). */
+  private[graft] def applyCommit(ref: TableRef, req: CommitReq,
+      summary: Map[String, String] = Map.empty): Snapshot = {
+    import PartitionedWriteMode._
+    req.operation match {
+      case "append" =>
+        require(req.added.nonEmpty, "append needs staged files")
+        commitStaged(ref, req.added, truncate = false, summary,
+          req.keepSorted)
+      case "overwrite" =>
+        commitStaged(ref, req.added, truncate = true, summary,
+          req.keepSorted)
+      case "append-partitioned" =>
+        require(req.added.nonEmpty, "append needs staged files")
+        commitPromotedPartitioned(ref, req.added, Append, summary)
+      case "overwrite-partitioned" =>
+        val mode = req.mode match {
+          case Some("all") => ReplaceAll
+          case Some("dynamic") => ReplaceDynamic
+          case Some("static") => ReplaceWhere(req.eq)
+          case other => throw new IllegalArgumentException(
+            s"overwrite-partitioned mode must be all|dynamic|static, got $other")
+        }
+        commitPromotedPartitioned(ref, req.added, mode, summary)
+      case "append-transformed" =>
+        require(req.added.nonEmpty, "append needs staged files")
+        commitPromotedTransformed(ref, req.added, replace = false, summary)
+      case "overwrite-transformed" =>
+        commitPromotedTransformed(ref, req.added, replace = true, summary)
+      case "replace" =>
+        commitReplace(ref, req.removed.toSet, req.added,
+          req.opName.getOrElse("replace"), summary)
+      // d80: remote compaction — conditioned on the exact manifest
+      // VERSION the client compacted against; any concurrent commit
+      // (including a files-unchanged eq-delete) is a race, and only
+      // the client can recompute (the staged bytes are a function of
+      // the base)
+      case "compact" =>
+        commitCompactStaged(ref, req.added, req.expectedVersion.getOrElse(
+            throw new IllegalArgumentException("compact needs expectedVersion")),
+          req.keepSorted, summary)
+      case other => throw new IllegalArgumentException(
+        s"unknown commit operation '$other'")
+    }
+  }
+
   /** d26: commit files an EXTERNAL writer (the DSv2 BatchWrite) has
     * already staged under data/<token>/ — one CAS snapshot, append or
     * (`truncate`) replace; create on first commit. Stats come from
@@ -1283,7 +1364,7 @@ object IceLite {
       // a flat staged commit against a partitioned table would flip
       // the current snapshot to flat layout — path-borne partition
       // values silently vanish and pruning breaks. The local DSv2
-      // path routes partitioned tables to commitStagedPartitioned;
+      // path routes partitioned tables to commitPromotedPartitioned;
       // refuse here so no OTHER caller (e.g. a remote commit
       // protocol) can take that corrupting shortcut.
       cur.foreach { m =>
@@ -1445,17 +1526,6 @@ object IceLite {
     }.current
   }
 
-  /** d67: commit a partitioned DSv2 write (INSERT INTO / INSERT
-    * OVERWRITE [PARTITION (…)] / dynamic overwrite through the SQL
-    * connector). `staged` are paths relative to `data/<token>/`, each
-    * carrying its Hive value dirs (`a=1/b=2/part-….parquet`); the
-    * driver moves them into the table's `data/part/` layout (a
-    * rename, no bytes) and resolves survivors per `mode` in ONE CAS
-    * snapshot — partition overwrite is metadata work + the new
-    * partition's bytes, never a table rewrite. Stats and row counts
-    * come from the new files' footers (no second scan). Identity
-    * partitions only; MoR-live targets refuse replace modes (dropping
-    * a file would dangle its delete sidecar entries). */
   /** Promote files a partitioned DSv2 writer staged under
     * `data/<token>/<value dirs>/` into the table's `data/part/`
     * layout (a rename per file, zero bytes) and drop the emptied
@@ -1489,21 +1559,14 @@ object IceLite {
     * paths), and ONE CAS snapshot validates every file carries
     * exactly the spec's derived dirs. Append and truncate only:
     * a static PARTITION clause would name DERIVED values hidden
-    * partitioning exists to hide. */
-  private[graft] def commitStagedTransformed(ref: TableRef, token: String,
-      staged: Seq[String], replace: Boolean): Snapshot = {
-    val moved = promoteStagedPartitioned(ref, token, staged)
-    commitPromotedTransformed(ref, moved, replace)
-  }
-
-  /** The CAS half of a transformed staged commit: `moved` are
-    * table-relative paths ALREADY promoted into the derived-dir
-    * layout (locally by commitStagedTransformed; by the remote writer
-    * itself on the REST path — promotion is data-plane, visibility
-    * changes only here). Mirrors commitPromotedPartitioned for
-    * hidden-partition layouts. */
+    * partitioning exists to hide. `moved` are table-relative paths
+    * the write's stage ALREADY promoted into the derived-dir layout
+    * (promotion is data-plane; visibility changes only here).
+    * Mirrors commitPromotedPartitioned for hidden-partition
+    * layouts. */
   private[graft] def commitPromotedTransformed(ref: TableRef,
-      moved: Seq[String], replace: Boolean): Snapshot = {
+      moved: Seq[String], replace: Boolean,
+      summary: Map[String, String] = Map.empty): Snapshot = {
     val (rowsByFile, stats) = footerRowsAndStats(ref, moved)
     commitCAS(ref) { cur =>
       val m = cur.getOrElse(throw new IllegalStateException(
@@ -1525,24 +1588,22 @@ object IceLite {
       val base = if (replace) Snapshot.empty else snap
       m.advance(base.next(m.nextId, if (replace) "overwrite" else "append",
         added = moved, addedRows = rowsByFile, addedStats = stats,
-        partitionSpec = spec, sortedBy = None))
+        summary = summary, partitionSpec = spec, sortedBy = None))
     }.current
   }
 
-  private[graft] def commitStagedPartitioned(ref: TableRef, token: String,
-      staged: Seq[String], mode: PartitionedWriteMode,
-      summary: Map[String, String] = Map.empty): Snapshot = {
-    val moved = promoteStagedPartitioned(ref, token, staged)
-    commitPromotedPartitioned(ref, moved, mode, summary)
-  }
-
-  /** The CAS half of a partitioned staged commit: `moved` are
-    * table-relative `data/part/<value dirs>/` paths ALREADY promoted
-    * into the Hive layout (locally by commitStagedPartitioned; by the
-    * remote writer itself on the REST path — promotion is data-plane,
-    * visibility changes only here). Validates every file carries the
-    * table's partition columns, then resolves the overwrite mode in
-    * ONE CAS snapshot. */
+  /** d67: commit a partitioned DSv2 write (INSERT INTO / INSERT
+    * OVERWRITE [PARTITION (…)] / dynamic overwrite through the SQL
+    * connector). `moved` are table-relative `data/part/<value dirs>/`
+    * paths the write's stage ALREADY promoted into the Hive layout
+    * (promotion is data-plane; visibility changes only here).
+    * Validates every file carries the table's partition columns,
+    * then resolves survivors per `mode` in ONE CAS snapshot —
+    * partition overwrite is metadata work + the new partition's
+    * bytes, never a table rewrite. Stats and row counts come from the
+    * new files' footers (no second scan). Identity partitions only;
+    * MoR-live targets refuse replace modes (dropping a file would
+    * dangle its delete sidecar entries). */
   private[graft] def commitPromotedPartitioned(ref: TableRef,
       moved: Seq[String], mode: PartitionedWriteMode,
       summary: Map[String, String] = Map.empty): Snapshot = {
@@ -4512,10 +4573,8 @@ object IceLite {
   /** d89: the write order in effect for NEW writes — the declared
     * order (WRITE ORDERED BY) wins over the physical whole-table
     * marker; either absent falls through. */
-  def effectiveSortCol(ref: TableRef): Option[String] = {
-    val m = readManifest(ref)
+  def effectiveSortCol(m: Manifest): Option[String] =
     m.declaredSortedBy.orElse(m.current.sortedBy)
-  }
 
   /** First data file's full parquet MessageType. */
   private def firstFileMessageType(ref: TableRef,

@@ -237,8 +237,12 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
     val (ordered, cols) =
       if (partitions.isEmpty || tSpec.isDefined) (schema, Nil)
       else partitionedShape(schema, partitions)
-    new IceLiteStagedTable(ref, ordered, cols, mustNotExist, mustExist,
-      tSpec.getOrElse(Nil), IceLiteCatalog.tableProperties(properties))
+    val spec = tSpec.getOrElse(Nil)
+    val props = IceLiteCatalog.tableProperties(properties)
+    new IceLiteStagedTable(ref, ordered, cols, spec, files => {
+      IceLite.replaceTableStaged(ref, files, cols, ordered.toDDL,
+        mustNotExist, mustExist, spec, props); ()
+    })
   }
 
   private def structOf(columns: Array[org.apache.spark.sql.connector.catalog.Column]): StructType =

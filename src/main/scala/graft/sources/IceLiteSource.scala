@@ -19,7 +19,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.icelite.{ColStats, IceLite, Snapshot, TableRef}
+import graft.icelite.{ColStats, CommitReq, IceLite, Snapshot, TableRef}
 
 /** DataSource V2 connector for IceLite tables — the `sources/` rung
   * of the architecture: `spark.read.format("graft.sources.
@@ -915,10 +915,28 @@ class IceLiteTable(ref: TableRef, schema: StructType,
       splitBytesExplicit =
         options.containsKey("targetSplitBytes") || propSplitOpt.isDefined)
   }
+  /** Where this table's writes send their one [[CommitReq]]: `None`
+    * applies it in-process (IceLite.applyCommit); the REST attachment
+    * POSTs it to its catalog service. A remote commit lands on main
+    * only (no WAP branch), and remote row-level statements rewrite
+    * copy-on-write: the merge-on-read delta commit and streaming
+    * epochs are not on the wire. */
+  protected[sources] def remoteCommit: Option[CommitReq => Unit] = None
+
+  private def commit(req: CommitReq): Unit = remoteCommit match {
+    case Some(post) => post(req)
+    case None => IceLite.applyCommit(ref, req); ()
+  }
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty,
       s"${name()} is a time-travel read — snapshots are immutable")
-    new IceLiteWriteBuilder(ref, info)
+    if (remoteCommit.isDefined)
+      require(org.apache.spark.sql.SparkSession.active.conf
+          .getOption("spark.wap.branch").forall(_.isEmpty),
+        "spark.wap.branch is set — branch staging commits through the " +
+          "owning catalog, not the REST face")
+    new IceLiteWriteBuilder(ref, info, commit)
   }
 
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
@@ -951,9 +969,12 @@ class IceLiteTable(ref: TableRef, schema: StructType,
     }
     () => {
       val spark = org.apache.spark.sql.SparkSession.active
-      val mor = IceLite.resolvedWriteMode(spark, ref, opKind) == "merge-on-read"
-      val m = IceLite.readManifest(ref)
-      val evolutionPending = m.writeLayoutCols != m.current.partitionCols
+      val mor = remoteCommit.isEmpty &&
+        IceLite.resolvedWriteMode(spark, ref, opKind) == "merge-on-read"
+      def evolutionPending = {
+        val m = IceLite.readManifest(ref)
+        m.writeLayoutCols != m.current.partitionCols
+      }
       if (mor && !evolutionPending)
         new IceLiteDeltaOperation(ref, schema, info.command)
       else {
@@ -961,7 +982,7 @@ class IceLiteTable(ref: TableRef, schema: StructType,
           s"${name()}: $opKind requested merge-on-read but a pending " +
             "partition-spec evolution carries no sidecars — falling " +
             "back to copy-on-write for this statement")
-        new IceLiteRowLevelOperation(ref, schema, info.command)
+        new IceLiteRowLevelOperation(ref, schema, info.command, commit)
       }
     }
   }
@@ -1132,7 +1153,8 @@ trait IceLiteRowLevelOpBase {
   * Scan and write of one statement share this object by construction
   * (Spark builds both from the same RowLevelOperation). */
 class IceLiteRowLevelOperation(ref: TableRef, tableSchema: StructType,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
+    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
+    publish: CommitReq => Unit)
   extends org.apache.spark.sql.connector.write.RowLevelOperation
   with IceLiteRowLevelOpBase {
   import org.apache.spark.sql.connector.expressions.Expressions
@@ -1149,7 +1171,7 @@ class IceLiteRowLevelOperation(ref: TableRef, tableSchema: StructType,
     new WriteBuilder {
       override def build(): Write = new IceLiteReplaceWrite(
         ref, info.schema(), IceLiteRowLevelOperation.this,
-        cmd.toString.toLowerCase)
+        cmd.toString.toLowerCase, publish)
     }
 
   /** Ask the rewrite plan to project `_file`, making it available to
@@ -1215,30 +1237,25 @@ class IceLiteDeltaOperation(ref: TableRef, tableSchema: StructType,
 
 /** The write half of a delta (merge-on-read) row-level statement:
   * each task writes its position deletes to a sidecar under
-  * `deletes/<token>/` and its inserts through the table's OWN layout
-  * under `data/<token>/` (value dirs re-derived for identity and
-  * hidden partitioning, so MoR appends keep pruning tight); the
-  * driver promotes staged value dirs and commits ONE snapshot via
-  * [[graft.icelite.IceLite.commitDelta]]. Inserts cluster by the
-  * table's layout (RequiresDistributionAndOrdering) except for
-  * DELETE statements, whose plans carry no data columns. */
+  * `deletes/<token>/` and its inserts through the statement's
+  * [[IceLiteWriteStage]] (the table's OWN layout: value dirs
+  * re-derived for identity and hidden partitioning, so MoR appends
+  * keep pruning tight); the driver promotes staged value dirs and
+  * commits ONE snapshot via [[graft.icelite.IceLite.commitDelta]].
+  * Inserts cluster by the table's layout
+  * (RequiresDistributionAndOrdering) except for DELETE statements,
+  * whose plans carry no data columns. */
 class IceLiteDeltaWrite(ref: TableRef, rowSchema: StructType,
     op: IceLiteDeltaOperation, opName: String)
   extends org.apache.spark.sql.connector.write.DeltaWrite
   with org.apache.spark.sql.connector.write.DeltaBatchWrite
   with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-  import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
+  import org.apache.spark.sql.connector.expressions.SortOrder
 
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-  private val delToken = java.util.UUID.randomUUID.toString.take(8)
-  private def sortedBy: Option[String] = IceLite.effectiveSortCol(ref)
-  private val partCols: Seq[String] =
-    IceLiteSource.resolveSnap(ref, None).partitionCols
-  private val transformSpec: Seq[graft.icelite.PartitionField] =
-    IceLiteSource.resolveSnap(ref, None).partitionSpec
-  private val tz = org.apache.spark.sql.SparkSession.active
-    .sessionState.conf.sessionLocalTimeZone
+  private val stage = IceLiteWriteStage.rewrite(ref)
+  private val delDir =
+    ref.deletesDir.resolve(java.util.UUID.randomUUID.toString.take(8))
   /** DELETE plans carry only rowId/metadata attributes — there is
     * nothing to cluster and data-column layout expressions would not
     * resolve. */
@@ -1248,27 +1265,16 @@ class IceLiteDeltaWrite(ref: TableRef, rowSchema: StructType,
   override def description(): String = s"IceLiteDeltaWrite $opName ${ref.name}"
 
   override def requiredDistribution(): Distribution =
-    if (deleteOnly) Distributions.unspecified()
-    else if (transformSpec.nonEmpty)
-      Distributions.clustered(transformSpec.map(_.sourceCol).distinct
-        .map(c => Expressions.identity(c): org.apache.spark.sql
-          .connector.expressions.Expression).toArray)
-    else IceLiteWriteLayout.distributionFor(partCols, sortedBy)
+    if (deleteOnly) Distributions.unspecified() else stage.distribution
   override def requiredOrdering(): Array[SortOrder] =
-    if (deleteOnly || transformSpec.nonEmpty) Array.empty
-    else IceLiteWriteLayout.orderingFor(partCols, sortedBy)
+    if (deleteOnly) Array.empty else stage.ordering
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
     require(!rowSchema.fieldNames.contains("_file") &&
         !rowSchema.fieldNames.contains("_pos"),
       s"delta $opName write schema leaked a metadata column")
-    java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    java.nio.file.Files.createDirectories(ref.deletesDir.resolve(delToken))
-    new IceLiteDeltaWriterFactory(
-      ref.dataDir.resolve(token).toString,
-      ref.deletesDir.resolve(delToken).toString,
-      rowSchema, partCols, transformSpec, tz)
+    new IceLiteDeltaWriterFactory(stage.factory(rowSchema), delDir.toString)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1282,62 +1288,45 @@ class IceLiteDeltaWrite(ref: TableRef, rowSchema: StructType,
       s"delta $opName write committed before its scan planned"))
     val msgs = messages.collect { case m: IceLiteDeltaCommitMessage => m }
     val sidecars = msgs.flatMap(_.posFile)
-      .map(n => s"deletes/$delToken/$n").toSeq.sorted
-    val staged: Seq[String] =
-      if (partCols.nonEmpty || transformSpec.nonEmpty)
-        IceLite.promoteStagedPartitioned(ref, token,
-          msgs.flatMap(_.dataFiles).toSeq)
-      else msgs.flatMap(_.dataFiles).map(n => s"data/$token/$n").toSeq.sorted
-    if (sidecars.isEmpty && staged.isEmpty) { cleanupStage(); return }
-    IceLite.commitDelta(org.apache.spark.sql.SparkSession.active, ref,
-      scanned, staged, sidecars, opName)
-    cleanupStage()
+      .map(n => s"deletes/${delDir.getFileName}/$n").toSeq.sorted
+    val staged = stage.files(msgs.flatMap(_.dataFiles).toSeq)
+    if (sidecars.nonEmpty || staged.nonEmpty)
+      IceLite.commitDelta(org.apache.spark.sql.SparkSession.active, ref,
+        scanned, staged, sidecars, opName)
+    // a statement that only deleted (or only inserted) leaves the
+    // other stage dir empty
+    Seq(stage.dir, delDir).foreach { dir =>
+      if (java.nio.file.Files.exists(dir) &&
+          IceLite.listDir(java.nio.file.Files.list(dir))(_.isEmpty))
+        java.nio.file.Files.deleteIfExists(dir)
+    }
   }
 
-  private def cleanupStage(): Unit =
-    Seq(ref.dataDir.resolve(token), ref.deletesDir.resolve(delToken))
-      .foreach { dir =>
-        if (java.nio.file.Files.exists(dir) &&
-            IceLite.listDir(java.nio.file.Files.list(dir))(_.toSeq).isEmpty)
-          { java.nio.file.Files.deleteIfExists(dir); () }
-      }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    Seq(ref.dataDir.resolve(token), ref.deletesDir.resolve(delToken))
-      .foreach { dir =>
-        if (java.nio.file.Files.exists(dir))
-          IceLite.listDir(java.nio.file.Files.walk(dir))(_.toSeq)
-            .sortBy(-_.getNameCount)
-            .foreach(p => scala.util.Try(java.nio.file.Files.deleteIfExists(p)))
-      }
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    stage.abort()
+    IceLiteWriteStage.deleteTree(delDir)
+  }
 }
 
 case class IceLiteDeltaCommitMessage(dataFiles: Seq[String],
     posFile: Option[String]) extends WriterCommitMessage
 
-class IceLiteDeltaWriterFactory(dataStageDir: String, delStageDir: String,
-    rowSchema: StructType, partCols: Seq[String],
-    spec: Seq[graft.icelite.PartitionField], timeZoneId: String)
+class IceLiteDeltaWriterFactory(data: IceLiteWriterFactory,
+    delStageDir: String)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  private val conf = IceLiteDataWriter.writeConf()
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new IceLiteDeltaWriter(dataStageDir, delStageDir,
-      f"part-$partitionId%05d-$taskId.parquet", rowSchema, partCols,
-      spec, timeZoneId, conf)
+    new IceLiteDeltaWriter(data, partitionId, taskId, delStageDir)
 }
 
 /** Per-task delta writer: `delete(meta, id)` appends the row's
   * `(file_path, pos)` identity to this task's position-delete
-  * sidecar; `insert(row)` routes through the same layout writer an
-  * ordinary append would use (flat / identity value dirs / transform
-  * value dirs). Updates arrive pre-split (delete + reinsert). Both
-  * writers open lazily — a task that only deletes stages no data
-  * file and vice versa. */
-class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
-    fileName: String, rowSchema: StructType, partCols: Seq[String],
-    spec: Seq[graft.icelite.PartitionField], timeZoneId: String,
-    conf: Map[String, String])
+  * sidecar; `insert(row)` writes through the statement's writer
+  * factory, exactly as an ordinary append would. Updates arrive
+  * pre-split (delete + reinsert). Both writers open lazily — a task
+  * that only deletes stages no data file and vice versa. */
+class IceLiteDeltaWriter(data: IceLiteWriterFactory, partitionId: Int,
+    taskId: Long, delStageDir: String)
   extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
 
   private var posWriter: IceLiteDataWriter = _
@@ -1346,9 +1335,10 @@ class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     if (posWriter == null)
-      posWriter = new IceLiteDataWriter(delStageDir, fileName,
+      posWriter = new IceLiteDataWriter(delStageDir,
+        f"part-$partitionId%05d-$taskId.parquet",
         new StructType().add("file_path", StringType).add("pos", LongType),
-        conf)
+        data.conf)
     // rowId projection order is rowId(): (_file string, _pos long)
     delRow.update(0, id.getUTF8String(0))
     delRow.update(1, id.getLong(1))
@@ -1357,14 +1347,7 @@ class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
 
   override def insert(row: InternalRow): Unit = {
     if (insertWriter == null)
-      insertWriter =
-        if (spec.nonEmpty)
-          new IceLiteTransformedDataWriter(dataStageDir, fileName,
-            rowSchema, spec, timeZoneId, conf)
-        else if (partCols.nonEmpty)
-          new IceLitePartitionedDataWriter(dataStageDir, fileName,
-            rowSchema, partCols, conf)
-        else new IceLiteDataWriter(dataStageDir, fileName, rowSchema, conf)
+      insertWriter = data.createWriter(partitionId, taskId)
     insertWriter.write(row)
   }
 
@@ -1374,15 +1357,11 @@ class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
       row: InternalRow): Unit = { delete(meta, id); insert(row) }
 
   override def commit(): WriterCommitMessage = {
-    val pos = Option(posWriter).map(_.commit()).collect {
-      case IceLiteCommitMessage(n) if n != null => n
-    }
-    val data: Seq[String] = Option(insertWriter).map(_.commit()) match {
-      case Some(IceLiteCommitMessage(n)) if n != null => Seq(n)
-      case Some(IceLitePartitionedCommitMessage(fs)) => fs
-      case _ => Nil
-    }
-    IceLiteDeltaCommitMessage(data, pos)
+    def staged(w: DataWriter[InternalRow]): Seq[String] =
+      Option(w).toSeq.flatMap(_.commit() match {
+        case IceLiteCommitMessage(fs) => fs
+      })
+    IceLiteDeltaCommitMessage(staged(insertWriter), staged(posWriter).headOption)
   }
   override def abort(): Unit = {
     Option(posWriter).foreach(_.abort())
@@ -1394,12 +1373,13 @@ class IceLiteDeltaWriter(dataStageDir: String, delStageDir: String,
   }
 }
 
-/** The write-layout contract shared by every IceLite batch write
-  * (local append/overwrite, row-level replace, REST variants):
+/** The write-layout contract of every IceLite write stage:
   * identity-partitioned targets CLUSTER rows by partition value (one
-  * file per task × partition, d67); sorted targets RANGE-partition
-  * and order on the sort key so appends land range-clustered with
-  * tight disjoint stats (d54); flat targets impose nothing. */
+  * file per task × partition, d67); hidden-partition targets cluster
+  * by their transforms' SOURCE columns (d84); sorted flat targets
+  * RANGE-partition and order on the sort key so appends land
+  * range-clustered with tight disjoint stats (d54); flat targets
+  * impose nothing. */
 private[graft] object IceLiteWriteLayout {
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
   import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
@@ -1438,77 +1418,180 @@ private[graft] object IceLiteWriteLayout {
       }): SortOrder
     }.toArray
 
+  private def clustered(cols: Seq[String]): Distribution =
+    Distributions.clustered(cols.map(c => Expressions.identity(c): org
+      .apache.spark.sql.connector.expressions.Expression).toArray)
+
   def distributionFor(partCols: Seq[String],
+      spec: Seq[graft.icelite.PartitionField],
       sortCol: Option[String]): Distribution =
-    if (partCols.nonEmpty)
-      Distributions.clustered(partCols.map(c =>
-        Expressions.identity(c): org.apache.spark.sql.connector
-          .expressions.Expression).toArray)
+    // a transform target clusters by the SOURCE columns: same source
+    // value ⇒ same derived dir, so each task opens a bounded set of
+    // dir writers. Coarser than clustering by the derived value (a
+    // bucket dir can collect files from several tasks — normal
+    // maintenance compaction absorbs them), but it needs no
+    // FunctionCatalog registration for Spark to resolve
+    if (spec.nonEmpty) clustered(spec.map(_.sourceCol).distinct)
+    else if (partCols.nonEmpty) clustered(partCols)
     else sortCol match {
       case Some(enc) => Distributions.ordered(sortOrders(enc))
       case None => Distributions.unspecified()
     }
 
   def orderingFor(partCols: Seq[String],
+      spec: Seq[graft.icelite.PartitionField],
       sortCol: Option[String]): Array[SortOrder] = sortCol match {
-    case Some(enc) if partCols.isEmpty => sortOrders(enc)
+    case Some(enc) if partCols.isEmpty && spec.isEmpty => sortOrders(enc)
     case _ => Array.empty
   }
 }
 
-/** The write half of ReplaceData: stages rewritten rows like any
-  * batch write, then commits ONE snapshot that removes the scanned
-  * file groups and adds the staged files (IceLite.commitReplace —
-  * concurrent appends rebase and survive; a concurrent rewrite of a
-  * scanned file fails the statement loudly). A SORTED table asks
-  * Spark to range-partition and sort the rewritten rows on the sort
-  * key (RequiresDistributionAndOrdering), so the table's clustering
-  * — and with it stats-pruning precision — survives the SQL rewrite
-  * without a connector-side second pass. */
-class IceLiteReplaceWrite(ref: TableRef, schema: StructType,
-    op: IceLiteRowLevelOperation, opName: String)
-  extends Write with BatchWrite
-  with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-  import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+/** One write statement's stage: its layout, read once from the
+  * manifest, and the token dir `data/<token>/` its tasks stage into.
+  * Every connector write — INSERT INTO / OVERWRITE, CTAS/RTAS,
+  * copy-on-write rewrites, the inserts of a merge-on-read delta,
+  * streaming epochs, on the owning catalog and the REST attachment
+  * alike — states its layout here and nowhere else:
+  *  - the one writer factory ([[IceLiteWriterFactory]]);
+  *  - the distribution and ordering Spark must give the rows;
+  *  - the staged files' table paths: flat files stay at
+  *    `data/<token>/<name>`, value-dir files are promoted into
+  *    `data/part/` (a rename per file, data-plane; nothing is visible
+  *    until the commit);
+  *  - the [[CommitReq]] an append or overwrite makes of them.
+  * Pre-commit files are invisible to readers and reclaimable by
+  * orphan GC if the job dies. */
+private[sources] final class IceLiteWriteStage(val ref: TableRef,
+    val partCols: Seq[String], val spec: Seq[graft.icelite.PartitionField],
+    val sortCol: Option[String]) {
+  import graft.icelite.PartitionedWriteMode._
 
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-  // the DECLARED order (d89) steers rewrites too — rewritten rows
-  // land clustered the way the table wants new data to land
-  private def sortedBy: Option[String] = IceLite.effectiveSortCol(ref)
-  /** d69: identity partition columns — a partitioned rewrite stages
-    * through Hive value dirs (the d67 writer) so the layout, and the
-    * pruning it feeds, survives SQL UPDATE/MERGE/DELETE. */
-  private val partCols: Seq[String] =
-    IceLiteSource.resolveSnap(ref, None).partitionCols
-  /** d56×d42: HIDDEN-PARTITION rewrites restage through the CURRENT
-    * snapshot's transform spec (rewriteWhere parity) — the source
-    * columns live in the data pages, so executors re-derive the
-    * value dirs with the same bound Catalyst ops the d84 INSERT
-    * writer uses, and the layout (and its pruning) survives SQL
-    * DELETE/UPDATE/MERGE on a bucket/days/truncate table. */
-  private val transformSpec: Seq[graft.icelite.PartitionField] =
-    IceLiteSource.resolveSnap(ref, None).partitionSpec
-  // session timezone at plan time: days() dirs must match the engine
-  // API's date_format staging (same rule as IceLiteTransformedBatchWrite)
+  val token: String = java.util.UUID.randomUUID.toString.take(8)
+  val dir: java.nio.file.Path = ref.dataDir.resolve(token)
+  // the SESSION timezone at plan time: days() dirs must match what
+  // the engine API's date_format would stage
   private val tz = org.apache.spark.sql.SparkSession.active
     .sessionState.conf.sessionLocalTimeZone
+
+  def flat: Boolean = partCols.isEmpty && spec.isEmpty
+  /** d54: Spark honors a sorted flat target's range distribution and
+    * sort, so the staged files are range-clustered and the snapshot
+    * may KEEP the table's sortedBy marker. */
+  def clustered: Boolean = flat && sortCol.isDefined
+
+  def distribution: org.apache.spark.sql.connector.distributions.Distribution =
+    IceLiteWriteLayout.distributionFor(partCols, spec, sortCol)
+  def ordering: Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    IceLiteWriteLayout.orderingFor(partCols, spec, sortCol)
+
+  def factory(schema: StructType): IceLiteWriterFactory =
+    new IceLiteWriterFactory(dir.toString, schema, partCols, spec, tz,
+      IceLiteDataWriter.writeConf())
+
+  /** Table-relative paths of the staged files `rels` (relative to the
+    * token dir), value-dir files promoted first. */
+  def files(rels: Seq[String]): Seq[String] =
+    if (flat) rels.map(n => s"data/$token/$n").sorted
+    else IceLite.promoteStagedPartitioned(ref, token, rels)
+
+  def files(messages: Array[WriterCommitMessage]): Seq[String] =
+    files(IceLiteWriteStage.staged(messages))
+
+  /** The commit an append or overwrite of `files` asks for. */
+  def request(mode: graft.icelite.PartitionedWriteMode,
+      files: Seq[String]): CommitReq =
+    if (spec.nonEmpty)
+      CommitReq(if (mode == Append) "append-transformed"
+        else "overwrite-transformed", files)
+    else if (partCols.nonEmpty) mode match {
+      case Append => CommitReq("append-partitioned", files)
+      case ReplaceAll => CommitReq("overwrite-partitioned", files,
+        mode = Some("all"))
+      case ReplaceDynamic => CommitReq("overwrite-partitioned", files,
+        mode = Some("dynamic"))
+      case ReplaceWhere(eq) => CommitReq("overwrite-partitioned", files,
+        mode = Some("static"), eq = eq)
+    } else CommitReq(if (mode == Append) "append" else "overwrite", files,
+      keepSorted = clustered)
+
+  /** Delete everything staged, deepest first (value dirs before the
+    * token dir). */
+  def abort(): Unit = IceLiteWriteStage.deleteTree(dir)
+
+  /** Delete only the files `messages` name, then the dirs that leaves
+    * empty: a streaming stage serves every epoch of a run, and a flat
+    * epoch's committed files stay in it. */
+  def drop(messages: Array[WriterCommitMessage]): Unit = {
+    IceLiteWriteStage.staged(messages).foreach(r =>
+      java.nio.file.Files.deleteIfExists(dir.resolve(r)))
+    // a dir still holding files refuses the delete
+    IceLiteWriteStage.walkDeepestFirst(dir)(p =>
+      if (java.nio.file.Files.isDirectory(p))
+        scala.util.Try(java.nio.file.Files.delete(p)))
+  }
+}
+
+private[sources] object IceLiteWriteStage {
+  /** A write's stage: the layout the NEXT write must land — the
+    * DECLARED one while a d83/d85 spec evolution is pending — and the
+    * declared order (d89) over the whole-table marker. A path holding
+    * no table yet stages flat. */
+  def apply(ref: TableRef): IceLiteWriteStage =
+    if (!IceLite.tableExists(ref)) new IceLiteWriteStage(ref, Nil, Nil, None)
+    else {
+      val m = IceLite.readManifest(ref)
+      new IceLiteWriteStage(ref, m.writeLayoutCols, m.writeLayoutSpec,
+        IceLite.effectiveSortCol(m))
+    }
+
+  /** A row-level rewrite's stage: the CURRENT snapshot's layout, which
+    * the commit swaps files inside (d69, d56×d42: identity value dirs
+    * and re-derived transform dirs, so the layout and the pruning it
+    * feeds survive SQL DELETE/UPDATE/MERGE). */
+  def rewrite(ref: TableRef): IceLiteWriteStage = {
+    val m = IceLite.readManifest(ref)
+    new IceLiteWriteStage(ref, m.current.partitionCols,
+      m.current.partitionSpec, IceLite.effectiveSortCol(m))
+  }
+
+  private def staged(messages: Array[WriterCommitMessage]): Seq[String] =
+    messages.toSeq.collect { case IceLiteCommitMessage(fs) => fs }.flatten
+
+  private[sources] def walkDeepestFirst(dir: java.nio.file.Path)(
+      f: java.nio.file.Path => Unit): Unit =
+    if (java.nio.file.Files.exists(dir))
+      IceLite.listDir(java.nio.file.Files.walk(dir))(_.toSeq)
+        .sortBy(-_.getNameCount).foreach(f)
+
+  private[sources] def deleteTree(dir: java.nio.file.Path): Unit =
+    walkDeepestFirst(dir)(p =>
+      scala.util.Try(java.nio.file.Files.deleteIfExists(p)))
+}
+
+/** The write half of ReplaceData: stages rewritten rows through the
+  * statement's [[IceLiteWriteStage]], then commits ONE snapshot that
+  * removes the scanned file groups and adds the staged files (the
+  * `replace` [[CommitReq]], IceLite.commitReplace — concurrent appends
+  * rebase and survive; a concurrent rewrite of a scanned file fails
+  * the statement loudly). A SORTED table asks Spark to range-partition
+  * and sort the rewritten rows on the DECLARED sort key (d89), so the
+  * table's clustering — and with it stats-pruning precision — survives
+  * the SQL rewrite without a connector-side second pass. */
+class IceLiteReplaceWrite(ref: TableRef, schema: StructType,
+    op: IceLiteRowLevelOperation, opName: String,
+    publish: CommitReq => Unit)
+  extends Write with BatchWrite
+  with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  import org.apache.spark.sql.connector.distributions.Distribution
+  import org.apache.spark.sql.connector.expressions.SortOrder
+
+  private val stage = IceLiteWriteStage.rewrite(ref)
 
   override def toBatch: BatchWrite = this
   override def description(): String = s"IceLiteReplaceWrite $opName ${ref.name}"
 
-  override def requiredDistribution(): Distribution =
-    if (transformSpec.nonEmpty)
-      // cluster by the SOURCE columns (same rationale as the d84
-      // append path: same source value ⇒ same derived dir, bounded
-      // per-task dir writers, no FunctionCatalog registration needed)
-      Distributions.clustered(transformSpec.map(_.sourceCol).distinct
-        .map(c => Expressions.identity(c): org.apache.spark.sql
-          .connector.expressions.Expression).toArray)
-    else IceLiteWriteLayout.distributionFor(partCols, sortedBy)
-  override def requiredOrdering(): Array[SortOrder] =
-    if (transformSpec.nonEmpty) Array.empty
-    else IceLiteWriteLayout.orderingFor(partCols, sortedBy)
+  override def requiredDistribution(): Distribution = stage.distribution
+  override def requiredOrdering(): Array[SortOrder] = stage.ordering
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // the preserve flags on _file are off, so the rewrite writes pure
@@ -1516,15 +1599,7 @@ class IceLiteReplaceWrite(ref: TableRef, schema: StructType,
     // regressed and the rewrite would bake `_file` into the data
     require(!schema.fieldNames.contains("_file"),
       s"row-level $opName write schema leaked the _file metadata column")
-    java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    if (transformSpec.nonEmpty)
-      new IceLiteTransformedWriterFactory(
-        ref.dataDir.resolve(token).toString, schema, transformSpec, tz)
-    else if (partCols.nonEmpty)
-      new IceLitePartitionedWriterFactory(
-        ref.dataDir.resolve(token).toString, schema, partCols)
-    else
-      new IceLiteWriterFactory(ref.dataDir.resolve(token).toString, schema)
+    stage.factory(schema)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1537,47 +1612,27 @@ class IceLiteReplaceWrite(ref: TableRef, schema: StructType,
         "an audit session; publish/drop the branch or unset the conf")
     val removed = op.scannedFiles.getOrElse(throw new IllegalStateException(
       s"row-level $opName write committed before its scan planned files"))
-    val staged: Seq[String] =
-      if (partCols.nonEmpty || transformSpec.nonEmpty) {
-        // identity AND transform writers stage under value dirs; the
-        // same promotion moves both (value paths are value paths)
-        val rels = messages.collect {
-          case IceLitePartitionedCommitMessage(fs) => fs
-        }.flatten.toSeq
-        IceLite.promoteStagedPartitioned(ref, token, rels)
-      } else messages.collect {
-        case IceLiteCommitMessage(name) if name != null => s"data/$token/$name"
-      }.toSeq.sorted
-    if (removed.isEmpty && staged.isEmpty) ()  // nothing matched, nothing inserted
-    else commitReplaced(removed.toSet, staged)
+    val staged = stage.files(messages)
+    // nothing matched and nothing inserted: no snapshot
+    if (removed.nonEmpty || staged.nonEmpty)
+      publish(CommitReq("replace", added = staged,
+        removed = removed.distinct.sorted, opName = Some(opName)))
   }
 
-  /** The single metadata commit of the rewrite — swap the scanned
-    * groups for the staged files. The REST attachment overrides this
-    * to route the SAME swap through the catalog service's commit
-    * protocol (staging and promotion above are data-plane and stay
-    * client-side). */
-  protected def commitReplaced(removed: Set[String], staged: Seq[String]): Unit =
-    IceLite.commitReplace(ref, removed, staged, opName)
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = ref.dataDir.resolve(token)
-    if (java.nio.file.Files.exists(dir)) {
-      IceLite.listDir(java.nio.file.Files.list(dir))(_.toSeq)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      java.nio.file.Files.deleteIfExists(dir)
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    stage.abort()
 }
 
 /** Write side of the connector (d26): `df.write.format(...)
-  * .mode("append"|"overwrite").save(<table dir>)`. Append plans
-  * `AppendData`; overwrite requires TRUNCATE and replaces the table
-  * in the same snapshot that adds the new files. The target table
-  * must exist (path-based V2 providers have no catalog to register a
-  * creation in — IceLite.createOrReplace is the create path, as the
-  * REST catalog is for Iceberg). */
-class IceLiteWriteBuilder(ref: TableRef, info: LogicalWriteInfo)
+  * .mode("append"|"overwrite").save(<table dir>)` and SQL INSERT INTO /
+  * INSERT OVERWRITE on either catalog. Append plans `AppendData`;
+  * overwrite requires TRUNCATE and replaces the table in the same
+  * snapshot that adds the new files. The target table must exist
+  * (path-based V2 providers have no catalog to register a creation
+  * in — IceLite.createOrReplace is the create path, as the REST
+  * catalog is for Iceberg). `publish` is the table's commit hook. */
+class IceLiteWriteBuilder(ref: TableRef, info: LogicalWriteInfo,
+    publish: CommitReq => Unit)
   extends WriteBuilder with SupportsTruncate
   with org.apache.spark.sql.connector.write.SupportsOverwrite
   with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
@@ -1619,101 +1674,57 @@ class IceLiteWriteBuilder(ref: TableRef, info: LogicalWriteInfo)
 
   override def build(): Write = new Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+    import org.apache.spark.sql.connector.distributions.Distribution
+    import org.apache.spark.sql.connector.expressions.SortOrder
 
-    /** Identity partition columns the WRITE must use (empty = flat) —
-      * the declared layout when a d83 spec evolution is pending,
-      * the current snapshot's otherwise. */
-    private val partCols: Seq[String] =
-      if (!IceLite.tableExists(ref)) Nil
-      else IceLite.readManifest(ref).writeLayoutCols
-
-    /** d84: hidden-partition (transform, d56) layout — SQL writes
-      * derive the value dirs per row with the same Catalyst ops the
-      * engine API uses. The DECLARED spec when a d85 evolution is
-      * pending (flat→transform included), the current snapshot's
-      * otherwise. Static/dynamic PARTITION overwrites refuse: a
-      * PARTITION clause names DERIVED values hidden partitioning
-      * exists to hide (Iceberg's rule too — you overwrite by
-      * predicate, not by derived dir). */
-    private val transformSpec: Seq[graft.icelite.PartitionField] =
-      if (!IceLite.tableExists(ref)) Nil
-      else IceLite.readManifest(ref).writeLayoutSpec
+    /** The declared layout when a d83/d85 spec evolution is pending
+      * (flat→transform included), the current snapshot's otherwise.
+      * A sorted table (d54) — or one with a DECLARED order (d89 WRITE
+      * ORDERED BY) — asks Spark to range-partition and sort the
+      * incoming rows on its key, so INSERT INTO lands range-clustered
+      * files with tight disjoint stats (Iceberg's
+      * write.distribution-mode=range on the SQL write path). */
+    private val stage = IceLiteWriteStage(ref)
 
     locally {
-      if (transformSpec.nonEmpty) {
+      // d84: a PARTITION clause names DERIVED values hidden
+      // partitioning exists to hide (Iceberg's rule too — you
+      // overwrite by predicate, not by derived dir)
+      if (stage.spec.nonEmpty) {
         require(overwriteEq.isEmpty && !dynamic,
           s"${ref.name} is hidden-partitioned — a PARTITION clause " +
             "names derived values the transforms exist to hide; " +
             "INSERT INTO appends, plain INSERT OVERWRITE truncates")
-        transformSpec.foreach(f => require(
+        stage.spec.foreach(f => require(
           !info.schema().fieldNames.contains(f.name),
           s"derived partition name '${f.name}' collides with a " +
             "written column"))
       }
-      require(partCols.nonEmpty || (overwriteEq.isEmpty && !dynamic),
+      require(stage.partCols.nonEmpty || (overwriteEq.isEmpty && !dynamic),
         s"${ref.name} is not partitioned — partition overwrite does " +
           "not apply (plain INSERT OVERWRITE truncates)")
     }
 
-    /** d54: a SORTED table asks Spark to range-partition and sort the
-      * incoming rows on its sort key, so every INSERT INTO / append
-      * lands as range-clustered files with tight disjoint stats and
-      * the table KEEPS its `sortedBy` layout marker (and with it
-      * stats-pruning precision and layout-preserving rewrites) —
-      * Iceberg's write.distribution-mode=range on the SQL write path.
-      * A DECLARED order (d89 WRITE ORDERED BY) steers writes the same
-      * way from the flip onward — the snapshot marker itself lands
-      * only when compact() proves the whole table. */
-    private val sortCol: Option[String] =
-      if (IceLite.tableExists(ref)) IceLite.effectiveSortCol(ref)
-      else None
+    override def requiredDistribution(): Distribution = stage.distribution
+    override def requiredOrdering(): Array[SortOrder] = stage.ordering
 
-    override def requiredDistribution(): Distribution =
-      if (transformSpec.nonEmpty)
-        // cluster by the SOURCE columns: same source value ⇒ same
-        // derived dir, so each task opens a bounded set of dir
-        // writers. Coarser than clustering by the derived value (a
-        // bucket dir can collect files from several tasks — normal
-        // maintenance compaction absorbs them), but it needs no
-        // FunctionCatalog registration for Spark to resolve
-        Distributions.clustered(transformSpec.map(_.sourceCol).distinct
-          .map(c => Expressions.identity(c): org.apache.spark.sql
-            .connector.expressions.Expression).toArray)
-      else IceLiteWriteLayout.distributionFor(partCols, sortCol)
-    override def requiredOrdering(): Array[SortOrder] =
-      if (transformSpec.nonEmpty) Array.empty
-      else IceLiteWriteLayout.orderingFor(partCols, sortCol)
-
-    override def toBatch: BatchWrite =
-      if (transformSpec.nonEmpty)
-        new IceLiteTransformedBatchWrite(ref, info.schema(), transformSpec,
-          replace)
-      else if (partCols.nonEmpty) {
-        import graft.icelite.PartitionedWriteMode._
-        val mode =
-          if (dynamic) ReplaceDynamic
-          else overwriteEq.map(ReplaceWhere(_))
-            .getOrElse(if (replace) ReplaceAll else Append)
-        new IceLitePartitionedBatchWrite(ref, info.schema(), partCols, mode)
-      } else
-        new IceLiteBatchWrite(ref, info.schema(), replace,
-          clustered = sortCol.isDefined)
+    override def toBatch: BatchWrite = {
+      import graft.icelite.PartitionedWriteMode._
+      val mode =
+        if (dynamic) ReplaceDynamic
+        else overwriteEq.map(ReplaceWhere(_))
+          .getOrElse(if (replace) ReplaceAll else Append)
+      new IceLiteBatchWrite(stage, info.schema(), mode, publish)
+    }
     override def toStreaming: StreamingWrite = {
       require(!replace,
         "icelite streaming sink is append-only (complete/truncate modes " +
           "would replace the table every epoch)")
-      require(transformSpec.isEmpty,
+      require(stage.spec.isEmpty,
         s"${ref.name} is hidden-partitioned — the streaming sink does " +
           "not derive transform dirs; write through a foreachBatch " +
           "calling IceLite.appendTransformed")
-      if (partCols.nonEmpty)
-        // s21: streaming fanout into an identity-partitioned table —
-        // each epoch's rows land in their Hive value dirs, one CAS
-        // append snapshot per epoch with the exactly-once marker
-        new IceLitePartitionedStreamingWrite(ref, info.schema(), partCols)
-      else new IceLiteStreamingWrite(ref, info.schema())
+      new IceLiteStreamingWrite(stage, info.schema())
     }
     override def description(): String =
       s"IceLiteWrite ${ref.name} " +
@@ -1723,84 +1734,24 @@ class IceLiteWriteBuilder(ref: TableRef, info: LogicalWriteInfo)
   }
 }
 
-/** d67: batch write for identity-partitioned tables — executors stage
-  * Hive-layout files under `data/<token>/`, the driver's commit moves
-  * them into `data/part/` (rename, zero bytes) and resolves the
-  * overwrite mode in ONE CAS snapshot (IceLite.commitStagedPartitioned). */
-class IceLitePartitionedBatchWrite(ref: TableRef, schema: StructType,
-    partitionCols: Seq[String], mode: graft.icelite.PartitionedWriteMode)
+/** The one batch write of INSERT INTO / INSERT OVERWRITE, on every
+  * layout (flat d26, identity d67, hidden-partition d84) and both
+  * catalogs: executors stage through the statement's
+  * [[IceLiteWriteStage]], and the driver's commit turns the staged
+  * set into ONE snapshot, so concurrent appends rebase rather than
+  * clobber and a reader never sees a partial write. File stats come
+  * from the parquet footers at commit (no second scan). `mode` is
+  * how the write resolves against existing files; `publish` applies
+  * or POSTs the commit request. */
+class IceLiteBatchWrite(stage: IceLiteWriteStage, schema: StructType,
+    mode: graft.icelite.PartitionedWriteMode, publish: CommitReq => Unit)
   extends BatchWrite {
-  private val token = java.util.UUID.randomUUID.toString.take(8)
+  import graft.icelite.PartitionedWriteMode.Append
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    new IceLitePartitionedWriterFactory(
-      ref.dataDir.resolve(token).toString, schema, partitionCols)
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    stage.factory(schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val wap = org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.wap.branch").filter(_.nonEmpty)
-    val files = messages.collect {
-      case IceLitePartitionedCommitMessage(fs) => fs
-    }.flatten.toSeq
-    import graft.icelite.PartitionedWriteMode.Append
-    wap match {
-      case Some(branch) =>
-        // d60×d67: WAP routing for partitioned APPENDS — the staged
-        // files promote into their value dirs (invisible: no snapshot
-        // references them until the branch commit) and the branch
-        // snapshot carries the partition layout. Overwrites cannot be
-        // staged (same rule as the flat sink: publish is a
-        // fast-forward, a truncate-under-audit would hide the
-        // destructive part until publish).
-        require(mode == Append,
-          "spark.wap.branch is set — INSERT OVERWRITE cannot be staged " +
-            "to a WAP branch; unset the conf to overwrite")
-        if (files.nonEmpty) {
-          val moved = IceLite.promoteStagedPartitioned(ref, token, files)
-          IceLite.commitStagedToBranch(ref, branch, moved,
-            keepSorted = false); ()
-        }
-      case None =>
-        if (files.nonEmpty || mode != Append) {
-          IceLite.commitStagedPartitioned(ref, token, files, mode); ()
-        }
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = ref.dataDir.resolve(token)
-    if (java.nio.file.Files.exists(dir))
-      IceLite.listDir(java.nio.file.Files.walk(dir))(_.toSeq)
-        .sortBy(-_.getNameCount)
-        .foreach(p => scala.util.Try(java.nio.file.Files.deleteIfExists(p)))
-  }
-}
-
-case class IceLiteCommitMessage(fileName: String) extends WriterCommitMessage
-
-/** Executors stage one parquet file per non-empty input partition
-  * under data/<token>/ (the same staging layout IceLite's own writers
-  * use — pre-commit files are invisible to readers and reclaimable by
-  * orphan GC if the job dies); the driver's commit() turns the staged
-  * set into ONE CAS manifest snapshot, so concurrent appends rebase
-  * rather than clobber and a reader never sees a partial write. File
-  * stats come from the parquet footers at commit (no second scan). */
-class IceLiteBatchWrite(ref: TableRef, schema: StructType, replace: Boolean,
-    clustered: Boolean = false)
-  extends BatchWrite {
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    new IceLiteWriterFactory(ref.dataDir.resolve(token).toString, schema)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case IceLiteCommitMessage(name) if name != null => s"data/$token/$name"
-    }.toSeq.sorted
     // d60: Iceberg's session-conf WAP routing — with `spark.wap.branch`
     // set, INSERT INTO stages its snapshot under the branch and main
     // does not move until `CALL system.publish_branch`. Appends only:
@@ -1809,230 +1760,134 @@ class IceLiteBatchWrite(ref: TableRef, schema: StructType, replace: Boolean,
     // destructive part until publish) — refuse loudly instead.
     val wap = org.apache.spark.sql.SparkSession.active.conf
       .getOption("spark.wap.branch").filter(_.nonEmpty)
+    if (wap.isDefined) {
+      require(stage.spec.isEmpty,
+        "spark.wap.branch is set — hidden-partition writes cannot be " +
+          "staged to a WAP branch; unset the conf")
+      require(mode == Append,
+        if (stage.flat) "spark.wap.branch is set — INSERT OVERWRITE / " +
+          "truncate cannot be staged to a WAP branch; unset the conf to overwrite"
+        else "spark.wap.branch is set — INSERT OVERWRITE cannot be staged " +
+          "to a WAP branch; unset the conf to overwrite")
+    }
+    val files = stage.files(messages)
     wap match {
       case Some(branch) =>
-        require(!replace,
-          "spark.wap.branch is set — INSERT OVERWRITE / truncate " +
-            "cannot be staged to a WAP branch; unset the conf to overwrite")
+        // d60×d67: partitioned files are promoted into their value
+        // dirs, invisible until the branch commit references them
         if (files.nonEmpty) {
-          IceLite.commitStagedToBranch(ref, branch, files,
-            keepSorted = clustered); ()
+          IceLite.commitStagedToBranch(stage.ref, branch, files,
+            keepSorted = stage.clustered); ()
         }
       case None =>
-        // `clustered`: Spark honored this write's range distribution +
-        // sort requirement (d54), so the staged files are range-clustered
-        // and the snapshot may KEEP the table's sortedBy layout marker
-        if (files.nonEmpty || replace)
-          IceLite.commitStaged(ref, files, replace, keepSorted = clustered)
-        else ()  // empty append: no snapshot (nothing changed)
+        // an empty append makes no snapshot (nothing changed)
+        if (files.nonEmpty || mode != Append)
+          publish(stage.request(mode, files))
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = ref.dataDir.resolve(token)
-    if (java.nio.file.Files.exists(dir)) {
-      IceLite.listDir(java.nio.file.Files.list(dir))(_.toSeq)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      java.nio.file.Files.deleteIfExists(dir)
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    stage.abort()
 }
 
-class IceLiteWriterFactory(dir: String, schema: StructType)
-  extends DataWriterFactory {
-  private val conf = IceLiteDataWriter.writeConf()
+/** What one write task staged: paths relative to its stage's token
+  * dir (value-dir files carry their dirs). A 0-row task sends none. */
+case class IceLiteCommitMessage(files: Seq[String]) extends WriterCommitMessage
+
+/** The connector's one writer factory: each task writes its rows to
+  * one flat parquet file or, on identity and hidden-partition layouts,
+  * to one file per value dir ([[IceLitePartitionedDataWriter]]).
+  * Streaming tasks name their files by epoch. */
+class IceLiteWriterFactory(stageDir: String, schema: StructType,
+    partCols: Seq[String], spec: Seq[graft.icelite.PartitionField],
+    timeZoneId: String, val conf: Map[String, String])
+  extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLiteDataWriter(dir, f"part-$partitionId%05d-$taskId.parquet",
-      schema, conf)
+    writer(f"part-$partitionId%05d-$taskId.parquet")
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    writer(f"part-e$epochId-$partitionId%05d-$taskId.parquet")
+
+  private def writer(name: String): DataWriter[InternalRow] =
+    if (partCols.isEmpty && spec.isEmpty)
+      new IceLiteDataWriter(stageDir, name, schema, conf)
+    else new IceLitePartitionedDataWriter(stageDir, name, schema, partCols,
+      spec, timeZoneId, conf)
 }
 
-/** d67: files staged by one partitioned-write task, paths relative to
-  * the staging token dir and carrying their Hive value dirs. */
-case class IceLitePartitionedCommitMessage(files: Seq[String])
-  extends WriterCommitMessage
-
-/** d67: partitioned DSv2 writer — routes each row to the parquet file
-  * of its partition-value tuple (`<token>/<a>=<v>/part-….parquet`),
-  * writing DATA columns only (partition values live in the path, the
-  * same contract as IceLite.stagePartitioned). The write requires a
-  * CLUSTERED distribution on the partition columns, so a task
+/** d67/d84: routes each row to the parquet file of its value dir
+  * (`<token>/<a>=<v>/part-….parquet`). Identity layouts write DATA
+  * columns only: the partition values live in the path, the same
+  * contract as IceLite.stagePartitioned. Hidden-partition layouts
+  * derive each dir value with BOUND Catalyst expressions (bucket =
+  * pmod(murmur3-seed-42, N), days = session-tz yyyy-MM-dd, truncate =
+  * leading substring — exactly `IceLite.transformExpr`, so SQL writes
+  * and engine-API writes land byte-compatible dirs, null source ⇒
+  * Hive default dir for days/truncate and a REAL bucket for bucket,
+  * murmur3-of-null semantics included) and keep the FULL row in the
+  * data pages. The write requires a CLUSTERED distribution, so a task
   * normally owns whole value tuples and the open-writer map stays at
   * a handful of entries — the shape that scales to thousands of
   * partitions without small-file spray. */
-class IceLitePartitionedWriterFactory(stageDir: String,
-    schema: StructType, partitionCols: Seq[String])
-  extends DataWriterFactory {
-  private val conf = IceLiteDataWriter.writeConf()
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLitePartitionedDataWriter(stageDir,
-      f"part-$partitionId%05d-$taskId.parquet", schema, partitionCols, conf)
-}
-
 class IceLitePartitionedDataWriter(stageDir: String, fileName: String,
-    schema: StructType, partitionCols: Seq[String], conf: Map[String, String])
-  extends DataWriter[InternalRow] {
-  import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-
-  private val partIdx: Array[Int] =
-    partitionCols.map(schema.fieldIndex).toArray
-  private val dataIdx: Array[Int] = schema.fields.indices
-    .filterNot(partIdx.contains(_)).toArray
-  private val dataSchema = StructType(dataIdx.map(schema.fields(_)))
-  private val projected = new org.apache.spark.sql.catalyst
-    .ProjectingInternalRow(dataSchema, dataIdx.toIndexedSeq)
-
-  private def dirOf(row: InternalRow): String =
-    partitionCols.indices.map { j =>
-      val i = partIdx(j)
-      val v =
-        if (row.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(
-          row.get(i, schema.fields(i).dataType).toString)
-      s"${partitionCols(j)}=$v"
-    }.mkString("/")
-
-  private val open =
-    scala.collection.mutable.LinkedHashMap.empty[String, IceLiteDataWriter]
-
-  override def write(row: InternalRow): Unit = {
-    val dir = dirOf(row)
-    val w = open.getOrElseUpdate(dir, {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(stageDir, dir))
-      new IceLiteDataWriter(s"$stageDir/$dir", fileName, dataSchema, conf)
-    })
-    projected.project(row)
-    w.write(projected)
-  }
-
-  override def commit(): WriterCommitMessage =
-    IceLitePartitionedCommitMessage(open.toSeq.flatMap { case (dir, w) =>
-      w.commit() match {
-        case IceLiteCommitMessage(name) if name != null => Some(s"$dir/$name")
-        case _ => None
-      }
-    })
-
-  override def abort(): Unit = open.values.foreach(_.abort())
-  override def close(): Unit = ()
-}
-
-/** d84: batch write for HIDDEN-PARTITION (transform) tables — the
-  * SQL face of d56. Executors derive each row's value dirs with the
-  * same Catalyst ops `IceLite.transformExpr` declares, stage under
-  * `data/<token>/<derived>=<v>/`, and the driver's commit promotes +
-  * CAS-commits in one snapshot (IceLite.commitStagedTransformed). */
-class IceLiteTransformedBatchWrite(ref: TableRef, schema: StructType,
-    spec: Seq[graft.icelite.PartitionField], replace: Boolean)
-  extends BatchWrite {
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-  // capture the SESSION timezone at plan time: the days() dir string
-  // must match what the engine API's date_format would stage
-  private val tz = org.apache.spark.sql.SparkSession.active
-    .sessionState.conf.sessionLocalTimeZone
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    new IceLiteTransformedWriterFactory(
-      ref.dataDir.resolve(token).toString, schema, spec, tz)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    require(org.apache.spark.sql.SparkSession.active.conf
-        .getOption("spark.wap.branch").forall(_.isEmpty),
-      "spark.wap.branch is set — hidden-partition writes cannot be " +
-        "staged to a WAP branch; unset the conf")
-    val files = messages.collect {
-      case IceLitePartitionedCommitMessage(fs) => fs
-    }.flatten.toSeq
-    if (files.nonEmpty || replace) {
-      IceLite.commitStagedTransformed(ref, token, files, replace); ()
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = ref.dataDir.resolve(token)
-    if (java.nio.file.Files.exists(dir))
-      IceLite.listDir(java.nio.file.Files.walk(dir))(_.toSeq)
-        .sortBy(-_.getNameCount)
-        .foreach(p => scala.util.Try(java.nio.file.Files.deleteIfExists(p)))
-  }
-}
-
-class IceLiteTransformedWriterFactory(stageDir: String,
-    schema: StructType, spec: Seq[graft.icelite.PartitionField],
-    timeZoneId: String) extends DataWriterFactory {
-  private val conf = IceLiteDataWriter.writeConf()
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLiteTransformedDataWriter(stageDir,
-      f"part-$partitionId%05d-$taskId.parquet", schema, spec, timeZoneId, conf)
-}
-
-/** Per-task transform writer: evaluates the spec's derived values
-  * with BOUND Catalyst expressions (bucket = pmod(murmur3-seed-42, N),
-  * days = session-tz yyyy-MM-dd, truncate = leading substring —
-  * exactly `IceLite.transformExpr`, so SQL writes and engine-API
-  * writes land byte-compatible dirs, null source ⇒ Hive default dir
-  * for days/truncate and a REAL bucket for bucket, murmur3-of-null
-  * semantics included). The FULL row lands in the data pages — hidden
-  * partitioning keeps source columns in the file; only the derived
-  * names live in the path. */
-class IceLiteTransformedDataWriter(stageDir: String, fileName: String,
-    schema: StructType, spec: Seq[graft.icelite.PartitionField],
-    timeZoneId: String, conf: Map[String, String])
+    schema: StructType, partCols: Seq[String],
+    spec: Seq[graft.icelite.PartitionField], timeZoneId: String,
+    conf: Map[String, String])
   extends DataWriter[InternalRow] {
   import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   import org.apache.spark.sql.catalyst.expressions._
 
-  private val outTypes: Array[DataType] = spec.map { f =>
-    f.transform match {
-      case "bucket" => IntegerType: DataType
-      case _ => StringType: DataType
-    }
-  }.toArray
+  private def bound(c: String): BoundReference = {
+    val i = schema.fieldIndex(c)
+    BoundReference(i, schema.fields(i).dataType, schema.fields(i).nullable)
+  }
 
-  private val proj: Projection = {
-    val exprs: Seq[Expression] = spec.map { f =>
-      val i = schema.fieldIndex(f.sourceCol)
-      val bound = BoundReference(i, schema.fields(i).dataType,
-        schema.fields(i).nullable)
+  /** Each value dir's name and the expression that yields its value. */
+  private val dirs: Seq[(String, Expression)] =
+    partCols.map(c => c -> (bound(c): Expression)) ++ spec.map { f =>
+      val b = bound(f.sourceCol)
       // no analyzer runs over hand-bound expressions, so insert the
       // casts ImplicitCastInputTypes would have (date/string → a
       // timestamp for days; anything → string for truncate) — the
       // DataFrame path in IceLite.transformExpr gets these for free
       def tsFmt(pattern: String) = {
         val ts =
-          if (bound.dataType == TimestampType) bound
-          else Cast(bound, TimestampType, Some(timeZoneId))
+          if (b.dataType == TimestampType) b
+          else Cast(b, TimestampType, Some(timeZoneId))
         DateFormatClass(ts, Literal(pattern), Some(timeZoneId))
       }
-      f.transform match {
-        case "bucket" => Pmod(new Murmur3Hash(Seq(bound)), Literal(f.param))
+      f.name -> (f.transform match {
+        case "bucket" => Pmod(new Murmur3Hash(Seq(b)), Literal(f.param))
         case "days" => tsFmt("yyyy-MM-dd")
         case "years" => tsFmt("yyyy")
         case "months" => tsFmt("yyyy-MM")
         case "hours" => tsFmt("yyyy-MM-dd-HH")
         case "truncate" =>
           val s =
-            if (bound.dataType == StringType) bound
-            else Cast(bound, StringType, Some(timeZoneId))
+            if (b.dataType == StringType) b
+            else Cast(b, StringType, Some(timeZoneId))
           Substring(s, Literal(1), Literal(f.param))
         case t => throw new IllegalArgumentException(
           s"unknown partition transform '$t' " +
             "(bucket | years | months | days | hours | truncate)")
-      }
+      })
     }
-    UnsafeProjection.create(exprs)
-  }
+  private val values: Projection = UnsafeProjection.create(dirs.map(_._2))
+  private val types: Array[DataType] = dirs.map(_._2.dataType).toArray
+
+  private val partIdx = partCols.map(schema.fieldIndex)
+  private val dataIdx = schema.fields.indices.filterNot(partIdx.contains)
+  private val dataSchema = StructType(dataIdx.map(schema.fields(_)))
+  private val projected = new org.apache.spark.sql.catalyst
+    .ProjectingInternalRow(dataSchema, dataIdx)
 
   private def dirOf(row: InternalRow): String = {
-    val d = proj(row)
-    spec.indices.map { j =>
+    val d = values(row)
+    dirs.indices.map { j =>
       val v =
         if (d.isNullAt(j)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(
-          d.get(j, outTypes(j)).toString)
-      s"${spec(j).name}=$v"
+        else ExternalCatalogUtils.escapePathName(d.get(j, types(j)).toString)
+      s"${dirs(j)._1}=$v"
     }.mkString("/")
   }
 
@@ -2041,80 +1896,72 @@ class IceLiteTransformedDataWriter(stageDir: String, fileName: String,
 
   override def write(row: InternalRow): Unit = {
     val dir = dirOf(row)
-    val w = open.getOrElseUpdate(dir, {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(stageDir, dir))
-      new IceLiteDataWriter(s"$stageDir/$dir", fileName, schema, conf)
-    })
-    w.write(row)
+    val w = open.getOrElseUpdate(dir,
+      new IceLiteDataWriter(s"$stageDir/$dir", fileName, dataSchema, conf))
+    projected.project(row)
+    w.write(projected)
   }
 
   override def commit(): WriterCommitMessage =
-    IceLitePartitionedCommitMessage(open.toSeq.flatMap { case (dir, w) =>
-      w.commit() match {
-        case IceLiteCommitMessage(name) if name != null => Some(s"$dir/$name")
-        case _ => None
-      }
+    IceLiteCommitMessage(open.toSeq.flatMap { case (dir, w) =>
+      w.commit() match { case IceLiteCommitMessage(fs) => fs.map(n => s"$dir/$n") }
     })
 
   override def abort(): Unit = open.values.foreach(_.abort())
   override def close(): Unit = ()
 }
 
-/** Streaming sink face of the connector (s15): `df.writeStream
+/** Streaming sink face of the connector (s15, s21): `df.writeStream
   * .format(...)` plans each micro-batch through this write — the
-  * epoch's staged files become ONE CAS append snapshot whose summary
-  * records the epoch id, so data and exactly-once marker commit
-  * atomically (the same contract s07 builds by hand in foreachBatch,
-  * and Iceberg's own Spark streaming sink provides). A REPLAYED epoch
-  * (crash between sink commit and checkpoint advance) is detected
-  * from the summary and its re-staged files are dropped instead of
-  * committed — at-least-once delivery from Spark, exactly-once in the
-  * table. Committed epoch ids are cached per query run and reseeded
-  * from the manifest on restart; single-writer per table, like every
-  * streaming sink. Append-only: complete/truncate modes are refused
-  * at build time. */
-class IceLiteStreamingWrite(ref: TableRef, schema: StructType)
+  * epoch's files, staged through the write's [[IceLiteWriteStage]]
+  * (flat, or the identity value dirs of the Iceberg "fanout" write),
+  * become ONE CAS append snapshot whose summary records the epoch id,
+  * so data and exactly-once marker commit atomically (the same
+  * contract s07 builds by hand in foreachBatch, and Iceberg's own
+  * Spark streaming sink provides). A REPLAYED epoch (crash between
+  * sink commit and checkpoint advance) is detected from the summary
+  * and its re-staged files are dropped instead of committed —
+  * at-least-once delivery from Spark, exactly-once in the table.
+  * Committed epoch ids are cached per query run and reseeded from the
+  * manifest on restart; single-writer per table, like every streaming
+  * sink. Append-only: complete/truncate modes are refused at build
+  * time. */
+class IceLiteStreamingWrite(stage: IceLiteWriteStage, schema: StructType)
   extends StreamingWrite {
   import IceLiteStreamingWrite.EpochKey
-  private val token = java.util.UUID.randomUUID.toString.take(8)
 
   /** Epochs already in the table, seeded lazily from the manifest
     * (the durable record) on first commit of this run. */
   private lazy val committed: java.util.Set[java.lang.Long] = {
     val s = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
-    if (IceLite.tableExists(ref))
-      IceLite.readManifest(ref).snapshots
+    if (IceLite.tableExists(stage.ref))
+      IceLite.readManifest(stage.ref).snapshots
         .flatMap(_.summary.get(EpochKey)).foreach(e => s.add(e.toLong))
     s
   }
 
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    new IceLiteStreamingWriterFactory(ref.dataDir.resolve(token).toString,
-      schema)
-  }
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    stage.factory(schema)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case IceLiteCommitMessage(name) if name != null => s"data/$token/$name"
-    }.toSeq.sorted
-    if (committed.contains(epochId)) {
-      // replayed epoch: the data already landed — drop the restage
-      files.foreach(f => java.nio.file.Files.deleteIfExists(ref.dir.resolve(f)))
-    } else if (files.nonEmpty) {
-      IceLite.commitStaged(ref, files, truncate = false,
-        summary = Map(EpochKey -> epochId.toString))
-      committed.add(epochId)
-    } // empty epoch: nothing to commit, replay is vacuously idempotent
-  }
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    // replayed epoch: the data already landed — drop the restage
+    if (committed.contains(epochId)) stage.drop(messages)
+    else {
+      val files = stage.files(messages)
+      // empty epoch: nothing to commit, replay is vacuously idempotent
+      if (files.nonEmpty) {
+        // an epoch claims no sort layout: only batch writes keep the
+        // table's sortedBy marker (d54)
+        IceLite.applyCommit(stage.ref,
+          stage.request(graft.icelite.PartitionedWriteMode.Append, files)
+            .copy(keepSorted = false),
+          Map(EpochKey -> epochId.toString))
+        committed.add(epochId)
+      }
+    }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case IceLiteCommitMessage(name) if name != null =>
-        java.nio.file.Files.deleteIfExists(ref.dataDir.resolve(token).resolve(name))
-      case _ => ()
-    }
+    stage.drop(messages)
 }
 
 object IceLiteStreamingWrite {
@@ -2123,104 +1970,29 @@ object IceLiteStreamingWrite {
   val EpochKey = "streaming.batch_id"
 }
 
-/** s21: streaming sink face for IDENTITY-PARTITIONED tables — the
-  * Iceberg "fanout" streaming write. Executors route each epoch's
-  * rows into Hive value dirs under `data/<token>/` (the d67 writer);
-  * the driver promotes them into `data/part/` and commits ONE CAS
-  * append snapshot per epoch carrying the exactly-once marker, so a
-  * replayed epoch (crash between sink commit and checkpoint advance)
-  * is detected and its restage dropped — the same contract as the
-  * flat sink, now with the partition layout (and the pruning it
-  * feeds) intact from the first micro-batch. */
-class IceLitePartitionedStreamingWrite(ref: TableRef, schema: StructType,
-    partitionCols: Seq[String]) extends StreamingWrite {
-  import IceLiteStreamingWrite.EpochKey
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-
-  private lazy val committed: java.util.Set[java.lang.Long] = {
-    val s = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
-    if (IceLite.tableExists(ref))
-      IceLite.readManifest(ref).snapshots
-        .flatMap(_.summary.get(EpochKey)).foreach(e => s.add(e.toLong))
-    s
-  }
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-    new IceLitePartitionedStreamingWriterFactory(
-      ref.dataDir.resolve(token).toString, schema, partitionCols)
-  }
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val rels = messages.collect {
-      case IceLitePartitionedCommitMessage(fs) => fs
-    }.flatten.toSeq
-    if (committed.contains(epochId)) {
-      // replayed epoch: the data already landed — drop the restage
-      rels.foreach(r => java.nio.file.Files.deleteIfExists(
-        ref.dataDir.resolve(token).resolve(r)))
-      abort(epochId, Array.empty)
-    } else if (rels.nonEmpty) {
-      IceLite.commitStagedPartitioned(ref, token, rels,
-        graft.icelite.PartitionedWriteMode.Append,
-        summary = Map(EpochKey -> epochId.toString))
-      committed.add(epochId)
-    } // empty epoch: nothing to commit, replay is vacuously idempotent
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = ref.dataDir.resolve(token)
-    if (java.nio.file.Files.exists(dir))
-      IceLite.listDir(java.nio.file.Files.walk(dir))(_.toSeq)
-        .sortBy(-_.getNameCount)
-        .foreach(p => scala.util.Try(java.nio.file.Files.deleteIfExists(p)))
-  }
-}
-
-class IceLitePartitionedStreamingWriterFactory(stageDir: String,
-    schema: StructType, partitionCols: Seq[String])
-  extends StreamingDataWriterFactory {
-  private val conf = IceLiteDataWriter.writeConf()
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stageDir))
-    new IceLitePartitionedDataWriter(stageDir,
-      f"part-e$epochId-$partitionId%05d-$taskId.parquet", schema,
-      partitionCols, conf)
-  }
-}
-
-class IceLiteStreamingWriterFactory(dir: String, schema: StructType)
-  extends StreamingDataWriterFactory {
-  private val conf = IceLiteDataWriter.writeConf()
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    // executor-side dir ensure (same machine in local mode; an object
-    // store at scale, where prefixes need no creation)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    new IceLiteDataWriter(dir,
-      f"part-e$epochId-$partitionId%05d-$taskId.parquet", schema, conf)
-  }
-}
-
 /** The connector's one parquet writer: Spark's own `ParquetWriteSupport`
   * behind parquet-mr's `ParquetWriter.Builder` (the role Iceberg's
   * `SparkParquetWriters` plays), so a SQL, DSv2 or streaming write
   * lands the same parquet types and footer statistics as an engine
   * `df.write.parquet`. `conf` holds the SQL confs the write support
   * reads, captured on the driver ([[IceLiteDataWriter.writeConf]]).
-  * Codec and row-group size are parquet-mr's builder defaults. Empty
-  * partitions commit no file (their would-be part file is deleted),
-  * so small upstream fan-out never litters the table with 0-row files. */
+  * The file is a plain NIO `LocalOutputFile`, not a Hadoop path: the
+  * Hadoop local file system would write a `.crc` beside every staged
+  * file (which no expiry or GC removes) and, without libhadoop, fork
+  * a `chmod` per create. Codec and row-group size are parquet-mr's
+  * builder defaults. Empty partitions commit no file (their would-be
+  * part file is deleted), so small upstream fan-out never litters the
+  * table with 0-row files. */
 class IceLiteDataWriter(dir: String, name: String, schema: StructType,
     conf: Map[String, String]) extends DataWriter[InternalRow] {
-  private val file = new java.io.File(dir, name)
+  private val file = java.nio.file.Paths.get(dir, name)
   private val writer = {
     val hadoopConf = new Configuration(IceLite.hadoopConf)
     conf.foreach { case (k, v) => hadoopConf.set(k, v) }
     org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
       .setSchema(schema, hadoopConf)
-    new IceLiteDataWriter.Builder(new HPath(file.toString))
+    java.nio.file.Files.createDirectories(file.getParent)
+    new IceLiteDataWriter.Builder(new org.apache.parquet.io.LocalOutputFile(file))
       .withConf(hadoopConf).build()
   }
   private var rows = 0L
@@ -2235,16 +2007,18 @@ class IceLiteDataWriter(dir: String, name: String, schema: StructType,
 
   override def commit(): WriterCommitMessage = {
     closeOnce()
-    if (rows == 0L) { file.delete(); IceLiteCommitMessage(null) }
-    else IceLiteCommitMessage(name)
+    if (rows == 0L) { java.nio.file.Files.deleteIfExists(file); IceLiteCommitMessage(Nil) }
+    else IceLiteCommitMessage(Seq(name))
   }
-  override def abort(): Unit = { closeOnce(); file.delete(); () }
+  override def abort(): Unit = {
+    closeOnce(); java.nio.file.Files.deleteIfExists(file); ()
+  }
   override def close(): Unit = closeOnce()
 }
 
 object IceLiteDataWriter {
-  private class Builder(path: HPath) extends org.apache.parquet.hadoop
-      .ParquetWriter.Builder[InternalRow, Builder](path) {
+  private class Builder(file: org.apache.parquet.io.OutputFile)
+      extends org.apache.parquet.hadoop.ParquetWriter.Builder[InternalRow, Builder](file) {
     override def self(): Builder = this
     override def getWriteSupport(conf: Configuration)
         : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =

@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.util.UUID
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{StagedTable, SupportsWrite, TableCapability}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
-import graft.icelite.{IceLite, TableRef}
+import graft.icelite.TableRef
 
 import scala.jdk.CollectionConverters._
 
@@ -13,21 +11,23 @@ import scala.jdk.CollectionConverters._
   * SELECT`. Spark writes the SELECT's rows through this table's write
   * builder FIRST (files land invisibly under `data/<token>/`, or its
   * Hive value dirs for a partitioned target), then calls
-  * [[commitStagedChanges]] — which performs the single CAS manifest
-  * commit that makes the new table visible. A failure at any earlier
-  * point reaches [[abortStagedChanges]] and the old table was never
-  * touched — the atomicity Iceberg's catalog gives REPLACE TABLE, vs
-  * the non-atomic drop-then-create fallback. */
+  * [[commitStagedChanges]] — which promotes the staged files and hands
+  * them to `publish`, the single commit that makes the new table
+  * visible (the owning catalog's CAS `replaceTableStaged`, or the REST
+  * attachment's create-staged POST). A failure at any earlier point
+  * reaches [[abortStagedChanges]] and the old table was never touched
+  * — the atomicity Iceberg's catalog gives REPLACE TABLE, vs the
+  * non-atomic drop-then-create fallback. */
 class IceLiteStagedTable(ref: TableRef, declared: StructType,
-    partitionCols: Seq[String], mustNotExist: Boolean, mustExist: Boolean,
-    transformSpec: Seq[graft.icelite.PartitionField] = Nil,
-    properties: Map[String, String] = Map.empty)
+    partitionCols: Seq[String], transformSpec: Seq[graft.icelite.PartitionField],
+    publish: Seq[String] => Unit)
   extends StagedTable with SupportsWrite {
   require(partitionCols.isEmpty || transformSpec.isEmpty,
     "a staged table has either an identity layout or a transform spec")
 
-  private val token = UUID.randomUUID.toString.take(8)
-  @volatile private var staged: Seq[String] = Nil
+  private val stage = new IceLiteWriteStage(ref, partitionCols, transformSpec,
+    sortCol = None)
+  @volatile private var staged: Array[WriterCommitMessage] = Array.empty
 
   override def name(): String = s"icelite.${ref.namespace}.${ref.name} (staged)"
   override def schema(): StructType = declared
@@ -70,9 +70,6 @@ class IceLiteStagedTable(ref: TableRef, declared: StructType,
       require(!querySchema.fieldNames.contains(f.name),
         s"derived partition name '${f.name}' collides with a query column")
     }
-    // capture the SESSION timezone at plan time for days() dirs
-    val tz = org.apache.spark.sql.SparkSession.active
-      .sessionState.conf.sessionLocalTimeZone
     new WriteBuilder
       with org.apache.spark.sql.connector.write.SupportsTruncate {
       // the staged table is empty by definition — CTAS "overwrite"
@@ -81,59 +78,20 @@ class IceLiteStagedTable(ref: TableRef, declared: StructType,
       override def build(): Write = new Write with BatchWrite {
         override def toBatch: BatchWrite = this
         override def description(): String = s"IceLiteStagedWrite ${ref.name}"
-        override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-          java.nio.file.Files.createDirectories(ref.dataDir.resolve(token))
-          if (transformSpec.nonEmpty)
-            // d84: hidden-partition CTAS — derive value dirs per row
-            new IceLiteTransformedWriterFactory(
-              ref.dataDir.resolve(token).toString, querySchema,
-              transformSpec, tz)
-          else if (partitionCols.nonEmpty)
-            new IceLitePartitionedWriterFactory(
-              ref.dataDir.resolve(token).toString, querySchema, partitionCols)
-          else
-            new IceLiteWriterFactory(ref.dataDir.resolve(token).toString,
-              querySchema)
-        }
-        // records the staged set; the MANIFEST commit waits for
-        // commitStagedChanges so the whole statement stays atomic
+        override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+          stage.factory(querySchema)
+        // records the staged set; promotion and the MANIFEST commit
+        // wait for commitStagedChanges so the whole statement stays
+        // atomic
         override def commit(messages: Array[WriterCommitMessage]): Unit =
-          staged =
-            if (partitionCols.nonEmpty || transformSpec.nonEmpty)
-              messages.collect {
-                case IceLitePartitionedCommitMessage(fs) => fs
-              }.flatten.toSeq
-            else messages.collect {
-              case IceLiteCommitMessage(n) if n != null => n
-            }.toSeq.sorted
+          staged = messages
         override def abort(messages: Array[WriterCommitMessage]): Unit =
           abortStagedChanges()
       }
     }
   }
 
-  override def commitStagedChanges(): Unit = {
-    val files =
-      if (partitionCols.nonEmpty || transformSpec.nonEmpty)
-        IceLite.promoteStagedPartitioned(ref, token, staged)
-      else staged.map(n => s"data/$token/$n")
-    commitTable(files)
-  }
+  override def commitStagedChanges(): Unit = publish(stage.files(staged))
 
-  /** The atomic publish of the staged table — ONE manifest commit.
-    * The REST attachment overrides this to route the same commit
-    * through the catalog service (staging stays data-plane). */
-  protected def commitTable(files: Seq[String]): Unit = {
-    IceLite.replaceTableStaged(ref, files, partitionCols,
-      declared.toDDL, mustNotExist, mustExist, transformSpec, properties)
-    ()
-  }
-
-  override def abortStagedChanges(): Unit = {
-    val dir = ref.dataDir.resolve(token)
-    if (java.nio.file.Files.exists(dir))
-      IceLite.listDir(java.nio.file.Files.walk(dir))(_.toSeq)
-        .sortBy(-_.getNameCount)
-        .foreach(p => scala.util.Try(java.nio.file.Files.deleteIfExists(p)))
-  }
+  override def abortStagedChanges(): Unit = stage.abort()
 }

@@ -58,35 +58,6 @@ import graft.icelite.{IceLite, TableRef}
   */
 private[rest] final case class CommitStagedReq(files: Seq[String])
 
-/** The generic DML commit: a remote engine has staged (and, for
-  * partitioned layouts, promoted) its output files in the SHARED
-  * warehouse; this one POST turns them into ONE CAS snapshot. The
-  * reference's catalog serves every engine for every operation the
-  * same way (dbt-trino CTAS + incremental MERGE through the REST
-  * catalog — README.md:79-98); `operation` selects the commit shape:
-  *  - `append` / `overwrite`            flat tables (commitStaged)
-  *  - `append-partitioned` /
-  *    `overwrite-partitioned`           Hive-layout tables; `mode` is
-  *                                      all|dynamic|static (+`eq` for
-  *                                      static partition filters)
-  *  - `append-transformed` /
-  *    `overwrite-transformed`           hidden-partition (d56) tables:
-  *                                      promoted derived-dir files,
-  *                                      validated against the spec
-  *  - `replace`                         row-level rewrite: swap
-  *                                      `removed` for `added`
-  *                                      (`opName` names the statement)
-  */
-private[rest] final case class CommitReq(
-    operation: String,
-    added: Seq[String] = Nil,
-    removed: Seq[String] = Nil,
-    mode: Option[String] = None,
-    eq: Map[String, String] = Map.empty,
-    opName: Option[String] = None,
-    keepSorted: Boolean = false,
-    expectedVersion: Option[Long] = None)
-
 /** CTAS/RTAS commit: the staged files become the table's ONLY files
   * in one CAS commit (IceLite.replaceTableStaged semantics).
   * `partitionSpec` carries a hidden-partition (d56 transform) layout —
@@ -253,65 +224,22 @@ class CatalogServer(warehouse: String, port: Int = 0) {
             send(ex, 200, Serialization.write(Map(
               "snapshotId" -> snap.id, "rowCount" -> snap.rowCount)))
           }
-        // the FULL DML commit face (d76): overwrite, partitioned
-        // modes, and row-level rewrites land through the same
-        // one-POST CAS shape as appends — the metadata authority
-        // never leaves this service, data bytes never cross it
+        // the FULL DML commit face (d76): the client POSTs the same
+        // CommitReq the owning catalog applies in-process, and this
+        // service applies it with the same applier once its paths
+        // check out — the metadata authority never leaves this
+        // service, data bytes never cross it
         case ("POST", Seq("namespaces", ns, "tables", t, "commit")) =>
           val ref = TableRef(warehouse, ns, t)
           if (!IceLite.tableExists(ref))
             send(ex, 404, s"""{"error":"no table $ns.$t"}""")
           else {
-            val req = Serialization.read[CommitReq](readBody(ex))
+            val req = Serialization.read[graft.icelite.CommitReq](readBody(ex))
             (req.added ++ req.removed).foreach(f => require(
               f.startsWith("data/") && !f.contains(".."),
               s"commit paths must be table-relative data/ files, got $f"))
-            import graft.icelite.PartitionedWriteMode._
-            val via = Map("committed-via" -> "rest")
-            val snap = req.operation match {
-              case "append" =>
-                require(req.added.nonEmpty, "append needs staged files")
-                IceLite.commitStaged(ref, req.added, truncate = false,
-                  summary = via, keepSorted = req.keepSorted)
-              case "overwrite" =>
-                IceLite.commitStaged(ref, req.added, truncate = true,
-                  summary = via, keepSorted = req.keepSorted)
-              case "append-partitioned" =>
-                require(req.added.nonEmpty, "append needs staged files")
-                IceLite.commitPromotedPartitioned(ref, req.added, Append, via)
-              case "overwrite-partitioned" =>
-                val mode = req.mode match {
-                  case Some("all") => ReplaceAll
-                  case Some("dynamic") => ReplaceDynamic
-                  case Some("static") => ReplaceWhere(req.eq)
-                  case other => throw new IllegalArgumentException(
-                    s"overwrite-partitioned mode must be all|dynamic|static, got $other")
-                }
-                IceLite.commitPromotedPartitioned(ref, req.added, mode, via)
-              case "append-transformed" =>
-                require(req.added.nonEmpty, "append needs staged files")
-                IceLite.commitPromotedTransformed(ref, req.added,
-                  replace = false)
-              case "overwrite-transformed" =>
-                IceLite.commitPromotedTransformed(ref, req.added,
-                  replace = true)
-              case "replace" =>
-                IceLite.commitReplace(ref, req.removed.toSet, req.added,
-                  req.opName.getOrElse("replace"))
-              // d80: remote compaction — conditioned on the exact
-              // manifest VERSION the client compacted against; any
-              // concurrent commit (including a files-unchanged
-              // eq-delete) answers 409, and only the client can
-              // recompute (the staged bytes are a function of the base)
-              case "compact" =>
-                IceLite.commitCompactStaged(ref, req.added,
-                  req.expectedVersion.getOrElse(
-                    throw new IllegalArgumentException(
-                      "compact needs expectedVersion")),
-                  req.keepSorted)
-              case other => throw new IllegalArgumentException(
-                s"unknown commit operation '$other'")
-            }
+            val snap = IceLite.applyCommit(ref, req,
+              Map("committed-via" -> "rest"))
             send(ex, 200, Serialization.write(Map(
               "snapshotId" -> snap.id, "rowCount" -> snap.rowCount)))
           }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, Supp
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.icelite.{IceLite, TableRef}
+import graft.icelite.{CommitReq, IceLite, TableRef}
 import graft.sources.{IceLiteSource, IceLiteTable}
 
 /** The REST-ATTACHED catalog — how a second engine (or a second
@@ -670,10 +670,15 @@ class IceLiteRestCatalog extends TableCatalog with SupportsNamespaces
       else graft.sources.IceLiteCatalog.partitionedShape(schema, partitions)
     // stage into the shared warehouse directly: the table dir may not
     // exist yet, so there is no spool to mount through
-    new RestStagedTable(TableRef(warehouse, ident.namespace.head, ident.name),
-      ordered, cols, mustNotExist, mustExist,
-      uri + tablePath(ident) + "/create-staged", http, tSpec.getOrElse(Nil),
-      graft.sources.IceLiteCatalog.tableProperties(properties))
+    val spec = tSpec.getOrElse(Nil)
+    val props = graft.sources.IceLiteCatalog.tableProperties(properties)
+    new graft.sources.IceLiteStagedTable(
+      TableRef(warehouse, ident.namespace.head, ident.name), ordered, cols,
+      spec, files => {
+        RestCommitClient.postCommit(http, uri + tablePath(ident) + "/create-staged",
+          Serialization.write(CreateStagedReq(files, cols, ordered.toDDL,
+            mustNotExist, mustExist, spec, props))); ()
+      })
   }
 
   override def stageCreate(ident: Identifier,
@@ -727,23 +732,24 @@ private[rest] object RestCommitClient {
 /** The face a REST attachment serves: the full IceLite scan machinery
   * (manifest pruning, columnar read, MoR delete folds, partition
   * discovery) over the spooled snapshot, plus the full batch DML
-  * surface through the REST commit protocol (d76) — executors stage
-  * parquet into the SHARED warehouse (the spool's data/ mount),
-  * partitioned layouts promote into their Hive value dirs
-  * client-side (data-plane moves; nothing is visible until commit),
-  * then ONE POST asks the catalog service to CAS-commit the change
-  * (Iceberg's REST-commit division of labor: data never proxies
-  * through the catalog, the metadata authority never leaves it).
-  * Row-level DELETE/UPDATE/MERGE run the same group-based rewrite as
-  * the owning catalog — scan and staging client-side, the
-  * removed-for-added swap server-side, concurrent-rewrite races
-  * failing loudly. Streaming still refuses: the spool is a
-  * point-in-time snapshot. */
+  * surface of the owning catalog's table — the same writes, stages and
+  * commit requests. Executors stage parquet into the SHARED warehouse
+  * (the spool's data/ mount), value-dir layouts promote client-side
+  * (data-plane moves; nothing is visible until commit), and the one
+  * difference is the transport: each write's [[CommitReq]] is POSTed,
+  * and the catalog service CAS-commits it (Iceberg's REST-commit
+  * division of labor: data never proxies through the catalog, the
+  * metadata authority never leaves it). Row-level DELETE/UPDATE/MERGE
+  * run the group-based copy-on-write rewrite — scan and staging
+  * client-side, the removed-for-added swap server-side, concurrent-
+  * rewrite races failing loudly. Streaming writes refuse: the spool
+  * is a point-in-time snapshot. */
 private[rest] class RestReadTable(spool: TableRef, tableSchema: StructType,
     catalogName: String, ident: Identifier, uri: String,
     http: java.net.http.HttpClient, respool: () => Unit = () => ())
   extends IceLiteTable(spool, tableSchema) {
   import org.apache.spark.sql.connector.catalog.TableCapability
+  private implicit val formats: Formats = Serialization.formats(NoTypeHints)
 
   override def name(): String = s"$catalogName.${ident.namespace.head}.${ident.name}"
 
@@ -769,33 +775,19 @@ private[rest] class RestReadTable(spool: TableRef, tableSchema: StructType,
       None, changelog = options.getBoolean("changelog", false),
       streamRefresh = respool)
 
+  override protected[sources] def remoteCommit: Option[CommitReq => Unit] =
+    Some(req => {
+      RestCommitClient.postCommit(http, commitUrl, Serialization.write(req)); ()
+    })
+
   private def refuse(op: String): Nothing =
     throw new UnsupportedOperationException(
       s"$op refused: ${name()} is a REST attachment; run this through " +
         "the warehouse's owning catalog")
 
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(org.apache.spark.sql.SparkSession.active.conf
-        .getOption("spark.wap.branch").forall(_.isEmpty),
-      "spark.wap.branch is set — branch staging commits through the " +
-        "owning catalog, not the REST face")
-    new RestWriteBuilder(spool, info, commitUrl, http)
-  }
-
-  override def newRowLevelOperationBuilder(
-      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo): org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    val snap = IceLiteSource.resolveSnap(spool, None)
-    require(snap.eqDeletes.isEmpty,
-      s"${name()} has live equality-delete sidecars — compact() " +
-        "before a row-level DELETE/UPDATE/MERGE")
-    () => new RestRowLevelOperation(spool, tableSchema, info.command,
-      commitUrl, http)
-  }
-
-  // pushed-filter DELETE declines: the row-level rewrite path above
-  // covers DELETE with full semantics; metadata-only partition drops
-  // stay an owning-catalog operation
+  // pushed-filter DELETE declines: the row-level rewrite path covers
+  // DELETE with full semantics; metadata-only partition drops stay an
+  // owning-catalog operation
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = false
   override def deleteWhere(
@@ -805,314 +797,4 @@ private[rest] class RestReadTable(spool: TableRef, tableSchema: StructType,
       properties: JMap[String, String]): Unit = refuse("ADD PARTITION")
   override def dropPartition(ident: org.apache.spark.sql.catalyst.InternalRow): Boolean =
     refuse("DROP PARTITION")
-}
-
-/** Write builder of the REST face — the same statement surface as the
-  * owning catalog's IceLiteWriteBuilder (truncate, static partition
-  * overwrite, dynamic overwrite), with the commit re-routed through
-  * the catalog service. Distribution/ordering requirements are
-  * identical: partitioned targets cluster rows by partition value
-  * (one file per task × partition, d67), sorted targets
-  * range-partition and sort on the table's sort key (d54). */
-private[rest] class RestWriteBuilder(spool: TableRef,
-    info: org.apache.spark.sql.connector.write.LogicalWriteInfo,
-    commitUrl: String, http: java.net.http.HttpClient)
-  extends org.apache.spark.sql.connector.write.WriteBuilder
-  with org.apache.spark.sql.connector.write.SupportsTruncate
-  with org.apache.spark.sql.connector.write.SupportsOverwrite
-  with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
-  import org.apache.spark.sql.connector.write.{Write, WriteBuilder, BatchWrite}
-  import org.apache.spark.sql.sources.{AlwaysTrue, EqualNullSafe, EqualTo, Filter}
-
-  private var replace = false
-  private var overwriteEq: Option[Map[String, String]] = None
-  private var dynamic = false
-
-  override def truncate(): WriteBuilder = { replace = true; this }
-
-  override def overwrite(filters: Array[Filter]): WriteBuilder = {
-    if (filters.forall(_.isInstanceOf[AlwaysTrue])) { replace = true; this }
-    else {
-      val eq = filters.toSeq.map {
-        case EqualTo(c, v) => c -> String.valueOf(v)
-        case EqualNullSafe(c, v) if v != null => c -> String.valueOf(v)
-        case other => throw new UnsupportedOperationException(
-          s"icelite INSERT OVERWRITE supports partition equality " +
-            s"filters only, got $other")
-      }.toMap
-      overwriteEq = Some(eq)
-      this
-    }
-  }
-
-  override def overwriteDynamicPartitions(): WriteBuilder = {
-    dynamic = true; this
-  }
-
-  override def build(): Write = new Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
-
-    private val snap = IceLiteSource.resolveSnap(spool, None)
-    // d83: the spooled POINTER carries a pending spec evolution too —
-    // remote writes must land the DECLARED layout, like local ones
-    private val partCols: Seq[String] =
-      graft.icelite.IceLite.readManifest(spool).writeLayoutCols
-    // d84 over the wire: hidden-partition targets derive value dirs
-    // client-side (staging into the shared mount) — the DECLARED spec
-    // when a d85 evolution is pending, like the local SQL face
-    private val transformSpec: Seq[graft.icelite.PartitionField] =
-      graft.icelite.IceLite.readManifest(spool).writeLayoutSpec
-    private val sortCol: Option[String] = snap.sortedBy
-
-    locally {
-      if (transformSpec.nonEmpty) {
-        require(overwriteEq.isEmpty && !dynamic,
-          s"${spool.name} is hidden-partitioned — a PARTITION clause " +
-            "names derived values the transforms exist to hide; " +
-            "INSERT INTO appends, plain INSERT OVERWRITE truncates")
-        transformSpec.foreach(f => require(
-          !info.schema().fieldNames.contains(f.name),
-          s"derived partition name '${f.name}' collides with a " +
-            "written column"))
-      }
-      require(partCols.nonEmpty || (overwriteEq.isEmpty && !dynamic),
-        s"${spool.name} is not partitioned — partition overwrite does " +
-          "not apply (plain INSERT OVERWRITE truncates)")
-    }
-
-    override def requiredDistribution(): Distribution =
-      if (transformSpec.nonEmpty)
-        Distributions.clustered(transformSpec.map(_.sourceCol).distinct
-          .map(c => Expressions.identity(c): org.apache.spark.sql
-            .connector.expressions.Expression).toArray)
-      else graft.sources.IceLiteWriteLayout.distributionFor(partCols, sortCol)
-    override def requiredOrdering(): Array[SortOrder] =
-      if (transformSpec.nonEmpty) Array.empty
-      else graft.sources.IceLiteWriteLayout.orderingFor(partCols, sortCol)
-
-    override def toBatch: BatchWrite =
-      if (transformSpec.nonEmpty)
-        new RestTransformedBatchWrite(spool, info.schema(), transformSpec,
-          replace, commitUrl, http)
-      else if (partCols.nonEmpty) {
-        val (modeStr, eq) =
-          if (dynamic) ("dynamic", Map.empty[String, String])
-          else overwriteEq match {
-            case Some(m) => ("static", m)
-            case None => (if (replace) "all" else "append", Map.empty[String, String])
-          }
-        new RestPartitionedBatchWrite(spool, info.schema(), partCols,
-          modeStr, eq, commitUrl, http)
-      } else new RestBatchWrite(spool, info.schema(), commitUrl, http,
-        replace, keepSorted = sortCol.isDefined)
-
-    override def description(): String =
-      s"RestWrite ${spool.name} " +
-        (if (dynamic) "overwrite-dynamic"
-         else if (overwriteEq.isDefined) s"overwrite-${overwriteEq.get}"
-         else if (replace) "overwrite" else "append")
-  }
-}
-
-/** Flat-table batch write over the REST protocol: executors stage one
-  * parquet file per non-empty input partition into the SHARED
-  * warehouse through the spool's data/ mount (pre-commit files are
-  * invisible and orphan-GC-able); the driver's commit is ONE POST,
-  * which CAS-commits the staged set server-side with footer-derived
-  * stats — append or truncate. Concurrent remote and local writers
-  * rebase through the same CAS. */
-private[rest] class RestBatchWrite(spool: graft.icelite.TableRef,
-    schema: StructType, commitUrl: String, http: java.net.http.HttpClient,
-    truncate: Boolean = false, keepSorted: Boolean = false)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  private implicit val formats: org.json4s.Formats =
-    Serialization.formats(org.json4s.NoTypeHints)
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(spool.dataDir.resolve(token))
-    new graft.sources.IceLiteWriterFactory(
-      spool.dataDir.resolve(token).toString, schema)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case graft.sources.IceLiteCommitMessage(name) if name != null =>
-        s"data/$token/$name"
-    }.toSeq.sorted
-    if (files.isEmpty && !truncate) return // empty append: no snapshot
-    RestCommitClient.postCommit(http, commitUrl, Serialization.write(CommitReq(
-      operation = if (truncate) "overwrite" else "append",
-      added = files, keepSorted = keepSorted)))
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = spool.dataDir.resolve(token)
-    if (Files.exists(dir)) {
-      graft.icelite.IceLite.listDir(Files.list(dir))(_.toSeq)
-        .foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(dir)
-    }
-  }
-}
-
-/** Partitioned batch write over the REST protocol (d76): executors
-  * stage Hive-layout files under the shared `data/<token>/`, the
-  * driver PROMOTES them into `data/part/` value dirs (renames within
-  * shared storage — data-plane, invisible until commit) and ONE POST
-  * resolves the overwrite mode server-side
-  * (IceLite.commitPromotedPartitioned): append, replace-all,
-  * static-partition replace, or dynamic replace. */
-private[rest] class RestPartitionedBatchWrite(spool: graft.icelite.TableRef,
-    schema: StructType, partitionCols: Seq[String], mode: String,
-    eq: Map[String, String], commitUrl: String,
-    http: java.net.http.HttpClient)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  private implicit val formats: org.json4s.Formats =
-    Serialization.formats(org.json4s.NoTypeHints)
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(spool.dataDir.resolve(token))
-    new graft.sources.IceLitePartitionedWriterFactory(
-      spool.dataDir.resolve(token).toString, schema, partitionCols)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.collect {
-      case graft.sources.IceLitePartitionedCommitMessage(fs) => fs
-    }.flatten.toSeq
-    if (staged.isEmpty && mode == "append") return
-    val moved = IceLite.promoteStagedPartitioned(spool, token, staged)
-    val (op, m) =
-      if (mode == "append") ("append-partitioned", None)
-      else ("overwrite-partitioned", Some(mode))
-    RestCommitClient.postCommit(http, commitUrl, Serialization.write(CommitReq(
-      operation = op, added = moved, mode = m, eq = eq)))
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = spool.dataDir.resolve(token)
-    if (Files.exists(dir))
-      graft.icelite.IceLite.listDir(Files.walk(dir))(_.toSeq)
-        .sortBy(-_.getNameCount)
-        .foreach(p => scala.util.Try(Files.deleteIfExists(p)))
-  }
-}
-
-/** Hidden-partition batch write over the REST protocol (d84 over the
-  * wire): executors derive each row's value dirs with the same bound
-  * Catalyst ops the local SQL face uses and stage under the shared
-  * `data/<token>/<derived>=<v>/`; the driver promotes client-side
-  * (renames within shared storage) and ONE POST CAS-commits the
-  * promoted set server-side, validated against the table's spec. */
-private[rest] class RestTransformedBatchWrite(spool: graft.icelite.TableRef,
-    schema: StructType, spec: Seq[graft.icelite.PartitionField],
-    replace: Boolean, commitUrl: String, http: java.net.http.HttpClient)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  private implicit val formats: org.json4s.Formats =
-    Serialization.formats(org.json4s.NoTypeHints)
-  private val token = java.util.UUID.randomUUID.toString.take(8)
-  private val tz = org.apache.spark.sql.SparkSession.active
-    .sessionState.conf.sessionLocalTimeZone
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(spool.dataDir.resolve(token))
-    new graft.sources.IceLiteTransformedWriterFactory(
-      spool.dataDir.resolve(token).toString, schema, spec, tz)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.collect {
-      case graft.sources.IceLitePartitionedCommitMessage(fs) => fs
-    }.flatten.toSeq
-    if (staged.isEmpty && !replace) return // empty append: no snapshot
-    val moved = IceLite.promoteStagedPartitioned(spool, token, staged)
-    RestCommitClient.postCommit(http, commitUrl, Serialization.write(CommitReq(
-      operation = if (replace) "overwrite-transformed" else "append-transformed",
-      added = moved)))
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = spool.dataDir.resolve(token)
-    if (Files.exists(dir))
-      graft.icelite.IceLite.listDir(Files.walk(dir))(_.toSeq)
-        .sortBy(-_.getNameCount)
-        .foreach(p => scala.util.Try(Files.deleteIfExists(p)))
-  }
-}
-
-/** One SQL row-level statement (UPDATE / MERGE / rewritten DELETE)
-  * against the REST attachment: the group-based scan half is the
-  * owning catalog's exactly (runtime-filtered candidate files read
-  * through the spool + shared mounts); the write half stages and
-  * promotes rewritten rows client-side, then routes the
-  * removed-for-added swap through the catalog service's commit
-  * protocol — where a concurrent rewrite of a scanned file fails the
-  * statement loudly and concurrent appends rebase, same as local. */
-private[rest] class RestRowLevelOperation(spool: TableRef,
-    tableSchema: StructType,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-    commitUrl: String, http: java.net.http.HttpClient)
-  extends graft.sources.IceLiteRowLevelOperation(spool, tableSchema, cmd) {
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new RestReplaceWrite(spool, info.schema(),
-          RestRowLevelOperation.this, cmd.toString.toLowerCase,
-          commitUrl, http)
-    }
-}
-
-/** The write half of a REST row-level rewrite: staging and promotion
-  * are inherited (they run against the spool's shared mounts — pure
-  * data-plane); only the single metadata commit differs, posting
-  * {removed, added, operation} for the server-side CAS swap. */
-private[rest] class RestReplaceWrite(spool: TableRef, schema: StructType,
-    op: graft.sources.IceLiteRowLevelOperation, opName: String,
-    commitUrl: String, http: java.net.http.HttpClient)
-  extends graft.sources.IceLiteReplaceWrite(spool, schema, op, opName) {
-  private implicit val formats: org.json4s.Formats =
-    Serialization.formats(org.json4s.NoTypeHints)
-
-  override protected def commitReplaced(removed: Set[String],
-      staged: Seq[String]): Unit = {
-    RestCommitClient.postCommit(http, commitUrl, Serialization.write(CommitReq(
-      operation = "replace", added = staged,
-      removed = removed.toSeq.sorted, opName = Some(opName))))
-    ()
-  }
-}
-
-/** Atomic CTAS/RTAS over the wire: the staged write half is inherited
-  * (files land invisibly under the shared `data/<token>/`, promoted
-  * to Hive value dirs for partitioned targets); the publish is ONE
-  * POST to create-staged, which runs the same
-  * create-or-replace-table CAS the owning catalog uses (d70). */
-private[rest] class RestStagedTable(ref: TableRef, declared: StructType,
-    partitionCols: Seq[String], mustNotExist: Boolean, mustExist: Boolean,
-    createUrl: String, http: java.net.http.HttpClient,
-    transformSpec: Seq[graft.icelite.PartitionField] = Nil,
-    properties: Map[String, String] = Map.empty)
-  extends graft.sources.IceLiteStagedTable(ref, declared, partitionCols,
-    mustNotExist, mustExist, transformSpec, properties) {
-  private implicit val formats: org.json4s.Formats =
-    Serialization.formats(org.json4s.NoTypeHints)
-
-  override protected def commitTable(files: Seq[String]): Unit = {
-    RestCommitClient.postCommit(http, createUrl, Serialization.write(
-      CreateStagedReq(files, partitionCols, declared.toDDL,
-        mustNotExist, mustExist, transformSpec, properties)))
-    ()
-  }
 }

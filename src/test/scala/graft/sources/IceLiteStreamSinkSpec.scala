@@ -31,7 +31,7 @@ class IceLiteStreamSinkSpec extends AnyFunSuite {
     IceLite.createOrReplace(ref, Seq((0L, 0.0)).toDF("k", "v"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", DoubleType)))
-    val sw = new IceLiteStreamingWrite(ref, schema)
+    val sw = new IceLiteStreamingWrite(IceLiteWriteStage(ref), schema)
     val factory = sw.createStreamingWriterFactory(writeInfo(1))
     // task ids advance across attempts (Spark never reuses one within
     // a context), so a replayed epoch stages under a fresh file name
@@ -70,7 +70,7 @@ class IceLiteStreamSinkSpec extends AnyFunSuite {
       Seq((0L, "z")).toDF("k", "p"), "p")
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("p", StringType)))
-    val sw = new IceLitePartitionedStreamingWrite(ref, schema, Seq("p"))
+    val sw = new IceLiteStreamingWrite(IceLiteWriteStage(ref), schema)
     val factory = sw.createStreamingWriterFactory(writeInfo(1))
     var nextTask = 0L
     def stage(epoch: Long, rows: Seq[(Long, String)]) = {

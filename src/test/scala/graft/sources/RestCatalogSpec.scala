@@ -358,6 +358,23 @@ class RestCatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("every REST commit records committed-via=rest: transformed INSERT, copy-on-write UPDATE") {
+    withServer { (wh, cat, _) =>
+      spark.sql(s"""CREATE TABLE $cat.src.via (k BIGINT, v DOUBLE)
+                    PARTITIONED BY (bucket(4, k))""")
+      val ref = TableRef(wh, "src", "via")
+      def via(label: String): Unit =
+        assert(IceLite.readManifest(ref).current.summary
+          .get("committed-via").contains("rest"), label)
+      spark.sql(s"INSERT INTO $cat.src.via VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
+      assert(IceLite.readManifest(ref).current.operation == "append")
+      via("transformed INSERT")
+      spark.sql(s"UPDATE $cat.src.via SET v = v * 10 WHERE k = 2")
+      assert(IceLite.readManifest(ref).current.operation == "update")
+      via("copy-on-write UPDATE")
+    }
+  }
+
   test("atomic CTAS / REPLACE TABLE and DROP TABLE over REST (d76)") {
     withServer { (wh, cat, _) =>
       val src = TableRef(wh, "src", "base")
